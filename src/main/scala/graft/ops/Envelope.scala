@@ -111,17 +111,20 @@ object Envelope {
     * Determinism is what makes duplicate delivery idempotent (§3.1 step 9).
     */
   def withObjectKeys(df: DataFrame): DataFrame =
-    df.withColumn("s3IncomingKey",
+    // one projection: each Dataset step is analyzed eagerly, and this runs
+    // on every pipeline micro-batch
+    df.withColumns(scala.collection.immutable.ListMap(
+      "s3IncomingKey" ->
         concat_ws("/", lit("incoming"), col("processingDate"),
-                  col("correlationId"), col("fileName")))
-      .withColumn("s3ProcessedKey",
+                  col("correlationId"), col("fileName")),
+      "s3ProcessedKey" ->
         concat(concat_ws("/", lit("processed"), col("processingDate"),
                          col("correlationId"), col("fileName")),
-               lit(".json")))
-      .withColumn("s3FailedKey",
+               lit(".json")),
+      "s3FailedKey" ->
         concat(concat_ws("/", lit("failed"), col("processingDate"),
                          col("correlationId"), col("fileName")),
-               lit(".failure.json")))
+               lit(".failure.json"))))
 
   /** P4: Docling conversion request (file-pipeline.yaml:124-136) — built
     * with to_json(struct(...)) instead of string interpolation.

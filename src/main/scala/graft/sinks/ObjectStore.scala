@@ -1,95 +1,86 @@
 package graft.sinks
 
-import org.apache.hadoop.conf.Configuration
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
 
 /** Object-store sinks/sources (SURVEY.md §2A K1–K3, S4): exact
   * deterministic keys under a base URI — `file://` in tests, `s3a://` in
   * production; the Hadoop FileSystem API abstracts both. Exact keys (not
   * Spark's part-file naming) are load-bearing: they make at-least-once
   * redelivery idempotent, the same property the reference depends on
-  * (SURVEY.md §3.1 step 9).
+  * (SURVEY.md §3.1 step 9). Writes go through one per-partition writer,
+  * [[writeObjects]], so a micro-batch stores its results, reports and
+  * notifications in the same action that converts them; the puts run
+  * with the session's Hadoop conf ([[Bucket]]).
   */
 object ObjectStore {
 
+  /** A base URI (the bucket) with the session's Hadoop conf — the
+    * SparkContext's `spark.hadoop.*` settings plus the session's own (s3a
+    * endpoint, credentials) — captured once on the driver and broadcast:
+    * about 110 KB serialized, which every task would otherwise
+    * deserialize again. Each task opens one FileSystem handle from it,
+    * on its first put; every put of that task shares the handle.
+    */
+  final class Bucket private (val baseDir: String,
+                              conf: Broadcast[SerializableConfiguration])
+      extends Serializable {
+    @transient private lazy val fs: FileSystem = {
+      val fs = FileSystem.get(new Path(baseDir).toUri, conf.value.value)
+      // local-FS checksum shadows (.name.crc) would pollute the exact-key
+      // layout; object stores (s3a) don't have them anyway.
+      fs.setWriteChecksum(false)
+      fs
+    }
+
+    def put(key: String, body: Array[Byte]): Unit = {
+      val out = fs.create(new Path(s"$baseDir/$key"), true)
+      try out.write(body) finally out.close()
+    }
+  }
+
+  object Bucket {
+    def apply(spark: SparkSession, baseDir: String): Bucket =
+      new Bucket(baseDir, spark.sparkContext.broadcast(new SerializableConfiguration(
+        org.apache.spark.sql.graft.bridge.hadoopConf(spark))))
+  }
+
+  /** The object writer: `(key, body, report)` rows put at their exact
+    * keys, per partition, where the rows already are (no shuffle). A
+    * failed object put fails the action. A failed report put (K3,
+    * `failed/…`) is swallowed so a broken report store can't lose the DLQ
+    * record — the reference does the same (dlq-handler.yaml:124) — and
+    * each written report bumps the DLQ counter (K5,
+    * dlq-handler.yaml:129-132).
+    */
+  def writeObjects(objects: DataFrame, bucket: Bucket): Unit = {
+    val counter = PipelineMetrics.dlqCounter(objects.sparkSession)
+    val Seq(k, b, r) = Seq("key", "body", "report").map(objects.schema.fieldIndex)
+    objects.foreachPartition { (it: Iterator[Row]) =>
+      it.foreach { row =>
+        val (key, body) = (row.getString(k), row.getAs[Array[Byte]](b))
+        if (!row.getBoolean(r)) bucket.put(key, body)
+        else try { bucket.put(key, body); counter.add(1L) }
+        catch { case NonFatal(_) => () }
+      }
+    }
+  }
+
   /** K1: raw payload bytes to `incoming/yyyy/MM/dd/{correlationId}/{name}`
-    * (key layout: camel/file-pipeline.yaml:76-85). Runs per-partition with
-    * one FileSystem handle; rows never leave their partition (no shuffle).
+    * (key layout: camel/file-pipeline.yaml:76-85) for a keyed envelope.
+    * The pipeline itself stores them inside its conversion pass.
     */
   def writeIncoming(valid: DataFrame, baseDir: String): Unit =
-    writeBytes(valid.select(col("s3IncomingKey").as("key"), col("body")),
-               baseDir)
-
-  /** K2: Docling JSON to `processed/.../{name}.json`
-    * (camel/file-pipeline.yaml:207-240).
-    */
-  def writeProcessed(ok: DataFrame, baseDir: String): Unit =
-    writeBytes(
-      ok.select(col("s3ProcessedKey").as("key"),
-                encode(col("doclingResult"), "UTF-8").as("body")),
-      baseDir)
-
-  /** K3: failure reports to `failed/.../{name}.failure.json`. Write errors
-    * are swallowed so a broken report store can't lose the DLQ record —
-    * the reference does the same (dlq-handler.yaml:124). Each written
-    * report bumps the DLQ counter (K5, dlq-handler.yaml:129-132).
-    */
-  def writeFailed(reports: DataFrame, baseDir: String): Unit = {
-    val counter = PipelineMetrics.dlqCounter(reports.sparkSession)
-    val withBytes = spread(reports.select(
-      col("key"), encode(col("report"), "UTF-8").as("body")))
-    withBytes.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      val fs = newFs(baseDir)
-      it.foreach { row =>
-        try {
-          put(fs, baseDir, row.getString(0), row.getAs[Array[Byte]](1))
-          counter.add(1L)
-        } catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
-  }
-
-  private def writeBytes(df: DataFrame, baseDir: String): Unit =
-    spread(df).foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      val fs = newFs(baseDir)
-      it.foreach { row =>
-        put(fs, baseDir, row.getString(0), row.getAs[Array[Byte]](1))
-      }
-    }
-
-  /** Object puts are latency-bound, so write parallelism = partition
-    * count. A streaming source (Kafka) already provides it; a single-file
-    * batch input arrives as ONE partition and would serialize every put —
-    * spread those. The repartition moves (key, body) rows; at scale the
-    * streaming path is the partitioned one, so bodies still never cross a
-    * shuffle there.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // queryExecution.toRdd: physical partition count without stacking the
-    // row-deserializer lineage `.rdd` would add on top of the plan
-    if (df.queryExecution.toRdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
-  }
-
-  private def newFs(baseDir: String): FileSystem = {
-    val fs = FileSystem.get(new Path(baseDir).toUri, new Configuration())
-    // local-FS checksum shadows (.name.crc) would pollute the exact-key
-    // layout; object stores (s3a) don't have them anyway.
-    fs.setWriteChecksum(false)
-    fs
-  }
-
-  private def put(fs: FileSystem, baseDir: String, key: String,
-                  body: Array[Byte]): Unit = {
-    val out = fs.create(new Path(s"$baseDir/$key"), true)
-    try out.write(body) finally out.close()
-  }
+    writeObjects(
+      valid.select(col("s3IncomingKey").as("key"), col("body"),
+                   lit(false).as("report")),
+      Bucket(valid.sparkSession, baseDir))
 
   /** S4: read raw incoming objects back (binaryFile source); the full
     * (processingDate, correlationId, fileName) identity is recovered from
@@ -98,10 +89,12 @@ object ObjectStore {
     * redeliveries of the same file land under different dates).
     */
   def readIncoming(spark: SparkSession, baseDir: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(s"$baseDir/incoming")
-      .select(
+    readPrefix(spark, s"$baseDir/incoming", StructType(Seq(
+        StructField("path", StringType), StructField("content", BinaryType)))) {
+      spark.read.format("binaryFile")
+        .option("recursiveFileLookup", "true")
+        .load(_)
+    }.select(
         regexp_extract(col("path"),
           "incoming/(\\d{4}/\\d{2}/\\d{2})/[^/]+/[^/]+$", 1)
           .as("incomingDate"),
@@ -112,40 +105,34 @@ object ObjectStore {
           .as("fileName"),
         col("content").as("body"))
 
-  /** Success-path notification rows: (correlationId, key, notification)
-    * per processed record — the ONE payload builder both notification
-    * sinks share, so the object-store mirror and the Kafka topic cannot
-    * diverge.
+  /** Success-path notification key and payload over a processed record
+    * — the ONE builder both notification sinks share ([[notificationRows]]
+    * for the Kafka topic, the pipeline's object projection for the
+    * `notifications/…` mirror), so their payloads cannot diverge. The
+    * reference declares the `file-transfer-notifications` address but
+    * never feeds it (k8s/amq-address.yaml:50-64).
+    */
+  def notificationKey: Column =
+    concat(concat_ws("/", lit("notifications"), col("processingDate"),
+                     col("correlationId"), col("fileName")),
+           lit(".notification.json"))
+
+  def notificationJson: Column =
+    to_json(struct(
+      lit("PROCESSED").as("status"),
+      col("fileName").as("fileName"),
+      col("correlationId").as("correlationId"),
+      col("transferId").as("transferId"),
+      col("s3ProcessedKey").as("s3ProcessedKey"),
+      date_format(current_timestamp(),
+        "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").as("processedTimestamp")))
+
+  /** (correlationId, key, notification) per processed record, for
+    * [[graft.sources.Sources.kafkaNotificationsWriter]].
     */
   def notificationRows(ok: DataFrame): DataFrame =
-    ok.select(
-      col("correlationId"),
-      concat(concat_ws("/", lit("notifications"), col("processingDate"),
-                       col("correlationId"), col("fileName")),
-             lit(".notification.json")).as("key"),
-      to_json(struct(
-        lit("PROCESSED").as("status"),
-        col("fileName").as("fileName"),
-        col("correlationId").as("correlationId"),
-        col("transferId").as("transferId"),
-        col("s3ProcessedKey").as("s3ProcessedKey"),
-        date_format(current_timestamp(),
-          "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").as("processedTimestamp")))
-        .as("notification"))
-
-  /** Success-path notifications (the `file-transfer-notifications`
-    * address the reference declares but never feeds —
-    * k8s/amq-address.yaml:50-64; SURVEY.md §2A mirrors it as an optional
-    * topic): one JSON object per processed record under
-    * `notifications/…`. Production would additionally bind the Kafka
-    * writer in [[graft.sources.Sources.kafkaNotificationsWriter]] over
-    * the same [[notificationRows]].
-    */
-  def writeNotifications(ok: DataFrame, baseDir: String): Unit =
-    writeBytes(
-      notificationRows(ok).select(
-        col("key"), encode(col("notification"), "UTF-8").as("body")),
-      baseDir)
+    ok.select(col("correlationId"), notificationKey.as("key"),
+              notificationJson.as("notification"))
 
   val failureReportSchema: StructType = StructType(Seq(
     StructField("status", StringType),
@@ -254,12 +241,25 @@ object ObjectStore {
       .select(col("key"), col("body"))
   }
 
+  /** `read(dir)`, or no rows of `schema` when nothing was ever put under
+    * the prefix (an empty DLQ, a store without valid documents): such a
+    * store reads as empty instead of failing with PATH_NOT_FOUND.
+    */
+  private def readPrefix(spark: SparkSession, dir: String, schema: StructType)
+                        (read: String => DataFrame): DataFrame = {
+    val p = new Path(dir)
+    if (p.getFileSystem(org.apache.spark.sql.graft.bridge.hadoopConf(spark))
+          .exists(p)) read(dir)
+    else spark.createDataFrame(java.util.List.of[Row](), schema)
+  }
+
   /** Failure reports back as a flat DataFrame (drives reprocess, E5). */
   def readFailedReports(spark: SparkSession, baseDir: String): DataFrame =
-    spark.read.schema(failureReportSchema)
-      .option("recursiveFileLookup", "true")
-      .json(s"$baseDir/failed")
-      .select(col("status"), col("fileName"), col("correlationId"),
+    readPrefix(spark, s"$baseDir/failed", failureReportSchema) {
+      spark.read.schema(failureReportSchema)
+        .option("recursiveFileLookup", "true")
+        .json(_)
+    }.select(col("status"), col("fileName"), col("correlationId"),
               col("transferId"), col("failureTimestamp"),
               col("redeliveryCount"), col("exception"),
               col("headers.contentType").as("contentType"),

@@ -2,11 +2,12 @@ package graft.stream
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.enrich.{BreakerConfig, BreakerRegistry, DoclingClient, RetryPolicy}
 import graft.ops.Envelope
+import graft.sinks.ObjectStore
 
 /** Typed record flowing through the enrichment stage. The binary body is
   * deliberately ABSENT: it is persisted to `incoming/` before enrichment
@@ -88,28 +89,29 @@ object FilePipeline {
   }
 
   /** X1+X2+E3: per-partition enrichment with pooled client, executor-local
-    * circuit breaker and bounded in-batch retry. Runs on the body-free
-    * projection — the only non-codegen stage in the pipeline, kept
-    * deliberately narrow (13 small columns).
+    * circuit breaker and bounded in-batch retry, on the body-free record
+    * (13 small columns). Given an `incoming` bucket, each record's raw
+    * body is put to `incoming/` (K1) right before its conversion — the
+    * reference's order (file-pipeline.yaml:76-167), so the converter may
+    * fetch the object just stored — and goes no further than the put.
     */
   def enrich(prepared: DataFrame, client: DoclingClient,
-             cfg: PipelineConfig = PipelineConfig()): Dataset[EnrichedRecord] = {
-    val spark = prepared.sparkSession
-    import spark.implicits._
-    val retry = cfg.retry
-    val breakerCfg = cfg.breaker
-    val breakerName = cfg.breakerName
-    prepared.select(
-        col("fileName"), col("contentType"), col("fileSize"),
-        col("transferId"), col("checksum"), col("correlationId"),
-        col("eventTime"), col("deliveryCount"), col("processingDate"),
-        col("s3IncomingKey"), col("s3ProcessedKey"), col("s3FailedKey"),
-        col("doclingRequest"))
-      .as[PipelineRecord]
+             cfg: PipelineConfig = PipelineConfig(),
+             incoming: Option[ObjectStore.Bucket] = None)
+      : Dataset[EnrichedRecord] = {
+    val record = struct(Seq("fileName", "contentType", "fileSize",
+      "transferId", "checksum", "correlationId", "eventTime",
+      "deliveryCount", "processingDate", "s3IncomingKey", "s3ProcessedKey",
+      "s3FailedKey", "doclingRequest").map(col): _*)
+    val body = if (incoming.isEmpty) lit(null).cast("binary") else col("body")
+    prepared.select(record.as("_1"), body.as("_2"))
+      .as(recordWithBody)
       .mapPartitions { it =>
-        val breaker = BreakerRegistry.get(breakerName, breakerCfg)
-        it.map { r =>
-          val outcome = retry.run(() => breaker.call(() => client.convert(r.doclingRequest)))
+        val breaker = BreakerRegistry.get(cfg.breakerName, cfg.breaker)
+        it.map { case (r, body) =>
+          incoming.foreach(_.put(r.s3IncomingKey, body))
+          val outcome = cfg.retry.run(() =>
+            breaker.call(() => client.convert(r.doclingRequest)))
           val (attempts, result, error) = outcome match {
             case Right((json, n)) => (n, Some(json), None)
             case Left((err, n)) => (n, None, Some(err))
@@ -120,12 +122,20 @@ object FilePipeline {
             r.processingDate, r.s3IncomingKey, r.s3ProcessedKey,
             r.s3FailedKey, attempts, result, error)
         }
-      }
+      }(enrichedRecord)
   }
 
+  // derived once: reflective encoder derivation costs milliseconds, and
+  // enrich runs on every micro-batch
+  private lazy val recordWithBody =
+    Encoders.tuple(Encoders.product[PipelineRecord], Encoders.BINARY)
+  private lazy val enrichedRecord = Encoders.product[EnrichedRecord]
+
   /** Splits enriched output into (succeeded, failed) — the error channel
-    * is a column, so this is two cheap filters over one computed Dataset,
-    * not a re-execution (callers should cache/persist per micro-batch).
+    * is a column, so these are two filters over one Dataset; each action
+    * on them runs the conversion again unless the caller persists it.
+    * [[runBatch]] does not split: its object projection routes by the
+    * error column in the same pass.
     */
   def route(enriched: Dataset[EnrichedRecord])
       : (Dataset[EnrichedRecord], Dataset[EnrichedRecord]) =
@@ -152,18 +162,21 @@ object FilePipeline {
      tagged.filter(col("__expired")).drop("__expired", "__maxTs"))
   }
 
-  /** One micro-batch (or one batch job): persist incoming, enrich, write
-    * processed + failure reports, return the failed set for the DLQ topic.
-    * `outDir` stands in for the S3 bucket (s3a:// in production).
+  /** One micro-batch (or one batch job) as ONE Spark action: per valid
+    * row, store the raw body, convert, then store the Docling JSON or a
+    * failure report — the reference's per-message order (SURVEY.md
+    * §3.1). Contract-invalid and expired rows join the same writer as
+    * failure reports through a narrow union (no shuffle). Nothing is
+    * persisted and no conversion runs twice. `outDir` stands in for the
+    * S3 bucket (s3a:// in production).
     *
-    * Metrics ride the existing write actions via `observe()`
-    * (CollectMetrics nodes): a batch costs exactly its writes — no
-    * standalone count() jobs. The same observations surface in streaming
-    * progress events for [[graft.sinks.PipelineListener]].
+    * The metrics ride that action: one `observe()` (a CollectMetrics
+    * node) counts the written objects by kind, so a batch costs exactly
+    * its writes — no count() jobs. The same observation surfaces in
+    * streaming progress events for [[graft.sinks.PipelineListener]].
     */
   def runBatch(envelope: DataFrame, outDir: String, client: DoclingClient,
                cfg: PipelineConfig = PipelineConfig()): BatchMetrics = {
-    import org.apache.spark.sql.Observation
     val spark = envelope.sparkSession
     // Enrichment (external calls) and object puts are latency-bound: their
     // parallelism is the partition count. Kafka micro-batches arrive
@@ -181,76 +194,70 @@ object FilePipeline {
     // E4: configured expiry routes stale rows to the DLQ branch before
     // any processing (the broker-expiry analog); they become failure
     // reports with an "expired" exception.
-    val (liveEnv, expiredEnv) = cfg.expiry match {
-      case Some(age) => splitExpired(spreadEnv, age)
-      case None => (spreadEnv, null)
+    val (liveEnv, expired) = cfg.expiry match {
+      case Some(age) =>
+        val (live, old) = splitExpired(spreadEnv, age)
+        (live, Seq(reportObjects(old, lit(s"expired: exceeded $age"), "expired")))
+      case None => (spreadEnv, Nil)
     }
     val (valid, invalid) = prepare(liveEnv, cfg)
-    val obsIn = Observation(); val obsOk = Observation()
-    val obsFailed = Observation(); val obsInvalid = Observation()
-    val obsExpired = Observation()
-    val nAgg = count(lit(1)).as("n")
-    // blocks until the write action carrying the observed node finishes —
-    // all gets below run after their actions, so this never waits
-    def counted(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
-    val validP = valid.persist()
-    try {
-      // K1: raw payloads to incoming/ (exact deterministic keys). The
-      // observation on top of the cached frame rides this first action.
-      graft.sinks.ObjectStore.writeIncoming(validP.observe(obsIn, nAgg), outDir)
-      val enriched = enrich(validP, client, cfg).persist()
-      try {
-        val (ok, failed) = route(enriched)
-        // K2: structured JSON to processed/.
-        val okDf = ok.toDF().observe(obsOk, nAgg)
-        graft.sinks.ObjectStore.writeProcessed(okDf, outDir)
-        // Success-path notifications mirror (reference's declared-but-
-        // dead notifications address), keyed like the processed objects.
-        if (cfg.notifications)
-          graft.sinks.ObjectStore.writeNotifications(ok.toDF(), outDir)
-        // DLQ route (3.2): failure reports to failed/, swallow-on-error.
-        val failedDf = failed.toDF().observe(obsFailed, nAgg)
-        val invalidO = invalid.observe(obsInvalid, nAgg)
-        val expired = Option(expiredEnv)
-        val reports = expired match {
-          case Some(e) =>
-            val expiredReports =
-              Envelope.withObjectKeys(Envelope.withProcessingDate(
-                  e.observe(obsExpired, nAgg)))
-                .select(col("s3FailedKey").as("key"),
-                  Envelope.failureReportJson(
-                    lit(s"expired: exceeded ${cfg.expiry.get}"),
-                    current_timestamp()).as("report"))
-            dlqReports(failedDf, invalidO).unionByName(expiredReports)
-          case None => dlqReports(failedDf, invalidO)
-        }
-        // one action covers the failed/invalid/expired observations: all
-        // three branches flow into this single write
-        graft.sinks.ObjectStore.writeFailed(reports, outDir)
-        BatchMetrics(
-          counted(obsIn), counted(obsOk), counted(obsFailed),
-          counted(obsInvalid)
-            + expired.map(_ => counted(obsExpired)).getOrElse(0L))
-      } finally enriched.unpersist()
-    } finally validP.unpersist()
+    val bucket = ObjectStore.Bucket(spark, outDir)
+    // the union's partitions run in order: the cheap report branches go
+    // first, so their tasks don't queue behind the conversions
+    val objects = (
+      reportObjects(invalid, col("invalidReason"), "invalid") +: expired
+        :+ outcomeObjects(enrich(valid, client, cfg, Some(bucket)).toDF(),
+                          cfg.notifications)).reduce(_ unionByName _)
+    val kinds = Seq("processed", "failed", "invalid", "expired")
+    val counts = kinds.map(k => count(when(col("kind") === k, true)).as(k))
+    val obs = Observation()
+    ObjectStore.writeObjects(objects.observe(obs, counts.head, counts.tail: _*),
+      bucket)
+    // the write action has finished, so this never waits
+    val n = kinds.map(k => k -> obs.get(k).asInstanceOf[Long]).toMap
+    BatchMetrics(n("processed") + n("failed"), n("processed"), n("failed"),
+      n("invalid") + n("expired"))
   }
 
-  /** DLQ-handler projection (P2+P5, dlq-handler.yaml:26-98): failure
-    * reports for enrichment failures and contract-invalid rows.
+  /** A conversion outcome as its objects, in one codegen'd projection:
+    * the Docling JSON under `processed/` (K2, file-pipeline.yaml:207-240)
+    * or a failure report under `failed/` (K3, dlq-handler.yaml:69-98);
+    * with `notifications`, a processed record also emits its
+    * notification object ([[ObjectStore.notificationKey]]).
     */
-  def dlqReports(failed: DataFrame, invalid: DataFrame): DataFrame = {
-    val fromEnrich = failed.select(
-      col("s3FailedKey").as("key"),
-      Envelope.failureReportJson(col("error"), current_timestamp())
-        .as("report"))
-    val fromInvalid =
-      Envelope.withObjectKeys(Envelope.withProcessingDate(invalid))
-        .select(
-          col("s3FailedKey").as("key"),
-          Envelope.failureReportJson(col("invalidReason"),
-            current_timestamp()).as("report"))
-    fromEnrich.unionByName(fromInvalid)
+  private def outcomeObjects(outcomes: DataFrame,
+                             notifications: Boolean): DataFrame = {
+    val ok = col("error").isNull
+    val result = storeObject(when(ok, "processed").otherwise("failed"),
+      when(ok, col("s3ProcessedKey")).otherwise(col("s3FailedKey")),
+      when(ok, col("doclingResult")).otherwise(
+        Envelope.failureReportJson(col("error"), current_timestamp())),
+      !ok)
+    if (!notifications) outcomes.select(result: _*)
+    else {
+      val (obj, note) = (struct(result: _*), struct(storeObject(
+        lit("notification"), ObjectStore.notificationKey,
+        ObjectStore.notificationJson, lit(false)): _*))
+      outcomes.select(inline(
+        when(ok, array(obj, note)).otherwise(array(obj))))
+    }
   }
+
+  /** DLQ-handler projection (P2+P5, dlq-handler.yaml:26-98) for rows that
+    * never reach Docling: a failure report under `failed/` per row.
+    */
+  private def reportObjects(rows: DataFrame, reason: Column,
+                            kind: String): DataFrame =
+    Envelope.withObjectKeys(Envelope.withProcessingDate(rows))
+      .select(storeObject(lit(kind), col("s3FailedKey"),
+        Envelope.failureReportJson(reason, current_timestamp()),
+        lit(true)): _*)
+
+  /** One row of [[ObjectStore.writeObjects]]' input, tagged with its kind. */
+  private def storeObject(kind: Column, key: Column, text: Column,
+                          report: Column): Seq[Column] =
+    Seq(kind.as("kind"), key.as("key"), encode(text, "UTF-8").as("body"),
+      report.as("report"))
 
   /** Structured Streaming driver: same batch core per micro-batch.
     * With a Kafka cluster the source is

@@ -33,4 +33,12 @@ object bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** The session's Hadoop conf: the SparkContext's (`spark.hadoop.*`)
+    * plus the session's runtime settings — what Spark's own file sources
+    * use; `sessionState` is `private[sql]`, hence the shim.
+    */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.hadoop.conf.Configuration =
+    spark.sessionState.newHadoopConf()
 }

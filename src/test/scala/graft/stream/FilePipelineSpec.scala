@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.enrich.{LocalDocling, RetryPolicy}
+import graft.enrich.{DoclingClient, LocalDocling, RetryPolicy}
 import graft.ops.Envelope
 import graft.sinks.{ObjectStore, PipelineMetrics}
 
@@ -157,17 +157,52 @@ class FilePipelineSpec extends AnyFunSuite {
   test("runBatch metrics ride the write actions (observe), not standalone count jobs") {
     val out = tmp().toString
     val sc = spark.sparkContext
+    val n = sc.defaultParallelism
+    // a local relation of n rows scans as n partitions: no spreading
+    // shuffle, so anything beyond the one write action would be extra
+    val env = sampleEnvelope(n)
+    assert(env.queryExecution.toRdd.getNumPartitions == n)
     sc.setJobGroup("rb-jobs", "runBatch job count", interruptOnCancel = false)
     val m =
-      try FilePipeline.runBatch(sampleEnvelope(4), out, new LocalDocling(),
-        freshCfg())
+      try FilePipeline.runBatch(env, out,
+        new LocalDocling(failSubstring = Some("doc2.pdf")),
+        freshCfg().copy(notifications = true))
       finally sc.clearJobGroup()
-    assert(m == BatchMetrics(4, 4, 0, 0))
+    assert(m == BatchMetrics(n, n - 1, 1, 0))
     val jobs = sc.statusTracker.getJobIdsForGroup("rb-jobs").length
-    // the batch costs its three writes (incoming/processed/failed) plus at
-    // most AQE shuffle materialization — the four count() actions that
-    // used to follow them are gone
-    assert(jobs <= 5, s"expected metrics to ride the writes, saw $jobs jobs")
+    // incoming, processed, failure reports and notifications are all put
+    // by one action, and the metrics are observed on it
+    assert(jobs == 1, s"expected one Spark job per batch, saw $jobs")
+  }
+
+  test("runBatch converts each valid document once per batch; only retries call again") {
+    val out = tmp().toString
+    val tag = java.util.UUID.randomUUID().toString
+    val ts = Timestamp.valueOf("2024-03-05 07:08:09")
+    val docs = (1 to 6).map { i =>
+      (s"doc$i.pdf", "application/pdf", 10L, s"t$i", "ab" * 32, s"$tag-$i",
+       s"payload-$i".getBytes, ts, 1)
+    }
+    val rows = envelope(docs ++ Seq(
+      ("old.pdf", "application/pdf", 10L, "t-old", "ab" * 32, s"$tag-old",
+       "x".getBytes, Timestamp.valueOf("2024-03-01 00:00:00"), 1),
+      ("bad.pdf", "application/pdf", 10L, "t-bad", null, s"$tag-bad",
+       "y".getBytes, ts, 1)))
+    // doc2 fails every attempt, doc3 only its first
+    val client = new CountingDocling(Set("doc3.pdf"),
+      new LocalDocling(failSubstring = Some("doc2.pdf")))
+    val m = FilePipeline.runBatch(rows, out, client,
+      freshCfg().copy(notifications = true, expiry = Some("'2' DAYS"),
+        breaker = graft.enrich.BreakerConfig(requestVolumeThreshold = 1000)))
+    assert(m == BatchMetrics(6, 5, 1, 2))
+    val calls = FilePipelineSpec.calls(tag)
+    assert(calls == Map("doc1.pdf" -> 1, "doc2.pdf" -> 3, "doc3.pdf" -> 2,
+      "doc4.pdf" -> 1, "doc5.pdf" -> 1, "doc6.pdf" -> 1))
+    def objects(sub: String): Long =
+      Files.walk(java.nio.file.Paths.get(out, sub))
+        .filter(Files.isRegularFile(_)).count()
+    assert(objects("incoming") == 6 && objects("processed") == 5)
+    assert(objects("notifications") == 5 && objects("failed") == 3)
   }
 
   test("splitExpired keeps null-eventTime rows out of the expired branch; validation DLQs them") {
@@ -250,6 +285,23 @@ class FilePipelineSpec extends AnyFunSuite {
     assert(new String(re.head.getAs[Array[Byte]]("body")) == "body-b")
   }
 
+  test("reprocess on a store with an empty DLQ returns no rows, same schema") {
+    val withReports = tmp().toString
+    FilePipeline.runBatch(sampleEnvelope(2), withReports,
+      new LocalDocling(failSubstring = Some("doc1.pdf")), freshCfg())
+    val expected = FilePipeline.reprocess(spark, withReports).schema
+    val noReports = tmp().toString
+    FilePipeline.runBatch(sampleEnvelope(2), noReports, new LocalDocling(),
+      freshCfg())
+    assert(!Files.exists(java.nio.file.Paths.get(noReports, "failed")))
+    // a store without failed/, and one without any object at all
+    Seq(noReports, tmp().toString).foreach { dir =>
+      val re = FilePipeline.reprocess(spark, dir)
+      assert(re.schema == expected)
+      assert(re.count() == 0)
+    }
+  }
+
   test("reprocess (E5) joins failure reports back to incoming payloads and bumps deliveryCount") {
     val out = tmp().toString
     FilePipeline.runBatch(sampleEnvelope(3), out,
@@ -264,5 +316,42 @@ class FilePipelineSpec extends AnyFunSuite {
     // targeted reprocess by correlationId
     assert(FilePipeline.reprocess(spark, out, Some("corr-0001")).count() == 1)
     assert(FilePipeline.reprocess(spark, out, Some("corr-none")).count() == 0)
+  }
+}
+
+object FilePipelineSpec {
+  /** Conversion calls per request. Static: tasks run on deserialized
+    * copies of the client.
+    */
+  private val counts = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicInteger]()
+
+  def count(request: String): Int =
+    counts.computeIfAbsent(request,
+      _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet()
+
+  /** Calls per file name, over the requests whose source key holds `tag`. */
+  def calls(tag: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    counts.asScala.collect { case (req, n) if req.contains(tag) =>
+      FileOf.findFirstMatchIn(req).get.group(1) -> n.get
+    }.toMap
+  }
+
+  /** The file name at the end of the request's source key. */
+  val FileOf = "\"source\":\"[^\"]*/([^/\"]+)\"".r
+}
+
+/** Counts every call per request, fails the first call for the files in
+  * `failFirst` (a transient failure), and delegates the rest.
+  */
+final class CountingDocling(failFirst: Set[String], inner: DoclingClient)
+    extends DoclingClient {
+  override def convert(request: String): String = {
+    val n = FilePipelineSpec.count(request)
+    if (n == 1 && FilePipelineSpec.FileOf.findFirstMatchIn(request)
+          .exists(m => failFirst(m.group(1))))
+      throw new RuntimeException("docling: transient failure")
+    inner.convert(request)
   }
 }
