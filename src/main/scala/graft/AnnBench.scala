@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN accuracy/cost census — the measurement that turns the IVF/PQ
@@ -49,16 +49,9 @@ object AnnBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_ANN_RUNS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val k = 10
     val nQueries = 100
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val corpus = new Tables(spark, sfDir).embeddings
     val queries = corpus.filter(col("vec_id") < nQueries)
@@ -111,20 +104,19 @@ object AnnBench {
       Row(name, wall, recall, pairs.length.toLong)
     }
 
-    def fmt(d: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    val json = rows.map { r =>
-      s""""${r.config}":{"wall_sec":${fmt(r.wallSec)},""" +
-        s""""recall_at_$k":${fmt(r.recall)},"out_rows":${r.outRows}}"""
-    }.mkString(s"""{"sf":"$sfDir","k":$k,"n_queries":$nQueries,""" +
-      s""""runs":$runs,"configs":{""", ",", "}}")
+    import Harness.{obj, str}
+    def fmt(d: Double) = Harness.num(d, 3)
+    val json = obj("sf" -> str(sfDir), "k" -> k, "n_queries" -> nQueries,
+      "runs" -> runs, "configs" -> obj(rows.map(r => r.config -> obj(
+        "wall_sec" -> fmt(r.wallSec), s"recall_at_$k" -> fmt(r.recall),
+        "out_rows" -> r.outRows)): _*))
     java.nio.file.Files.write(java.nio.file.Paths.get("ann.json"),
       (json + "\n").getBytes("UTF-8"))
 
     val md = new StringBuilder
     md ++= "# ANN — measured recall/cost tradeoff\n\n"
     md ++= s"Protocol: `graft.AnnBench` main — $nQueries queries, top-$k,\n"
-    md ++= s"corpus `$sfDir/embeddings.parquet`, local[$cpus]; wall is\n"
+    md ++= s"corpus `$sfDir/embeddings.parquet`, local[${Harness.cpus}]; wall is\n"
     md ++= s"min-of-$runs after an untimed warm-up and INCLUDES index/\n"
     md ++= "codebook construction (serve-from-cold; the amortized serving\n"
     md ++= "layout is AnnIndex/q64/q127). recall@k is exact against the\n"

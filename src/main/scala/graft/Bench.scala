@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON metrics line. Results are materialized through the
   * `noop` sink — `count()` would let Catalyst prune every computed column
@@ -19,27 +17,63 @@ import org.apache.spark.sql.SparkSession
   * itself; stdout still carries the single-line driver contract.
   */
 object Bench {
+  import Harness.{arr, num, obj, str}
 
-  private def jnum(d: Double): String =
-    // explicit Locale.ROOT: the f-interpolator uses the default locale,
-    // which on a comma-decimal JVM would emit "12,3456" and corrupt the JSON
-    if (d.isNaN || d.isInfinite) "null"
-    else String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
+  /** Fastest successful run; NaN when every run failed. */
+  private def minOf(runs: Seq[Double]): Double = {
+    val ok = runs.filterNot(_.isNaN)
+    if (ok.isEmpty) Double.NaN else ok.min
+  }
+
+  private def total(times: Seq[(String, Seq[Double])]): Double =
+    times.map(t => minOf(t._2)).filterNot(_.isNaN).sum
+
+  // STDOUT keys are the short query ids (q01, q02, …): the driver
+  // captures only the trailing ~2000 bytes of console output, and the
+  // full-name map outgrew that window at 83 queries (BENCH_r05 came
+  // back "parsed": null with the line's head truncated). Short ids keep
+  // the line parseable at any realistic query count; the short→full
+  // name mapping is documented in BASELINE.md and the full-name map
+  // (with all run samples) is always in the file artifact.
+  private def shortId(n: String): String = n.takeWhile(_ != '_')
+
+  /** The one-line stdout contract. It carries 3 decimals per query (1 ms
+    * — an order below run-to-run noise), which keeps the 258-query line
+    * inside the driver's capture window (BenchLineSpec gates its
+    * length); the full-precision figures stay in [[fileArtifact]].
+    */
+  def stdoutLine(sfDir: String, runs: Int, outPath: String,
+                 times: Seq[(String, Seq[Double])]): String = {
+    require(times.map(t => shortId(t._1)).distinct.size == times.size,
+      "duplicate short query ids — stdout JSON keys would collide")
+    obj("metric" -> str("total"), "value" -> num(total(times), 4),
+      "unit" -> str("sec"),
+      "queries" -> obj(times.map { case (n, t) =>
+        shortId(n) -> num(minOf(t), 3) }: _*),
+      "sf" -> str(sfDir), "runs" -> runs, "aggregation" -> str("min"),
+      "names" -> str(s"short ids; full map in $outPath"))
+  }
+
+  /** The file artifact: every run's time per full query name, plus the
+    * last error of a query whose run failed. */
+  def fileArtifact(sfDir: String, runs: Int,
+                   times: Seq[(String, Seq[Double])],
+                   errors: collection.Map[String, String]): String =
+    obj("metric" -> str("total"), "value" -> num(total(times), 4),
+      "unit" -> str("sec"), "sf" -> str(sfDir), "runs" -> runs,
+      "aggregation" -> str("min"),
+      "queries" -> obj(times.map { case (n, t) => n -> num(minOf(t), 4) }: _*),
+      "detail" -> obj(times.map { case (n, t) =>
+        n -> obj(Seq("min" -> num(minOf(t), 4), "runs" -> arr(t.map(num(_, 4))))
+          ++ errors.get(n).map("error" -> str(_)): _*)
+      }: _*))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Untimed warm-up: JVM/codegen/file-index initialization otherwise
     // lands entirely on whichever query runs first.
     val warm = new Tables(spark, sfDir)
@@ -47,14 +81,10 @@ object Bench {
         warm.embeddings).foreach {
       _.write.format("noop").mode("overwrite").save()
     }
-    // Dev aid: SPARK_GRAFT_BENCH_ONLY=q122,q80 restricts the run to the
-    // named queries (matched on the short id before the first '_').
+    // Dev aid: SPARK_GRAFT_ONLY restricts the run to the named queries.
     // Unset in driver runs, so the recorded artifact always covers all.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(ids =>
-        ids.contains(n) || ids.contains(n.takeWhile(_ != '_'))))
+    val queries = SparkEntry.queries
+    val names = Harness.selected(queries.keys)
     // Untimed warm-up PASS (round-6 advisory): without it, each query's
     // first timed run pays its own codegen/JIT compilation — measured up
     // to ~50x on sub-second queries (q103 runs [52.4, 1.40, 1.08]) — so
@@ -62,21 +92,20 @@ object Bench {
     // execution per query doubles the effective sample count for ~15%
     // wall cost; failures are ignored here and surface in the timed loop.
     for (name <- names)
-      try SparkEntry.queries(name)(spark, sfDir)
+      try queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case scala.util.control.NonFatal(_) => () }
     // run-major order (all queries per pass, `runs` passes): consecutive
     // same-query runs would share hot caches and understate steady-state
     // cost; pass-major interleaving also means a transient JVM hiccup
     // degrades one PASS, not one query's whole sample
-    val times = names.map(_ -> Array.fill(runs)(Double.NaN)).toMap
+    val times = names.map(_ -> Array.fill(runs)(Double.NaN))
     val errors = scala.collection.mutable.Map[String, String]()
-    for (r <- 0 until runs; name <- names) {
-      val fn = SparkEntry.queries(name)
+    for (r <- 0 until runs; (name, t) <- times) {
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        times(name)(r) = (System.nanoTime() - t0) / 1e9
+        queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        t(r) = (System.nanoTime() - t0) / 1e9
       } catch {
         // NonFatal only: an OOM/LinkageError means a damaged JVM whose
         // later timings would be plausible-looking garbage — abort the
@@ -86,35 +115,8 @@ object Bench {
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
     }
-    def minOf(name: String): Double = {
-      val ok = times(name).filterNot(_.isNaN)
-      if (ok.isEmpty) Double.NaN else ok.min
-    }
-    // STDOUT keys are the short query ids (q01, q02, …): the driver
-    // captures only the trailing ~2000 bytes of console output, and the
-    // full-name map outgrew that window at 83 queries (BENCH_r05 came
-    // back "parsed": null with the line's head truncated). Short ids keep
-    // the line parseable at any realistic query count; the short→full
-    // name mapping is documented in BASELINE.md and the full-name map
-    // (with all run samples) is always in the file artifact below.
-    def shortId(n: String): String = n.takeWhile(_ != '_')
-    require(names.map(shortId).distinct.size == names.size,
-      "duplicate short query ids — stdout JSON keys would collide")
-    // stdout carries 3 decimals (1 ms — an order below run-to-run
-    // noise); the full-precision figures stay in the file artifact.
-    // Measurement-contract note (round-18): this is a PRECISION change
-    // to the stdout copy only, keeping the 258-query line inside the
-    // driver's capture window (see BenchLineSpec); values, methodology
-    // and the file artifact are unchanged.
-    def jnum3(d: Double): String =
-      if (d.isNaN || d.isInfinite) "null"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    val qsShort = names.map(n => "\"" + shortId(n) + "\":" + jnum3(minOf(n)))
-      .mkString("{", ",", "}")
-    val qs = names.map(n => "\"" + n + "\":" + jnum(minOf(n)))
-      .mkString("{", ",", "}")
-    val total = names.map(minOf).filterNot(_.isNaN).sum
-    val line = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qsShort,"sf":"$sfDir","runs":$runs,"aggregation":"min","names":"short ids; full map in $outPath"}"""
+    val samples = times.map { case (n, t) => n -> t.toSeq }
+    val line = stdoutLine(sfDir, runs, outPath, samples)
     // stdout-capture budget (VERDICT r17 item 9): the driver keeps only
     // the console tail, and the 239-query line was once truncated. The
     // r17 line (3.7 KB at 258 queries) parsed, so 4 KB is a measured-
@@ -127,17 +129,8 @@ object Bench {
         "precision or shorten ids")
     // file artifact with the full sample, written BEFORE the stdout line
     // so a truncated/garbled console capture can always be reconstructed
-    val detail = names.map { n =>
-      val all = times(n).map(jnum).mkString("[", ",", "]")
-      val err = errors.get(n)
-        .map(m => ",\"error\":\"" + m.replaceAll("[\"\\\\\n\r]", " ") + "\"")
-        .getOrElse("")
-      "\"" + n + "\":{\"min\":" + jnum(minOf(n)) + ",\"runs\":" + all + err + "}"
-    }.mkString("{", ",", "}")
-    val fileJson =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","sf":"$sfDir","runs":$runs,"aggregation":"min","queries":$qs,"detail":$detail}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (fileJson + "\n").getBytes("UTF-8"))
+      (fileArtifact(sfDir, runs, samples, errors) + "\n").getBytes("UTF-8"))
     println(line)
     spark.stop()
   }

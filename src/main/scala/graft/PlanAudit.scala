@@ -40,10 +40,9 @@ object PlanAudit {
   final case class Census(shuffles: Int, broadcasts: Int, reused: Int,
                           sorts: Int, codegenSpans: Int, scans: Int,
                           unpartitionedWindows: Int) {
-    def jsonFields: String =
-      s""""shuffles":$shuffles,"broadcasts":$broadcasts,"reused":$reused,""" +
-        s""""sorts":$sorts,"wsc":$codegenSpans,"scans":$scans,""" +
-        s""""upw":$unpartitionedWindows"""
+    def json: String = Harness.obj("shuffles" -> shuffles,
+      "broadcasts" -> broadcasts, "reused" -> reused, "sorts" -> sorts,
+      "wsc" -> codegenSpans, "scans" -> scans, "upw" -> unpartitionedWindows)
   }
 
   def census(plan: SparkPlan): Census = {
@@ -112,19 +111,11 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    val spark = Harness.session()
     val rows = auditAll(spark, sfDir)
 
-    val json = rows.map { case (n, c) => s""""$n":{${c.jsonFields}}""" }
-      .mkString(s"""{"sf":"$sfDir","queries":{""", ",", "}}")
+    val json = Harness.obj("sf" -> Harness.str(sfDir),
+      "queries" -> Harness.obj(rows.map { case (n, c) => n -> c.json }: _*))
     java.nio.file.Files.write(java.nio.file.Paths.get("plans.json"),
       (json + "\n").getBytes("UTF-8"))
 

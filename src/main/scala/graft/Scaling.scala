@@ -231,15 +231,7 @@ object Scaling {
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
                "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALING_RUNS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // SPARK_GRAFT_SCALING_AMPLIFY=8 adds a K×-sf0.1 weak-scaling tier
     // (see [[amplifyCorpus]]) for the linear-claimed queries — the
@@ -254,21 +246,20 @@ object Scaling {
 
     val trends = measure(spark, sfDirs, runs, amplifiedDir = ampDir)
 
-    def fmt(d: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    val json = trends.map { tr =>
-      val pts = tr.points.map(p =>
-        s"""{"sf":"${p.sfDir}","rows":${p.rows},"sec":${fmt(p.seconds)}}""")
-        .mkString("[", ",", "]")
-      s""""${tr.name}":{"table":"${tr.table}","points":$pts,""" +
-        s""""exponent":${fmt(tr.exponent)},"linear_claimed":${tr.linearClaimed}}"""
-    }.mkString("{", ",", "}")
+    import Harness.{arr, obj, str}
+    def fmt(d: Double) = Harness.num(d, 3)
+    val json = obj(trends.map { tr =>
+      tr.name -> obj("table" -> str(tr.table),
+        "points" -> arr(tr.points.map(p => obj("sf" -> str(p.sfDir),
+          "rows" -> p.rows, "sec" -> fmt(p.seconds)))),
+        "exponent" -> fmt(tr.exponent), "linear_claimed" -> tr.linearClaimed)
+    }: _*)
     java.nio.file.Files.write(java.nio.file.Paths.get("scaling.json"),
       (json + "\n").getBytes("UTF-8"))
 
     val md = new StringBuilder
     md ++= "# SCALING — measured time-vs-rows growth\n\n"
-    md ++= s"Protocol: `graft.Scaling` main, local[$cpus], min-of-$runs after an\n"
+    md ++= s"Protocol: `graft.Scaling` main, local[${Harness.cpus}], min-of-$runs after an\n"
     md ++= "untimed warm-up run, per scale factor. Exponent e = ln(t2/t1)/ln(n2/n1)\n"
     md ++= "over the LARGEST SF pair, n = driving-table rows (tables scale\n"
     md ++= "unevenly — see `graft.Scaling` scaladoc). e≈1 linear, e≈2 quadratic;\n"

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
@@ -34,18 +34,6 @@ object StateAudit {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  /** Drain a streaming Dataset through a fresh checkpoint, return it. */
-  private def run[I, O](spark: SparkSession, source: MemoryStream[I],
-                        out: Dataset[O], tag: String): String = {
-    val chk = java.nio.file.Files.createTempDirectory(s"audit-$tag").toString
-    val q = out.writeStream.option("checkpointLocation", chk)
-      .format("memory").queryName(s"audit_${tag}_${System.nanoTime()}")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    chk
-  }
-
   private def stateRows(spark: SparkSession, chk: String,
                         stateVar: Option[String]): (Long, Long) = {
     val r = stateVar.foldLeft(spark.read.format("statestore"))(
@@ -64,8 +52,7 @@ object StateAudit {
     val events = for (s <- 0 until sources; d <- 1 to days; i <- 0 until 4)
       yield StreamingQuota.FileEvent(s"src$s", s"f$i.pdf", 10L,
         ts(f"2024-03-${d}%02d 0$i:00:00"))
-    src.addData(events)
-    val chk = run(spark, src, out, "quota")
+    val chk = Harness.drive(spark, src, out, "quota", Seq(events)).checkpoint
     val (rows, keys) = stateRows(spark, chk, Some("used"))
     Audit("StreamingQuota", "used", events.size, keys, rows,
       sources.toLong * days, "sources × retained days")
@@ -76,22 +63,14 @@ object StateAudit {
     import streaming.StreamingMinhashDedup
     val bands = 32
     val cap = 256
-    def words(seed: Long, n: Int): String = {
-      var s = seed
-      (0 until n).map { _ =>
-        s = s * 6364136223846793005L + 1442695040888963407L
-        "w" + Math.floorMod(s, 500)
-      }.mkString(" ")
-    }
     val docs = (0 until 300).map(i =>
       StreamingMinhashDedup.DocText(i.toLong,
-        words(if (i % 5 == 0) i / 5 else 1000L + i, 30),
+        Harness.words(if (i % 5 == 0) i / 5 else 1000L + i, 30, 500),
         ts("2024-03-05 01:00:00")))
     val src = MemoryStream[StreamingMinhashDedup.DocText](spark)
     val out = StreamingMinhashDedup.detect(src.toDS(), bands = bands,
       maxBucketEntries = cap)
-    src.addData(docs)
-    val chk = run(spark, src, out, "minhash")
+    val chk = Harness.drive(spark, src, out, "minhash", Seq(docs)).checkpoint
     // one packed binary row per bucket since round 11 (each bounded by
     // cap × entry stride) — the row bound is the bucket count itself
     val (rows, keys) = stateRows(spark, chk, Some("bucket"))
@@ -103,23 +82,15 @@ object StateAudit {
   def auditCdcChunkDedup(spark: SparkSession): Audit = {
     import spark.implicits._
     import streaming.{StreamingCdcChunkDedup, StreamingChunkDedup}
-    def words(seed: Long, n: Int): String = {
-      var s = seed
-      (0 until n).map { _ =>
-        s = s * 6364136223846793005L + 1442695040888963407L
-        "w" + Math.floorMod(s, 500)
-      }.mkString(" ")
-    }
     // every 4th doc repeats an earlier text: repeated chunks must fold
     // into the SAME owner rows, so state is bounded by distinct chunks
     val docs = (0 until 200).map(i =>
       StreamingChunkDedup.DocText(i.toLong,
-        words(if (i % 4 == 0) i / 4 else 1000L + i, 40),
+        Harness.words(if (i % 4 == 0) i / 4 else 1000L + i, 40, 500),
         ts("2024-03-05 01:00:00")))
     val src = MemoryStream[StreamingChunkDedup.DocText](spark)
     val out = StreamingCdcChunkDedup.dedup(src.toDS())
-    src.addData(docs)
-    val chk = run(spark, src, out, "cdcchunk")
+    val chk = Harness.drive(spark, src, out, "cdcchunk", Seq(docs)).checkpoint
     val (rows, keys) = stateRows(spark, chk, Some("owner"))
     // the bound is structural: the batch twin's distinct chunk count
     // over the same texts (one owner record per live distinct chunk)
@@ -143,8 +114,7 @@ object StateAudit {
     val reqs = for (d <- 0 until domains; i <- 0 until 10)
       yield StreamingRateLimit.FetchRequest(s"dom$d", s"u$i",
         ts(f"2024-03-05 01:00:${i}%02d"))
-    src.addData(reqs)
-    val chk = run(spark, src, out, "ratelimit")
+    val chk = Harness.drive(spark, src, out, "ratelimit", Seq(reqs)).checkpoint
     val (rows, keys) = stateRows(spark, chk, Some("bucket"))
     Audit("StreamingRateLimit", "bucket", reqs.size, keys, rows,
       domains.toLong, "one fixed-size token bucket per active domain")
@@ -169,8 +139,7 @@ object StateAudit {
     }
     val src = MemoryStream[StreamingExtractCensus.DocBytes](spark)
     val out = StreamingExtractCensus.census(src.toDS())
-    src.addData(docs)
-    val chk = run(spark, src, out, "extractcensus")
+    val chk = Harness.drive(spark, src, out, "extractcensus", Seq(docs)).checkpoint
     val (rows, keys) = stateRows(spark, chk, Some("counts"))
     Audit("StreamingExtractCensus", "counts", docs.size, keys, rows,
       6L, "(format, reason) pairs seen ≤ formats × fixed vocabulary")
@@ -188,8 +157,7 @@ object StateAudit {
     val src = MemoryStream[StreamingSemanticDedup.VecEvent](spark)
     val out = StreamingSemanticDedup.detect(src.toDS(), bits = 4,
       maxCellEntries = cap)
-    src.addData(vecs)
-    val chk = run(spark, src, out, "semantic")
+    val chk = Harness.drive(spark, src, out, "semantic", Seq(vecs)).checkpoint
     val (rows, keys) = stateRows(spark, chk, Some("entries"))
     Audit("StreamingSemanticDedup", "entries", vecs.size, keys, rows,
       keys * cap, "cells touched × LRU cap")
@@ -206,8 +174,7 @@ object StateAudit {
       yield StreamingDrift.MetricValue(s"m$m", (i % 97) / 97.0)
     val src = MemoryStream[StreamingDrift.MetricValue](spark)
     val out = StreamingDrift.monitor(src.toDS(), ref)
-    src.addData(values)
-    val chk = run(spark, src, out, "drift")
+    val chk = Harness.drive(spark, src, out, "drift", Seq(values)).checkpoint
     val (rows, keys) = stateRows(spark, chk, Some("hist"))
     Audit("StreamingDrift", "hist", values.size, keys, rows,
       metrics.toLong * nBuckets, "metrics × histogram buckets")
@@ -222,8 +189,7 @@ object StateAudit {
         if (i % 11 == 0) None else Some(i.toDouble))
     val src = MemoryStream[StreamingProfile.ColValue](spark)
     val out = StreamingProfile.monitor(src.toDS())
-    src.addData(values)
-    val chk = run(spark, src, out, "profile")
+    val chk = Harness.drive(spark, src, out, "profile", Seq(values)).checkpoint
     val (rows, keys) = stateRows(spark, chk, Some("profile"))
     Audit("StreamingProfile", "profile", values.size, keys, rows,
       cols.toLong, "one fixed-size record per column")
@@ -240,8 +206,7 @@ object StateAudit {
     val src = MemoryStream[StreamingHeavyHitters.TokenEvent](spark)
     val out = StreamingHeavyHitters.track(src.toDS(), nBuckets = nBuckets,
       capacity = 64)
-    src.addData(tokens)
-    val chk = run(spark, src, out, "hitters")
+    val chk = Harness.drive(spark, src, out, "hitters", Seq(tokens)).checkpoint
     val (rows, keys) = stateRows(spark, chk, None)
     Audit("StreamingHeavyHitters", "(groupState)", tokens.size, keys, rows,
       nBuckets.toLong, "one SpaceSaving record per shard bucket")
@@ -256,8 +221,7 @@ object StateAudit {
         s"item${(b * 7 + i) % 40}", ts("2024-03-05 01:00:00"))))
     val src = MemoryStream[StreamingAffinity.ItemEvent](spark)
     val out = StreamingAffinity.pairDeltas(src.toDS(), maxBasket = 100)
-    src.addData(events)
-    val chk = run(spark, src, out, "affinity")
+    val chk = Harness.drive(spark, src, out, "affinity", Seq(events)).checkpoint
     val (rows, keys) = stateRows(spark, chk, Some("basket"))
     Audit("StreamingAffinity", "basket", events.size, keys, rows,
       nBaskets.toLong, "one capped item-list record per live basket")
@@ -274,8 +238,7 @@ object StateAudit {
     val points = for (k <- 0 until nKeys; d <- 0 until days)
       yield StreamingCusum.DayPoint(s"series$k", d.toLong,
         200L + (d * 13 + k * 7) % 29 - 14)
-    src.addData(points)
-    val chk = run(spark, src, out, "cusum")
+    val chk = Harness.drive(spark, src, out, "cusum", Seq(points)).checkpoint
     val (rows, keys) = stateRows(spark, chk, Some("cusum"))
     Audit("StreamingCusum", "cusum", points.size, keys, rows,
       nKeys.toLong, "one fixed-size drift account per series key")
@@ -289,24 +252,13 @@ object StateAudit {
     auditAffinity(spark), auditCusum(spark))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    val spark = Harness.session()
     val audits = all(spark)
-
-    val json = audits.map { a =>
-      s""""${a.operator}":{"stateVar":"${a.stateVar}",""" +
-        s""""eventsIn":${a.eventsIn},"groupingKeys":${a.groupingKeys},""" +
-        s""""stateRows":${a.stateRows},"bound":${a.bound},"held":${a.held}}"""
-    }.mkString("{", ",", "}")
+    import Harness.{obj, str}
+    val json = obj(audits.map(a => a.operator -> obj(
+      "stateVar" -> str(a.stateVar), "eventsIn" -> a.eventsIn,
+      "groupingKeys" -> a.groupingKeys, "stateRows" -> a.stateRows,
+      "bound" -> a.bound, "held" -> a.held)): _*)
     java.nio.file.Files.write(java.nio.file.Paths.get("state.json"),
       (json + "\n").getBytes("UTF-8"))
 

@@ -28,6 +28,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * a high-cardinality column precisely so that holds.
   */
 object StreamBench {
+  import Harness.lcg
 
   final case class Bench(operator: String, eventsIn: Long, batches: Int,
                          outRows: Long, wallSec: Double, rowsPerSec: Double,
@@ -40,50 +41,30 @@ object StreamBench {
   private def minute(m: Int): Timestamp =
     new Timestamp(ts("2024-03-05 00:00:00").getTime + m * 60000L)
 
-  /** Drive `out` (derived from `source`) through a fresh checkpoint:
-    * one untimed warm-up batch, then timed batches. */
-  private def drive[I](spark: SparkSession, source: MemoryStream[I],
-                       out: Dataset[_], tag: String,
-                       warmup: Seq[I], batches: Seq[Seq[I]]): Bench = {
-    val safe = tag.replaceAll("[^A-Za-z0-9_]", "_")
-    val chk = java.nio.file.Files.createTempDirectory(s"sbench-$safe").toString
-    val name = s"sbench_${safe}_${System.nanoTime()}"
-    val q = out.writeStream.option("checkpointLocation", chk)
-      .format("memory").queryName(name).outputMode("append").start()
-    source.addData(warmup)
-    q.processAllAvailable()
-    // outRows is the TIMED window's output: snapshot the sink after the
-    // warm-up batch so its rows don't inflate the per-operator output
-    // ratio (they did until round 10 — e.g. BloomDedup showed 36000 out
-    // of 32000 in)
-    val warmRows = spark.table(name).count()
-    val perBatch = new Array[Long](batches.size)
-    val t0 = System.nanoTime()
-    var i = 0
-    batches.foreach { b =>
-      val b0 = System.nanoTime()
-      source.addData(b)
-      q.processAllAvailable()
-      perBatch(i) = (System.nanoTime() - b0) / 1000000L
-      i += 1
-    }
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    val outRows = spark.table(name).count() - warmRows
-    spark.sql(s"DROP TABLE IF EXISTS $name")
+  /** One untimed warm-up batch, then the timed batches. outRows counts
+    * the TIMED window only, so warm-up rows don't inflate the output
+    * ratio (they did until round 10 — e.g. BloomDedup showed 36000 out of
+    * 32000 in). */
+  private def measure[I](spark: SparkSession, source: MemoryStream[I],
+                         out: Dataset[_], tag: String,
+                         warmup: Seq[I], batches: Seq[Seq[I]]): Bench = {
+    val d = Harness.drive(spark, source, out, tag, batches, Seq(warmup))
     val n = batches.map(_.size.toLong).sum
-    Bench(tag, n, batches.size, outRows, wallSec,
-      n / wallSec, perBatch.sum.toDouble / perBatch.length, perBatch.max)
+    val wallSec = d.batchNanos.sum / 1e9
+    Bench(tag, n, batches.size, d.outRows, wallSec, n / wallSec,
+      d.batchNanos.sum / 1e6 / batches.size, d.batchNanos.max / 1000000L)
   }
 
-  // deterministic word/number streams (no RNG — replay-stable workloads)
-  private def lcg(seed: Long): Long =
-    seed * 6364136223846793005L + 1442695040888963407L
-  private def words(seed: Long, n: Int): String = {
-    var s = seed
-    (0 until n).map { _ =>
-      s = lcg(s); "w" + Math.floorMod(s, 5000)
-    }.mkString(" ")
+  private def words(seed: Long, n: Int) = Harness.words(seed, n, 5000)
+
+  /** streambench.json: one object per operator. */
+  def json(benches: Seq[Bench]): String = {
+    import Harness.{num, obj}
+    obj(benches.map(b => b.operator -> obj("eventsIn" -> b.eventsIn,
+      "batches" -> b.batches, "outRows" -> b.outRows,
+      "wallSec" -> num(b.wallSec, 3), "rowsPerSec" -> num(b.rowsPerSec, 0),
+      "meanBatchMs" -> num(b.meanBatchMs, 1),
+      "maxBatchMs" -> b.maxBatchMs)): _*)
   }
 
   def benchTracker(spark: SparkSession, perBatch: Int, nBatches: Int): Bench = {
@@ -99,7 +80,7 @@ object StreamBench {
                else if (id % 10 == 0) "FAILED" else "PROCESSED"
       TransferTracker.StatusEvent(s"corr$id", st, minute(b))
     }
-    drive(spark, src, out, "TransferTracker", batch(-1),
+    measure(spark, src, out, "TransferTracker", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -118,7 +99,7 @@ object StreamBench {
         (if (i % 16 == 0) (b - 1).toLong * perBatch + i + 1 else id))
       StreamingDedup.DocEvent(id, h, minute(b))
     }
-    drive(spark, src, out, "StreamingDedup(simhash)", batch(-1),
+    measure(spark, src, out, "StreamingDedup(simhash)", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -148,7 +129,7 @@ object StreamBench {
     }
     val tag = if (numHashes == 128 && bands == 32) "StreamingMinhashDedup"
       else s"StreamingMinhashDedup(${numHashes}x$bands)"
-    drive(spark, src, out, tag, batch(-1),
+    measure(spark, src, out, tag, batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -169,7 +150,7 @@ object StreamBench {
                  else id
       StreamingChunkDedup.DocText(id, text(seed), minute(b))
     }
-    drive(spark, src, out, "StreamingCdcChunkDedup", batch(-1),
+    measure(spark, src, out, "StreamingCdcChunkDedup", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -185,7 +166,7 @@ object StreamBench {
       StreamingRateLimit.FetchRequest(s"dom${i % nDomains}",
         s"u${b.toLong * perBatch + i}", minute(b))
     }
-    drive(spark, src, out, "StreamingRateLimit", batch(-1),
+    measure(spark, src, out, "StreamingRateLimit", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -200,7 +181,7 @@ object StreamBench {
       StreamingBloomDedup.DocKey(id, "k" + (if (i % 4 == 0) id / 4 else id),
         minute(b))
     }
-    drive(spark, src, out, "StreamingBloomDedup", batch(-1),
+    measure(spark, src, out, "StreamingBloomDedup", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -215,7 +196,7 @@ object StreamBench {
       val t = Math.floorMod(lcg(b.toLong * perBatch + i), 1000)
       StreamingHeavyHitters.TokenEvent("t" + (t * t / 1000), minute(b))
     }
-    drive(spark, src, out, "StreamingHeavyHitters", batch(-1),
+    measure(spark, src, out, "StreamingHeavyHitters", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -229,7 +210,7 @@ object StreamBench {
       StreamingQuota.FileEvent("src" + i % 200, s"f$b-$i.pdf",
         1000L + i % 97, minute(b))
     }
-    drive(spark, src, out, "StreamingQuota", batch(-1),
+    measure(spark, src, out, "StreamingQuota", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -245,7 +226,7 @@ object StreamBench {
       // once the next batch's watermark passes them
       StreamingSessions.UserEvent(i % 500L, (i % 89) / 10.0, minute(b * 7))
     }
-    drive(spark, src, out, "StreamingSessions", batch(-1),
+    measure(spark, src, out, "StreamingSessions", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -260,7 +241,7 @@ object StreamBench {
       StreamingCdcView.CdcOp(i % 1000L, minute(b), seq,
         if (i % 20 == 0) "d" else "u", (seq % 997).toDouble)
     }
-    drive(spark, src, out, "StreamingCdcView", batch(-1),
+    measure(spark, src, out, "StreamingCdcView", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -277,7 +258,7 @@ object StreamBench {
       StreamingAffinity.ItemEvent(basket,
         "item" + Math.floorMod(lcg(i.toLong), 60), minute(b))
     }
-    drive(spark, src, out, "StreamingAffinity", batch(-1),
+    measure(spark, src, out, "StreamingAffinity", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -298,7 +279,7 @@ object StreamBench {
         (b + 1).toLong * 2 + i / nKeys,
         200L + Math.floorMod(lcg(b.toLong * perBatch + i), 61) - 30)
     }
-    drive(spark, src, out, "StreamingCusum", batch(-2),
+    measure(spark, src, out, "StreamingCusum", batch(-2),
       (0 until nBatches).map(batch))
   }
 
@@ -321,7 +302,7 @@ object StreamBench {
       }
       StreamingExtractCensus.DocBytes(id, bytes)
     }
-    drive(spark, src, out, "StreamingExtractCensus", batch(-1),
+    measure(spark, src, out, "StreamingExtractCensus", batch(-1),
       (0 until nBatches).map(batch))
   }
 
@@ -344,34 +325,18 @@ object StreamBench {
       benchCusum(spark, perBatch, nBatches))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    val spark = Harness.session()
     val benches = all(spark, perBatch = 4000, nBatches = 8)
-
-    val json = benches.map { b =>
-      f""""${b.operator}":{"eventsIn":${b.eventsIn},"batches":${b.batches},""" +
-        f""""outRows":${b.outRows},"wallSec":${b.wallSec}%.3f,""" +
-        f""""rowsPerSec":${b.rowsPerSec}%.0f,"meanBatchMs":${b.meanBatchMs}%.1f,""" +
-        f""""maxBatchMs":${b.maxBatchMs}}"""
-    }.mkString("{", ",", "}")
     java.nio.file.Files.write(java.nio.file.Paths.get("streambench.json"),
-      (json + "\n").getBytes("UTF-8"))
+      (json(benches) + "\n").getBytes("UTF-8"))
 
     val md = new StringBuilder
     md ++= "# STREAMBENCH — measured streaming throughput and latency\n\n"
     md ++= "Protocol: `graft.StreamBench` main — each stateful operator runs a\n"
     md ++= "deterministic generated workload (8 timed micro-batches of 4000\n"
     md ++= "events after one untimed warm-up batch) through a fresh RocksDB\n"
-    md ++= "checkpoint on local[8]. rows/sec = timed events / timed wall;\n"
+    md ++= s"checkpoint on local[${Harness.cpus}]. rows/sec = timed events / " +
+      "timed wall;\n"
     md ++= "batch latency = wall per addData->processAllAvailable cycle\n"
     md ++= "(includes Spark's no-data watermark batches — real streaming\n"
     md ++= "cost). Event times advance one minute per batch so watermarks\n"

@@ -28,29 +28,14 @@ object ExtQueries {
     * recomputes under each regime rather than reusing across them.
     */
   private[analytics] object SharedClusterPass {
-    private val cache =
-      new java.util.concurrent.ConcurrentHashMap[String,
-        org.apache.spark.sql.DataFrame]()
     def clusterTable(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): org.apache.spark.sql.DataFrame = {
-      // keyed by applicationId, NOT identityHashCode: an identity hash
-      // is reusable after GC, so a later session could be served a
-      // checkpointed DataFrame whose RDD belongs to a STOPPED context
-      // ("SparkContext has been shutdown" at execution). applicationId
-      // is unique per context instance; stale entries are never hit and
-      // the residue is bounded by sessions-per-JVM.
-      val key = Seq(spark.sparkContext.applicationId, dir,
-        spark.conf.get("spark.sql.shuffle.partitions", ""),
-        spark.conf.getOption("graft.test.inputPartitions").getOrElse(""))
-        .mkString("|")
-      cache.computeIfAbsent(key, _ => {
-        val t = new Tables(spark, dir)
-        val pairs = Dedup.minhashPairs(t.documents, col("doc_id"),
-            col("text"), n = 3, threshold = 0.8)
+                     dir: String): org.apache.spark.sql.DataFrame =
+      FixtureCache.materialized(spark, "clusterTable", dir) {
+        val pairs = Dedup.minhashPairs(new Tables(spark, dir).documents,
+            col("doc_id"), col("text"), n = 3, threshold = 0.8)
           .select(col("id_a"), col("id_b"))
-        Dedup.clusters(pairs).localCheckpoint(true)
-      })
-    }
+        Dedup.clusters(pairs)
+      }
   }
 
   private val shingleOracle = """

@@ -23,31 +23,18 @@ import org.apache.spark.sql.functions._
   * instead of recompute.
   */
 private[analytics] object SharedGraph {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Keyed by applicationId (not identity hash) + corpus + partition
-    * regime — the SharedClusterPass key discipline: stale contexts are
-    * never hit, InvarianceSpec's re-partitioned runs get their own
-    * build.
-    */
-  def coPurchasePairs(spark: SparkSession, dir: String): DataFrame = {
-    val key = Seq(spark.sparkContext.applicationId, dir,
-      spark.conf.get("spark.sql.shuffle.partitions", ""),
-      spark.conf.getOption("graft.test.inputPartitions").getOrElse(""))
-      .mkString("|")
-    cache.computeIfAbsent(key, _ => {
-      val t = new graft.Tables(spark, dir)
-      t.lineitem
+  /** Cached per session, corpus and partition regime ([[FixtureCache]]):
+    * InvarianceSpec's re-partitioned runs get their own build. */
+  def coPurchasePairs(spark: SparkSession, dir: String): DataFrame =
+    FixtureCache.materialized(spark, "coPurchasePairs", dir) {
+      new graft.Tables(spark, dir).lineitem
         .groupBy(col("l_orderkey"))
         .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
         .select(explode(
           graft.functions.SketchFns.pair_structs(col("ps"))).as("p"))
         .groupBy(col("p.id_a").as("a"), col("p.id_b").as("b"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
-    })
-  }
+    }
 
   /** The distinct undirected pair set (src < dst). */
   def undirected(spark: SparkSession, dir: String): DataFrame =

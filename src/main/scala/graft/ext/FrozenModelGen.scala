@@ -1,7 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-time generator for [[FrozenModels]]: runs the REAL trainers
   * ([[Similarity.fitCellCentroids]], [[Similarity.fitPqCodebooks]]) once
   * over a testdata SF dir, quantizes the fitted centroids to integer
@@ -15,13 +13,7 @@ import org.apache.spark.sql.SparkSession
 object FrozenModelGen {
   def main(args: Array[String]): Unit = {
     val Array(sfDir) = args
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     val emb = new graft.Tables(spark, sfDir).embeddings
 
     def q(x: Double): Long = math.floor(x * 10000d + 0.5d).toLong

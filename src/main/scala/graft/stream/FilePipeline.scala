@@ -131,16 +131,6 @@ object FilePipeline {
     Encoders.tuple(Encoders.product[PipelineRecord], Encoders.BINARY)
   private lazy val enrichedRecord = Encoders.product[EnrichedRecord]
 
-  /** Splits enriched output into (succeeded, failed) — the error channel
-    * is a column, so these are two filters over one Dataset; each action
-    * on them runs the conversion again unless the caller persists it.
-    * [[runBatch]] does not split: its object projection routes by the
-    * error column in the same pass.
-    */
-  def route(enriched: Dataset[EnrichedRecord])
-      : (Dataset[EnrichedRecord], Dataset[EnrichedRecord]) =
-    (enriched.filter(_.error.isEmpty), enriched.filter(_.error.nonEmpty))
-
   /** E4: expiry branch — rows whose event time lags the batch's max by
     * more than `expiry` go to the expired side: (live, expired). The max
     * is a broadcast single-row aggregate, not a driver collect; in the

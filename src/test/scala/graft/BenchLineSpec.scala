@@ -6,29 +6,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * the driver captures only the console tail, and the per-query map
   * once outgrew it (round 16, 239 queries — the round-over-round
   * comparison was lost). The 258-query round-17 line (3.7 KB) parsed,
-  * so 4 KB is a measured-safe budget; this spec recomputes the
-  * worst-case line for the CURRENT registry at every build, failing
-  * BEFORE a build round silently grows the line past the capture
-  * window.
+  * so 4 KB is a measured-safe budget; this spec builds the worst-case
+  * line for the CURRENT registry with Bench's own renderer at every
+  * build, failing BEFORE a registry change silently grows the line past
+  * the capture window.
   */
 class BenchLineSpec extends AnyFunSuite {
 
   test("bench stdout line stays under the 4 KB capture budget") {
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    def shortId(n: String): String = n.takeWhile(_ != '_')
-    assert(names.map(shortId).distinct.size == names.size,
-      "duplicate short query ids — stdout JSON keys would collide")
-    // worst realistic width: every query at 100+ seconds (8 chars at
-    // %.4f), the longest sf dir and out path the driver uses
-    val qsShort = names.map(n => "\"" + shortId(n) + "\":100.000")
-      .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":99999.9999,"unit":"sec",""" +
-      s""""queries":$qsShort,"sf":"/root/testdata/sf0.1","runs":3,""" +
-      s""""aggregation":"min","names":"short ids; full map in """ +
-      s"""bench_out.json"}"""
+    // worst realistic width: every query at 100+ seconds (7 chars at 3
+    // decimals), the longest sf dir and out path the driver uses
+    val times = SparkEntry.queries.keys.toSeq.sorted
+      .map(_ -> Seq(100.0, 100.0, 100.0))
+    val line = Bench.stdoutLine("/root/testdata/sf0.1", 3, "bench_out.json",
+      times)
     assert(line.length <= 4096,
-      s"bench stdout line would be ${line.length} B for ${names.size} " +
+      s"bench stdout line would be ${line.length} B for ${times.size} " +
         "queries — over the 4096 B capture budget; shrink the per-query " +
-        "precision in Bench.jnum or shorten ids")
+        "precision in Bench.stdoutLine or shorten ids")
   }
 }

@@ -214,14 +214,13 @@ class ExtractingDoclingSpec extends AnyFunSuite {
         // across suites in one JVM — the default "docling" name may
         // arrive OPEN from another spec's failure scenarios
         breakerName = "docling-extract-spec"))
-    val (ok, failed) = FilePipeline.route(enriched)
-    val okRows = ok.collect().map(r => r.fileName -> r.doclingResult.get).toMap
+    val (failRows, ok) = enriched.collect().partition(_.error.nonEmpty)
+    val okRows = ok.map(r => r.fileName -> r.doclingResult.get).toMap
     assert(okRows.keySet == Set("a.pdf", "b.docx"))
     assert(ExtractingDocling.stringField(okRows("a.pdf"), "text")
       .contains("Real (pdf) text: \"quoted\""))
     assert(ExtractingDocling.stringField(okRows("b.docx"), "text")
       .contains("Real docx & text"))
-    val failRows = failed.collect()
     assert(failRows.length == 1 && failRows(0).fileName == "raw.bin")
     assert(failRows(0).attempts == 3 &&
       failRows(0).error.exists(_.contains("unsupported format")))

@@ -42,20 +42,6 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  /** transformWithState requires the RocksDB provider; scope it to the
-    * block (the StateIntrospectionSpec discipline). */
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Parquet FILE sink — the memory sink refuses checkpoint recovery
     * (it is not fault-tolerant), and the file sink's `_spark_metadata`
     * manifest is itself part of the guarantee under test: files from a
@@ -95,7 +81,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("CdcView: stop after batch 2, restart from the checkpoint — " +
        "state parity with an uninterrupted run, no dup/lost output") {
-    withRocksDb {
+    RocksDbTestSupport.withRocksDb(spark) {
       // reference: uninterrupted run over all three batches
       val refChk = java.nio.file.Files
         .createTempDirectory("rec-cdc-ref").toString
@@ -148,7 +134,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("Cusum: restart from the checkpoint — the drift account resumes " +
        "mid-accumulation, alarms and state match an uninterrupted run") {
-    withRocksDb {
+    RocksDbTestSupport.withRocksDb(spark) {
       def out(src: MemoryStream[StreamingCusum.DayPoint]) =
         StreamingCusum.detect(src.toDS(), mu0Cents = 200L,
           slackCents = 20L, threshCents = 500L).toDF()
@@ -202,7 +188,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("Quota: restart from the checkpoint — MapState ledger parity, " +
        "admissions neither duplicated nor lost") {
-    withRocksDb {
+    RocksDbTestSupport.withRocksDb(spark) {
       def out(src: MemoryStream[StreamingQuota.FileEvent]) =
         StreamingQuota.enforce(src.toDS(), quotaBytes = 900L,
           retainDays = 7).toDF()
@@ -259,7 +245,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("MinhashDedup: restart from the checkpoint — packed-bucket state " +
        "parity, cross-restart duplicates still detected exactly once") {
-    withRocksDb {
+    RocksDbTestSupport.withRocksDb(spark) {
       def out(src: MemoryStream[StreamingMinhashDedup.DocText]) =
         StreamingMinhashDedup.detect(src.toDS(), n = 3, threshold = 0.9).toDF()
 
@@ -375,7 +361,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     import graft.ext.{Multimodal, UrlOps, Warc}
     import graft.sinks.AtomicPublish
     import org.apache.spark.sql.functions.{to_timestamp, xxhash64, concat}
-    withRocksDb {
+    RocksDbTestSupport.withRocksDb(spark) {
       val table = java.nio.file.Files
         .createTempDirectory("rec-web-table").toString
       val chk = java.nio.file.Files

@@ -13,19 +13,8 @@ import graft.{StateAudit, TestSpark}
 class StateAuditSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("profile state: exactly one record per column") {
-    withRocksDb {
+    RocksDbTestSupport.withRocksDb(spark) {
       val a = StateAudit.auditProfile(spark)
       assert(a.held, s"bound violated: $a")
       assert(a.stateRows == 4, s"expected 4 column records: $a")
@@ -33,7 +22,7 @@ class StateAuditSpec extends AnyFunSuite {
   }
 
   test("drift state: bounded by metrics × histogram buckets") {
-    withRocksDb {
+    RocksDbTestSupport.withRocksDb(spark) {
       val a = StateAudit.auditDrift(spark)
       assert(a.held, s"bound violated: $a")
       assert(a.groupingKeys == 3, s"expected 3 metric keys: $a")

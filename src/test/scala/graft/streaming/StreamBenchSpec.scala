@@ -15,19 +15,8 @@ import graft.{StreamBench, TestSpark}
 class StreamBenchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("CdcView sustains order-of-magnitude throughput") {
-    withRocksDb {
+    RocksDbTestSupport.withRocksDb(spark) {
       val b = StreamBench.benchCdcView(spark, perBatch = 1000, nBatches = 4)
       assert(b.eventsIn == 4000 && b.outRows > 0)
       assert(b.rowsPerSec > 200, s"throughput floor violated: $b")
@@ -36,7 +25,7 @@ class StreamBenchSpec extends AnyFunSuite {
   }
 
   test("Bloom dedup sustains order-of-magnitude throughput") {
-    withRocksDb {
+    RocksDbTestSupport.withRocksDb(spark) {
       val b = StreamBench.benchBloomDedup(spark, perBatch = 1000,
         nBatches = 4)
       assert(b.eventsIn == 4000 && b.outRows > 0)

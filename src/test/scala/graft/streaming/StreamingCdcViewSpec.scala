@@ -20,19 +20,8 @@ class StreamingCdcViewSpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  private def run(batches: Seq[CdcOp]*): Seq[ViewChange] = withRocksDb {
+  private def run(batches: Seq[CdcOp]*): Seq[ViewChange] =
+    RocksDbTestSupport.withRocksDb(spark) {
     val source = MemoryStream[CdcOp](spark)
     val out = StreamingCdcView.materialize(source.toDS())
     val name = s"cdc_view_${System.nanoTime()}"

@@ -17,19 +17,8 @@ class StreamingCusumSpec extends AnyFunSuite {
 
   private val MU = 200L; private val SLACK = 20L; private val THRESH = 600L
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  private def run(batches: Seq[DayPoint]*): Seq[CusumPoint] = withRocksDb {
+  private def run(batches: Seq[DayPoint]*): Seq[CusumPoint] =
+    RocksDbTestSupport.withRocksDb(spark) {
     val source = MemoryStream[DayPoint](spark)
     val out = StreamingCusum.detect(source.toDS(), MU, SLACK, THRESH)
     val name = s"cusum_out_${System.nanoTime()}"
@@ -136,7 +125,7 @@ class StreamingCusumSpec extends AnyFunSuite {
 
   test("CUSUM alarms chain into held-for; the chained query recovers " +
        "from its checkpoint") {
-    withRocksDb {
+    RocksDbTestSupport.withRocksDb(spark) {
       import StreamingHeldAlert.Transition
       // the alarm days the composition must react to, from the batch twin
       val alarmDays = batchTwin(burst).filter(_.alarmUp).map(_.dayIdx)

@@ -18,19 +18,8 @@ class StreamingDriftSpec extends AnyFunSuite {
   private val ref = Reference(0.0, 100.0,
     Array(10L, 20L, 30L, 20L, 10L, 5L, 3L, 1L, 0L, 1L))
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  private def run(batches: Seq[MetricValue]*): Seq[DriftScore] = withRocksDb {
+  private def run(batches: Seq[MetricValue]*): Seq[DriftScore] =
+    RocksDbTestSupport.withRocksDb(spark) {
     val source = MemoryStream[MetricValue](spark)
     val out = StreamingDrift.monitor(source.toDS(), ref)
     val name = s"drift_out_${System.nanoTime()}"

@@ -16,18 +16,6 @@ class StreamingExtractCensusSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def corpus(n: Int): Seq[DocBytes] = (0 until n).map { i =>
     val b: Array[Byte] = (i % 7) match {
       case 0 | 5 => s"plain text $i".getBytes("UTF-8")
@@ -40,7 +28,8 @@ class StreamingExtractCensusSpec extends AnyFunSuite {
     DocBytes(i.toLong, b)
   }
 
-  private def run(batches: Seq[DocBytes]*): Seq[CensusRow] = withRocksDb {
+  private def run(batches: Seq[DocBytes]*): Seq[CensusRow] =
+    RocksDbTestSupport.withRocksDb(spark) {
     val source = MemoryStream[DocBytes](spark)
     val out = StreamingExtractCensus.census(source.toDS())
     val name = s"census_out_${System.nanoTime()}"

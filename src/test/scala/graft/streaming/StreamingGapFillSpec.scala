@@ -13,20 +13,9 @@ class StreamingGapFillSpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def run(tickSeconds: Long, maxFillTicks: Int,
-                  batches: Seq[Reading]*): Seq[Tick] = withRocksDb {
+                  batches: Seq[Reading]*): Seq[Tick] =
+    RocksDbTestSupport.withRocksDb(spark) {
     val source = MemoryStream[Reading](spark)
     val out = StreamingGapFill.fill(source.toDS(), tickSeconds, maxFillTicks)
     val name = s"gapfill_out_${System.nanoTime()}"

@@ -15,19 +15,8 @@ class StreamingProfileSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  private def run(batches: Seq[ColValue]*): Seq[ColProfile] = withRocksDb {
+  private def run(batches: Seq[ColValue]*): Seq[ColProfile] =
+    RocksDbTestSupport.withRocksDb(spark) {
     val source = MemoryStream[ColValue](spark)
     val out = StreamingProfile.monitor(source.toDS())
     val name = s"prof_out_${System.nanoTime()}"

@@ -13,24 +13,8 @@ class StreamingQuotaSpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  /** transformWithState is RocksDB-only; scope the provider to the
-    * query and restore the default so the other streaming suites keep
-    * running on the HDFS-backed provider they were written against.
-    */
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def run(quota: Long, retainDays: Int, batches: Seq[FileEvent]*)
-      : Seq[Admission] = withRocksDb {
+      : Seq[Admission] = RocksDbTestSupport.withRocksDb(spark) {
     val source = MemoryStream[FileEvent](spark)
     val out = StreamingQuota.enforce(source.toDS(), quota, retainDays)
     val name = s"quota_out_${System.nanoTime()}"
