@@ -15,12 +15,12 @@ object Harness {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** `local[cpus]` with one shuffle partition per core, UTC, no UI, the
-    * RocksDB state store (transformWithState needs it) and log level
-    * ERROR.
+  /** `local[cpus]` with one shuffle partition per core, UTC, no UI and
+    * the RocksDB state store (transformWithState needs it). Log level
+    * ERROR comes from `log4j2.properties`, so it holds from JVM start.
     */
-  def session(): SparkSession = {
-    val spark = SparkSession.builder()
+  def session(): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
@@ -28,9 +28,6 @@ object Harness {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
 
   /** The registered names SPARK_GRAFT_ONLY selects, sorted: a
     * comma-separated list matched on the full name or on the short id

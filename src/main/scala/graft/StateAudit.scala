@@ -35,9 +35,9 @@ object StateAudit {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private def stateRows(spark: SparkSession, chk: String,
-                        stateVar: Option[String]): (Long, Long) = {
-    val r = stateVar.foldLeft(spark.read.format("statestore"))(
-      (b, v) => b.option("stateVarName", v)).load(chk)
+                        stateVar: String): (Long, Long) = {
+    val r = spark.read.format("statestore")
+      .option("stateVarName", stateVar).load(chk)
     (r.count(), r.select(col("key")).distinct().count())
   }
 
@@ -53,7 +53,7 @@ object StateAudit {
       yield StreamingQuota.FileEvent(s"src$s", s"f$i.pdf", 10L,
         ts(f"2024-03-${d}%02d 0$i:00:00"))
     val chk = Harness.drive(spark, src, out, "quota", Seq(events)).checkpoint
-    val (rows, keys) = stateRows(spark, chk, Some("used"))
+    val (rows, keys) = stateRows(spark, chk, "used")
     Audit("StreamingQuota", "used", events.size, keys, rows,
       sources.toLong * days, "sources × retained days")
   }
@@ -73,7 +73,7 @@ object StateAudit {
     val chk = Harness.drive(spark, src, out, "minhash", Seq(docs)).checkpoint
     // one packed binary row per bucket since round 11 (each bounded by
     // cap × entry stride) — the row bound is the bucket count itself
-    val (rows, keys) = stateRows(spark, chk, Some("bucket"))
+    val (rows, keys) = stateRows(spark, chk, "bucket")
     Audit("StreamingMinhashDedup", "bucket", docs.size, keys, rows,
       math.min(docs.size.toLong * bands, keys),
       "min(docs × bands, buckets touched) — one packed row per bucket")
@@ -91,7 +91,7 @@ object StateAudit {
     val src = MemoryStream[StreamingChunkDedup.DocText](spark)
     val out = StreamingCdcChunkDedup.dedup(src.toDS())
     val chk = Harness.drive(spark, src, out, "cdcchunk", Seq(docs)).checkpoint
-    val (rows, keys) = stateRows(spark, chk, Some("owner"))
+    val (rows, keys) = stateRows(spark, chk, "owner")
     // the bound is structural: the batch twin's distinct chunk count
     // over the same texts (one owner record per live distinct chunk)
     val distinctChunks = graft.ext.Dedup.cdcChunks(
@@ -115,7 +115,7 @@ object StateAudit {
       yield StreamingRateLimit.FetchRequest(s"dom$d", s"u$i",
         ts(f"2024-03-05 01:00:${i}%02d"))
     val chk = Harness.drive(spark, src, out, "ratelimit", Seq(reqs)).checkpoint
-    val (rows, keys) = stateRows(spark, chk, Some("bucket"))
+    val (rows, keys) = stateRows(spark, chk, "bucket")
     Audit("StreamingRateLimit", "bucket", reqs.size, keys, rows,
       domains.toLong, "one fixed-size token bucket per active domain")
   }
@@ -140,7 +140,7 @@ object StateAudit {
     val src = MemoryStream[StreamingExtractCensus.DocBytes](spark)
     val out = StreamingExtractCensus.census(src.toDS())
     val chk = Harness.drive(spark, src, out, "extractcensus", Seq(docs)).checkpoint
-    val (rows, keys) = stateRows(spark, chk, Some("counts"))
+    val (rows, keys) = stateRows(spark, chk, "counts")
     Audit("StreamingExtractCensus", "counts", docs.size, keys, rows,
       6L, "(format, reason) pairs seen ≤ formats × fixed vocabulary")
   }
@@ -158,7 +158,7 @@ object StateAudit {
     val out = StreamingSemanticDedup.detect(src.toDS(), bits = 4,
       maxCellEntries = cap)
     val chk = Harness.drive(spark, src, out, "semantic", Seq(vecs)).checkpoint
-    val (rows, keys) = stateRows(spark, chk, Some("entries"))
+    val (rows, keys) = stateRows(spark, chk, "entries")
     Audit("StreamingSemanticDedup", "entries", vecs.size, keys, rows,
       keys * cap, "cells touched × LRU cap")
   }
@@ -175,7 +175,7 @@ object StateAudit {
     val src = MemoryStream[StreamingDrift.MetricValue](spark)
     val out = StreamingDrift.monitor(src.toDS(), ref)
     val chk = Harness.drive(spark, src, out, "drift", Seq(values)).checkpoint
-    val (rows, keys) = stateRows(spark, chk, Some("hist"))
+    val (rows, keys) = stateRows(spark, chk, "hist")
     Audit("StreamingDrift", "hist", values.size, keys, rows,
       metrics.toLong * nBuckets, "metrics × histogram buckets")
   }
@@ -190,7 +190,7 @@ object StateAudit {
     val src = MemoryStream[StreamingProfile.ColValue](spark)
     val out = StreamingProfile.monitor(src.toDS())
     val chk = Harness.drive(spark, src, out, "profile", Seq(values)).checkpoint
-    val (rows, keys) = stateRows(spark, chk, Some("profile"))
+    val (rows, keys) = stateRows(spark, chk, "profile")
     Audit("StreamingProfile", "profile", values.size, keys, rows,
       cols.toLong, "one fixed-size record per column")
   }
@@ -207,8 +207,8 @@ object StateAudit {
     val out = StreamingHeavyHitters.track(src.toDS(), nBuckets = nBuckets,
       capacity = 64)
     val chk = Harness.drive(spark, src, out, "hitters", Seq(tokens)).checkpoint
-    val (rows, keys) = stateRows(spark, chk, None)
-    Audit("StreamingHeavyHitters", "(groupState)", tokens.size, keys, rows,
+    val (rows, keys) = stateRows(spark, chk, "counters")
+    Audit("StreamingHeavyHitters", "counters", tokens.size, keys, rows,
       nBuckets.toLong, "one SpaceSaving record per shard bucket")
   }
 
@@ -222,7 +222,7 @@ object StateAudit {
     val src = MemoryStream[StreamingAffinity.ItemEvent](spark)
     val out = StreamingAffinity.pairDeltas(src.toDS(), maxBasket = 100)
     val chk = Harness.drive(spark, src, out, "affinity", Seq(events)).checkpoint
-    val (rows, keys) = stateRows(spark, chk, Some("basket"))
+    val (rows, keys) = stateRows(spark, chk, "basket")
     Audit("StreamingAffinity", "basket", events.size, keys, rows,
       nBaskets.toLong, "one capped item-list record per live basket")
   }
@@ -239,7 +239,7 @@ object StateAudit {
       yield StreamingCusum.DayPoint(s"series$k", d.toLong,
         200L + (d * 13 + k * 7) % 29 - 14)
     val chk = Harness.drive(spark, src, out, "cusum", Seq(points)).checkpoint
-    val (rows, keys) = stateRows(spark, chk, Some("cusum"))
+    val (rows, keys) = stateRows(spark, chk, "cusum")
     Audit("StreamingCusum", "cusum", points.size, keys, rows,
       nKeys.toLong, "one fixed-size drift account per series key")
   }
@@ -270,7 +270,7 @@ object StateAudit {
     md ++= "source (the runbook path pinned by StateIntrospectionSpec) and the\n"
     md ++= "row count is compared to the structural bound the operator's\n"
     md ++= "scaladoc claims. `rows` counts state-store rows (MapState: one per\n"
-    md ++= "entry; ValueState/GroupState: one per grouping key). A violated\n"
+    md ++= "entry; ValueState: one per grouping key). A violated\n"
     md ++= "bound exits nonzero; StateAuditSpec keeps two audits in `sbt test`.\n\n"
     md ++= "| operator | state var | events in | keys | state rows | bound | formula | held |\n"
     md ++= "|---|---|---|---|---|---|---|---|\n"

@@ -111,12 +111,11 @@ final class ExtractingDocling(fetch: String => Array[Byte])
     // (k8s/configmaps.yaml:20-26, table_structure: true)
     val tablesJson = tables.map { t =>
       "{\"rows\":[" + t.map(row =>
-        row.map(c => "\"" + ExtractingDocling.jsonEscape(c) + "\"")
-          .mkString("[", ",", "]")).mkString(",") + "]}"
+        row.map(graft.Harness.str).mkString("[", ",", "]")).mkString(",") + "]}"
     }.mkString("[", ",", "]")
     s"""{"schema":"docling/v1","format":"$format","pages":$pages,""" +
       s""""units":$units,"tables":$tablesJson,""" +
-      s""""text":"${ExtractingDocling.jsonEscape(text)}"}"""
+      s""""text":${graft.Harness.str(text)}}"""
   }
 }
 
@@ -163,22 +162,6 @@ object ExtractingDocling {
       i += 1
     }
     None // unterminated string
-  }
-
-  /** JSON string escape: quote, backslash, and all control chars. */
-  private[enrich] def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' =>
-        sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
   }
 }
 

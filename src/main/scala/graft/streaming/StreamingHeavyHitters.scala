@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
+  TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Streaming heavy hitters — the online twin of the batch exact top-k
   * (q58): SpaceSaving counters (Metwally et al.) over a token stream,
@@ -59,6 +60,50 @@ object StreamingHeavyHitters {
   final case class HitterSnapshot(bucket: Int, token: String, count: Long,
                                   err: Long, eventTime: Timestamp)
 
+  private final class HittersProcessor(capacity: Int)
+      extends StatefulProcessor[Int, (Int, String, Timestamp), HitterSnapshot] {
+
+    @transient private var state: ValueState[BucketCounters] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[BucketCounters]("counters",
+        Encoders.product[BucketCounters], TTLConfig.NONE)
+
+    override def handleInputRows(bucket: Int,
+                                 rows: Iterator[(Int, String, Timestamp)],
+                                 timers: TimerValues): Iterator[HitterSnapshot] = {
+      var counters = if (state.exists()) state.get().counters else Nil
+      val touched = scala.collection.mutable.Map.empty[String, Timestamp]
+      rows.toSeq.sortBy(r => (r._3.getTime, r._2)).foreach {
+        case (_, token, ts) =>
+          counters.find(_.token == token) match {
+            case Some(c) =>
+              counters = Counter(token, c.count + 1, c.err) ::
+                counters.filterNot(_.token == token)
+            case None if counters.length < capacity =>
+              counters = Counter(token, 1L, 0L) :: counters
+            case None =>
+              // evict the deterministic minimum — among equal
+              // counts, the most overestimated (largest err) first;
+              // the newcomer inherits the count as the classic
+              // overestimate
+              val m = counters.minBy(c => (c.count, -c.err, c.token))
+              counters = Counter(token, m.count + 1, m.count) ::
+                counters.filterNot(_ eq m)
+          }
+          touched.update(token, ts)
+      }
+      state.update(BucketCounters(counters))
+      // emit only counters that survived the batch: at most
+      // `capacity` rows, carrying their final (count, err)
+      counters.reverseIterator.flatMap { c =>
+        touched.get(c.token).map(t =>
+          HitterSnapshot(bucket, c.token, c.count, c.err, t))
+      }
+    }
+  }
+
+  /** Requires the RocksDB state store provider (transformWithState). */
   def track(tokens: Dataset[TokenEvent], nBuckets: Int = 16,
             capacity: Int = 64): Dataset[HitterSnapshot] = {
     require(nBuckets >= 1, "nBuckets must be >= 1")
@@ -71,41 +116,10 @@ object StreamingHeavyHitters {
         pmod(xxhash64(col("token")), lit(nBuckets.toLong)).cast("int"))
       .select(col("bucket"), col("token"), col("eventTime"))
       .as[(Int, String, Timestamp)]
-    implicit val eo = Encoders.product[HitterSnapshot]
-    implicit val es = Encoders.product[BucketCounters]
+    implicit val eo: Encoder[HitterSnapshot] = Encoders.product[HitterSnapshot]
     keyed
       .groupByKey(_._1)
-      .flatMapGroupsWithState[BucketCounters, HitterSnapshot](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (bucket, rows, state: GroupState[BucketCounters]) =>
-          var counters = state.getOption.map(_.counters).getOrElse(Nil)
-          val touched = scala.collection.mutable.Map.empty[String, Timestamp]
-          rows.toSeq.sortBy(r => (r._3.getTime, r._2)).foreach {
-            case (_, token, ts) =>
-              counters.find(_.token == token) match {
-                case Some(c) =>
-                  counters = Counter(token, c.count + 1, c.err) ::
-                    counters.filterNot(_.token == token)
-                case None if counters.length < capacity =>
-                  counters = Counter(token, 1L, 0L) :: counters
-                case None =>
-                  // evict the deterministic minimum — among equal
-                  // counts, the most overestimated (largest err) first;
-                  // the newcomer inherits the count as the classic
-                  // overestimate
-                  val m = counters.minBy(c => (c.count, -c.err, c.token))
-                  counters = Counter(token, m.count + 1, m.count) ::
-                    counters.filterNot(_ eq m)
-              }
-              touched.update(token, ts)
-          }
-          state.update(BucketCounters(counters))
-          // emit only counters that survived the batch: at most
-          // `capacity` rows, carrying their final (count, err)
-          counters.reverseIterator.flatMap { c =>
-            touched.get(c.token).map(t =>
-              HitterSnapshot(bucket, c.token, c.count, c.err, t))
-          }
-      }
+      .transformWithState(new HittersProcessor(capacity),
+        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -93,11 +93,14 @@ class ExtractingDoclingSpec extends AnyFunSuite {
   }
 
   test("json escape round-trips controls, quotes, backslashes") {
-    val hostile = "line1\nline2\t\"q\" \\  end"
-    val escaped = ExtractingDocling.jsonEscape(hostile)
-    assert(!escaped.exists(_ < ' '))
-    assert(ExtractingDocling
-      .stringField(s"""{"text":"$escaped"}""", "text").contains(hostile))
+    // the pdf literal escapes decode to newline, tab, a backslash and
+    // the control character 001
+    val hostile = "line1\nline2\t\"q\" \\  end\u0001"
+    val r = new ExtractingDocling(Map("mem://h.pdf" ->
+      pdf("BT (line1\\nline2\\t\"q\" \\\\  end\\001) Tj ET")).apply)
+      .convert(req("mem://h.pdf"))
+    assert(!r.exists(_ < ' '))
+    assert(ExtractingDocling.stringField(r, "text").contains(hostile))
   }
 
   test("docx tables ride the result JSON in the q159 consumer shape " +

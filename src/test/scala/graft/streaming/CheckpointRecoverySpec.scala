@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,13 +28,16 @@ import graft.TestSpark
   *      contents instead of duplicating, because keys are
   *      deterministic and puts overwrite.
   *
-  * Four stateful operators are exercised (StreamingCdcView: ValueState
+  * Six stateful operators are exercised (StreamingCdcView: ValueState
   * fold; StreamingQuota: MapState ledger + TTL; StreamingMinhashDedup:
   * round-11 packed-binary bucket ValueState + creation-only timers,
   * with cross-restart duplicates that can only match from recovered
   * state; StreamingCusum: a CUMULATIVE drift account whose planted
-  * alarm only fires if recovery resumes mid-accumulation) so the
-  * guarantee is pinned on every state shape the repo ships.
+  * alarm only fires if recovery resumes mid-accumulation;
+  * TransferTracker: event-time timers that must fire after the
+  * restart; StreamingHeavyHitters: SpaceSaving counters that must keep
+  * counting) so the guarantee is pinned on every state shape the repo
+  * ships.
   */
 class CheckpointRecoverySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -55,9 +58,11 @@ class CheckpointRecoverySpec extends AnyFunSuite {
   private def rowsOf(dir: String): Seq[String] =
     spark.read.parquet(dir).collect().map(_.toString).toSeq.sorted
 
-  private def stateRows(chk: String, stateVar: Option[String]): Seq[String] = {
-    val r = stateVar.foldLeft(spark.read.format("statestore"))(
-      (b, v) => b.option("stateVarName", v)).load(chk)
+  /** State rows as sorted JSON, read with one state data source option:
+    * a state variable's rows, or the registered timers. */
+  private def stateRows(chk: String, option: (String, String)): Seq[String] = {
+    val r = spark.read.format("statestore").option(option._1, option._2)
+      .load(chk)
     // drop physical partition bookkeeping: parity is about logical
     // state. Canonicalize via to_json: binary state values (the minhash
     // packed bucket) serialize as base64 — Row.toString on a byte array
@@ -66,6 +71,52 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     r.select(org.apache.spark.sql.functions.to_json(
         org.apache.spark.sql.functions.struct(cols: _*)).as("j"))
       .collect().map(_.getString(0)).toSeq.sorted
+  }
+
+  /** Checkpoint and file-sink directory of one run. */
+  private case class Run(chk: String, dir: String)
+
+  /** Runs `build` over `batches` twice. The reference run takes every
+    * batch without a stop. The recovered run stops after `stopAfter`
+    * batches; the next batch lands while the query is DOWN, and a
+    * restart from the same checkpoint processes it and the rest. Then
+    * asserts (a) and (b) on `stateVar`; returns the reference and
+    * recovered runs for scenario checks.
+    */
+  private def restartParity[A: Encoder](tag: String, batches: Seq[Seq[A]],
+                                        stopAfter: Int, stateVar: String)(
+      build: Dataset[A] => Dataset[_]): (Run, Run) = {
+    def run(name: String) = Run(
+      java.nio.file.Files.createTempDirectory(name).toString,
+      java.nio.file.Files.createTempDirectory(s"$name-out").toString)
+    val ref = run(s"rec-$tag-ref")
+    val refSrc = MemoryStream[A](spark)
+    val refQ = startQuery(build(refSrc.toDS()).toDF(), ref.chk, ref.dir)
+    batches.foreach { b => refSrc.addData(b); refQ.processAllAvailable() }
+    refQ.stop()
+
+    val rec = run(s"rec-$tag")
+    val src = MemoryStream[A](spark)
+    val out = build(src.toDS()).toDF()
+    val q1 = startQuery(out, rec.chk, rec.dir)
+    batches.take(stopAfter).foreach { b =>
+      src.addData(b); q1.processAllAvailable()
+    }
+    q1.stop()
+    src.addData(batches(stopAfter))
+    val q2 = startQuery(out, rec.chk, rec.dir)
+    q2.processAllAvailable()
+    batches.drop(stopAfter + 1).foreach { b =>
+      src.addData(b); q2.processAllAvailable()
+    }
+    q2.stop()
+
+    assert(rowsOf(rec.dir) == rowsOf(ref.dir),
+      "pre-stop + post-restart emissions must equal the uninterrupted run")
+    val byVar = "stateVarName" -> stateVar
+    assert(stateRows(rec.chk, byVar) == stateRows(ref.chk, byVar),
+      "recovered checkpoint state must equal the uninterrupted run's")
+    (ref, rec)
   }
 
   // ------------------------------------------------------ CdcView
@@ -81,42 +132,9 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("CdcView: stop after batch 2, restart from the checkpoint — " +
        "state parity with an uninterrupted run, no dup/lost output") {
-    RocksDbTestSupport.withRocksDb(spark) {
-      // reference: uninterrupted run over all three batches
-      val refChk = java.nio.file.Files
-        .createTempDirectory("rec-cdc-ref").toString
-      val refDir = java.nio.file.Files
-        .createTempDirectory("rec-cdc-ref-out").toString
-      val refSrc = MemoryStream[StreamingCdcView.CdcOp](spark)
-      val refQ = startQuery(StreamingCdcView.materialize(refSrc.toDS()).toDF(),
-        refChk, refDir)
-      cdcBatches.foreach { b => refSrc.addData(b); refQ.processAllAvailable() }
-      refQ.stop()
-
-      // recovered: batches 1-2, clean stop mid-stream, restart, batch 3
-      val chk = java.nio.file.Files
-        .createTempDirectory("rec-cdc").toString
-      val dir = java.nio.file.Files
-        .createTempDirectory("rec-cdc-out").toString
-      val src = MemoryStream[StreamingCdcView.CdcOp](spark)
-      val out = StreamingCdcView.materialize(src.toDS()).toDF()
-      val q1 = startQuery(out, chk, dir)
-      cdcBatches.take(2).foreach { b =>
-        src.addData(b); q1.processAllAvailable()
-      }
-      q1.stop()
-      // data arriving while the query is DOWN — recovery must pick it up
-      src.addData(cdcBatches(2))
-      val q2 = startQuery(out, chk, dir)
-      q2.processAllAvailable()
-      q2.stop()
-
-      assert(rowsOf(dir) == rowsOf(refDir),
-        "pre-stop + post-restart emissions must equal the uninterrupted run")
-      assert(stateRows(chk, Some("view")) == stateRows(refChk, Some("view")),
-        "recovered checkpoint state must equal the uninterrupted run's")
-      assert(rowsOf(refDir).nonEmpty)
-    }
+    val (ref, _) = restartParity("cdc", cdcBatches, 2, "view")(
+      StreamingCdcView.materialize(_))
+    assert(rowsOf(ref.dir).nonEmpty)
   }
 
   // ------------------------------------------------------- Cusum
@@ -134,46 +152,13 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("Cusum: restart from the checkpoint — the drift account resumes " +
        "mid-accumulation, alarms and state match an uninterrupted run") {
-    RocksDbTestSupport.withRocksDb(spark) {
-      def out(src: MemoryStream[StreamingCusum.DayPoint]) =
-        StreamingCusum.detect(src.toDS(), mu0Cents = 200L,
-          slackCents = 20L, threshCents = 500L).toDF()
-
-      val refChk = java.nio.file.Files
-        .createTempDirectory("rec-cusum-ref").toString
-      val refDir = java.nio.file.Files
-        .createTempDirectory("rec-cusum-ref-out").toString
-      val refSrc = MemoryStream[StreamingCusum.DayPoint](spark)
-      val refQ = startQuery(out(refSrc), refChk, refDir)
-      cusumBatches.foreach { b =>
-        refSrc.addData(b); refQ.processAllAvailable()
-      }
-      refQ.stop()
-
-      val chk = java.nio.file.Files
-        .createTempDirectory("rec-cusum").toString
-      val dir = java.nio.file.Files
-        .createTempDirectory("rec-cusum-out").toString
-      val src = MemoryStream[StreamingCusum.DayPoint](spark)
-      val q1 = startQuery(out(src), chk, dir)
-      cusumBatches.take(2).foreach { b =>
-        src.addData(b); q1.processAllAvailable()
-      }
-      q1.stop()
-      // the post-shift batch lands while the query is down
-      src.addData(cusumBatches(2))
-      val q2 = startQuery(out(src), chk, dir)
-      q2.processAllAvailable()
-      q2.stop()
-
-      assert(rowsOf(dir) == rowsOf(refDir),
-        "pre-stop + post-restart emissions must equal the uninterrupted run")
-      assert(stateRows(chk, Some("cusum")) == stateRows(refChk, Some("cusum")),
-        "recovered drift account must equal the uninterrupted run's")
-      // the scenario is non-degenerate: the shift actually alarms
-      assert(rowsOf(refDir).exists(_.contains("true")),
-        "planted shift must trip the alarm in the reference run")
-    }
+    // the post-shift batch lands while the query is down
+    val (ref, _) = restartParity("cusum", cusumBatches, 2, "cusum")(
+      StreamingCusum.detect(_, mu0Cents = 200L, slackCents = 20L,
+        threshCents = 500L))
+    // the scenario is non-degenerate: the shift actually alarms
+    assert(rowsOf(ref.dir).exists(_.contains("true")),
+      "planted shift must trip the alarm in the reference run")
   }
 
   // ------------------------------------------------------- Quota
@@ -188,43 +173,13 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("Quota: restart from the checkpoint — MapState ledger parity, " +
        "admissions neither duplicated nor lost") {
-    RocksDbTestSupport.withRocksDb(spark) {
-      def out(src: MemoryStream[StreamingQuota.FileEvent]) =
-        StreamingQuota.enforce(src.toDS(), quotaBytes = 900L,
-          retainDays = 7).toDF()
-
-      val refChk = java.nio.file.Files
-        .createTempDirectory("rec-quota-ref").toString
-      val refDir = java.nio.file.Files
-        .createTempDirectory("rec-quota-ref-out").toString
-      val refSrc = MemoryStream[StreamingQuota.FileEvent](spark)
-      val refQ = startQuery(out(refSrc), refChk, refDir)
-      quotaBatches.foreach { b =>
-        refSrc.addData(b); refQ.processAllAvailable()
-      }
-      refQ.stop()
-
-      val chk = java.nio.file.Files
-        .createTempDirectory("rec-quota").toString
-      val dir = java.nio.file.Files
-        .createTempDirectory("rec-quota-out").toString
-      val src = MemoryStream[StreamingQuota.FileEvent](spark)
-      val q1 = startQuery(out(src), chk, dir)
-      src.addData(quotaBatches(0)); q1.processAllAvailable()
-      q1.stop()
-      src.addData(quotaBatches(1)) // arrives while down
-      val q2 = startQuery(out(src), chk, dir)
-      q2.processAllAvailable()
-      src.addData(quotaBatches(2)); q2.processAllAvailable()
-      q2.stop()
-
-      assert(rowsOf(dir) == rowsOf(refDir))
-      assert(stateRows(chk, Some("used")) == stateRows(refChk, Some("used")))
-      // the quota must have actually denied something, or the ledger
-      // parity proves less than it claims
-      assert(spark.read.parquet(refDir)
-        .filter(col("admitted") === false).count() > 0)
-    }
+    // stop after batch 1: batch 2 arrives while down, batch 3 after
+    val (ref, _) = restartParity("quota", quotaBatches, 1, "used")(
+      StreamingQuota.enforce(_, quotaBytes = 900L, retainDays = 7))
+    // the quota must have actually denied something, or the ledger
+    // parity proves less than it claims
+    assert(spark.read.parquet(ref.dir)
+      .filter(col("admitted") === false).count() > 0)
   }
 
   // ------------------------------------------- MinhashDedup (round 11)
@@ -245,44 +200,75 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("MinhashDedup: restart from the checkpoint — packed-bucket state " +
        "parity, cross-restart duplicates still detected exactly once") {
-    RocksDbTestSupport.withRocksDb(spark) {
-      def out(src: MemoryStream[StreamingMinhashDedup.DocText]) =
-        StreamingMinhashDedup.detect(src.toDS(), n = 3, threshold = 0.9).toDF()
+    // the duplicates arrive while the query is down
+    val (ref, _) = restartParity("mh", mhBatches, 2, "bucket")(
+      StreamingMinhashDedup.detect(_, n = 3, threshold = 0.9))
+    // the replayed duplicates matched their batch-1 originals FROM
+    // RECOVERED STATE: doc 60+i hits doc i (est 1.0, all 32 bands)
+    val hits = spark.read.parquet(ref.dir)
+      .select("docId", "matchedId").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert((60L until 70L).forall(d => hits.contains((d, d - 60))),
+      s"missing cross-restart duplicate hits: $hits")
+  }
 
-      val refChk = java.nio.file.Files
-        .createTempDirectory("rec-mh-ref").toString
-      val refDir = java.nio.file.Files
-        .createTempDirectory("rec-mh-ref-out").toString
-      val refSrc = MemoryStream[StreamingMinhashDedup.DocText](spark)
-      val refQ = startQuery(out(refSrc), refChk, refDir)
-      mhBatches.foreach { b => refSrc.addData(b); refQ.processAllAvailable() }
-      refQ.stop()
+  // --------------------------------------------- TransferTracker
 
-      val chk = java.nio.file.Files
-        .createTempDirectory("rec-mh").toString
-      val dir = java.nio.file.Files
-        .createTempDirectory("rec-mh-out").toString
-      val src = MemoryStream[StreamingMinhashDedup.DocText](spark)
-      val q1 = startQuery(out(src), chk, dir)
-      mhBatches.take(2).foreach { b => src.addData(b); q1.processAllAvailable() }
-      q1.stop()
-      src.addData(mhBatches(2)) // the duplicates arrive while down
-      val q2 = startQuery(out(src), chk, dir)
-      q2.processAllAvailable()
-      q2.stop()
+  /** c0-c29 start in batch 1 and c30-c39 in batch 2; c0-c19 complete
+    * before the stop. Batch 3 moves the watermark past every timeout
+    * while the query is down, so c20-c39 can only stall from timers
+    * recovered from the checkpoint; s0-s4 stay in flight. */
+  private def trackerBatches: Seq[Seq[TransferTracker.StatusEvent]] = {
+    import TransferTracker.StatusEvent
+    Seq(
+      (0 until 30).map(i => StatusEvent(s"c$i", "RECEIVED",
+        ts("2024-03-05 07:00:00"))) ++
+        (0 until 10).map(i => StatusEvent(s"c$i", "PROCESSED",
+          ts("2024-03-05 07:01:00"))),
+      (10 until 20).map(i => StatusEvent(s"c$i",
+        if (i % 2 == 0) "PROCESSED" else "FAILED", ts("2024-03-05 07:05:00"))) ++
+        (30 until 40).map(i => StatusEvent(s"c$i", "RECEIVED",
+          ts("2024-03-05 07:05:00"))),
+      (0 until 5).map(i => StatusEvent(s"s$i", "RECEIVED",
+        ts("2024-03-05 07:30:00"))))
+  }
 
-      assert(rowsOf(dir) == rowsOf(refDir),
-        "pre-stop + post-restart hits must equal the uninterrupted run")
-      assert(stateRows(chk, Some("bucket")) == stateRows(refChk, Some("bucket")),
-        "recovered packed-bucket state must equal the uninterrupted run's")
-      // the replayed duplicates matched their batch-1 originals FROM
-      // RECOVERED STATE: doc 60+i hits doc i (est 1.0, all 32 bands)
-      val hits = spark.read.parquet(refDir)
-        .select("docId", "matchedId").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert((60L until 70L).forall(d => hits.contains((d, d - 60))),
-        s"missing cross-restart duplicate hits: $hits")
+  test("TransferTracker: restart with transfers in flight — recovered " +
+       "timers stall them exactly once, state and timers match") {
+    val (ref, rec) = restartParity("tracker", trackerBatches, 2, "transfer")(
+      ds => TransferTracker.track(ds.withWatermark("eventTime", "1 minute")
+        .as[TransferTracker.StatusEvent]))
+    val timers = "readRegisteredTimers" -> "true"
+    val refTimers = stateRows(ref.chk, timers)
+    assert(refTimers.size == 5 && stateRows(rec.chk, timers) == refTimers,
+      "recovered timers must equal the uninterrupted run's: s0-s4")
+    val byStatus = spark.read.parquet(ref.dir)
+      .groupBy("finalStatus").count().as[(String, Long)].collect().toMap
+    assert(byStatus == Map("PROCESSED" -> 15L, "FAILED" -> 5L,
+      "STALLED" -> 20L), s"unexpected outcome counts: $byStatus")
+  }
+
+  // ----------------------------------------------- HeavyHitters
+
+  /** One bucket of 8 counters: "hot" arrives 5 times a batch ahead of a
+    * churning tail, so its last snapshot counts 15 only if the counters
+    * survived the restart. */
+  private def hhBatches: Seq[Seq[StreamingHeavyHitters.TokenEvent]] =
+    (0 until 3).map { b =>
+      val at = ts(f"2024-03-05 08:0$b%d:00")
+      val late = ts(f"2024-03-05 08:0$b%d:30")
+      Seq.fill(5)(StreamingHeavyHitters.TokenEvent("hot", at)) ++
+        (0 until 12).map(i =>
+          StreamingHeavyHitters.TokenEvent(s"tail${b * 12 + i}", late))
     }
+
+  test("HeavyHitters: restart from the checkpoint — SpaceSaving counters " +
+       "resume, snapshots and state match an uninterrupted run") {
+    val (ref, _) = restartParity("hh", hhBatches, 2, "counters")(
+      StreamingHeavyHitters.track(_, nBuckets = 1, capacity = 8))
+    val hot = spark.read.parquet(ref.dir).filter(col("token") === "hot")
+      .select("count").as[Long].collect()
+    assert(hot.max == 15L, s"hot counts across batches: ${hot.toSeq}")
   }
 
   // -------------------------------------- foreachBatch object keys
@@ -361,7 +347,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     import graft.ext.{Multimodal, UrlOps, Warc}
     import graft.sinks.AtomicPublish
     import org.apache.spark.sql.functions.{to_timestamp, xxhash64, concat}
-    RocksDbTestSupport.withRocksDb(spark) {
+    {
       val table = java.nio.file.Files
         .createTempDirectory("rec-web-table").toString
       val chk = java.nio.file.Files

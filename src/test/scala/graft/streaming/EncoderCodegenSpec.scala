@@ -94,27 +94,25 @@ class EncoderCodegenSpec extends AnyFunSuite {
     import StreamingFunnel.{Event, Stage}
     import spark.implicits._
     withCodegenOnly {
-      RocksDbTestSupport.withRocksDb(spark) {
-        val stages = Seq(
-          Stage("view", "view", 0L),
-          Stage("click", "click", 3600L * 1000))
-        val source = MemoryStream[Event](spark)
-        val out = StreamingFunnel.track(source.toDS(), stages, "0 seconds")
-        val name = s"codegen_guard_${System.nanoTime()}"
-        val q = out.writeStream.format("memory")
-          .queryName(name).outputMode("append").start()
-        try {
-          source.addData(
-            Event(1L, "view", Timestamp.valueOf("2024-03-05 10:00:00")),
-            Event(1L, "click", Timestamp.valueOf("2024-03-05 10:30:00")),
-            Event(9L, "view", Timestamp.valueOf("2024-03-07 00:00:00")))
-          q.processAllAvailable()
-          source.addData()
-          q.processAllAvailable()
-        } finally q.stop()
-        assert(spark.table(name).count() >= 2L,
-          "funnel emitted under CODEGEN_ONLY")
-      }
+      val stages = Seq(
+        Stage("view", "view", 0L),
+        Stage("click", "click", 3600L * 1000))
+      val source = MemoryStream[Event](spark)
+      val out = StreamingFunnel.track(source.toDS(), stages, "0 seconds")
+      val name = s"codegen_guard_${System.nanoTime()}"
+      val q = out.writeStream.format("memory")
+        .queryName(name).outputMode("append").start()
+      try {
+        source.addData(
+          Event(1L, "view", Timestamp.valueOf("2024-03-05 10:00:00")),
+          Event(1L, "click", Timestamp.valueOf("2024-03-05 10:30:00")),
+          Event(9L, "view", Timestamp.valueOf("2024-03-07 00:00:00")))
+        q.processAllAvailable()
+        source.addData()
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(spark.table(name).count() >= 2L,
+        "funnel emitted under CODEGEN_ONLY")
     }
   }
 }

@@ -14,18 +14,14 @@ class StateAuditSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("profile state: exactly one record per column") {
-    RocksDbTestSupport.withRocksDb(spark) {
-      val a = StateAudit.auditProfile(spark)
-      assert(a.held, s"bound violated: $a")
-      assert(a.stateRows == 4, s"expected 4 column records: $a")
-    }
+    val a = StateAudit.auditProfile(spark)
+    assert(a.held, s"bound violated: $a")
+    assert(a.stateRows == 4, s"expected 4 column records: $a")
   }
 
   test("drift state: bounded by metrics × histogram buckets") {
-    RocksDbTestSupport.withRocksDb(spark) {
-      val a = StateAudit.auditDrift(spark)
-      assert(a.held, s"bound violated: $a")
-      assert(a.groupingKeys == 3, s"expected 3 metric keys: $a")
-    }
+    val a = StateAudit.auditDrift(spark)
+    assert(a.held, s"bound violated: $a")
+    assert(a.groupingKeys == 3, s"expected 3 metric keys: $a")
   }
 }

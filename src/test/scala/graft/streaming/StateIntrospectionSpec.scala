@@ -23,26 +23,17 @@ class StateIntrospectionSpec extends AnyFunSuite {
 
   /** Run the quota query over one batch against `chk`, then stop. */
   private def runQuota(chk: String): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val source = MemoryStream[FileEvent](spark)
-      val q = StreamingQuota.enforce(source.toDS(), quotaBytes = 100L)
-        .writeStream.option("checkpointLocation", chk)
-        .format("memory").queryName(s"quota_state_${System.nanoTime()}")
-        .outputMode("append").start()
-      source.addData(
-        FileEvent("sap", "a.pdf", 40L, ts("2024-03-05 01:00:00")),
-        FileEvent("sap", "b.pdf", 30L, ts("2024-03-06 01:00:00")),
-        FileEvent("crm", "x.pdf", 90L, ts("2024-03-05 02:00:00")))
-      q.processAllAvailable()
-      q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val source = MemoryStream[FileEvent](spark)
+    val q = StreamingQuota.enforce(source.toDS(), quotaBytes = 100L)
+      .writeStream.option("checkpointLocation", chk)
+      .format("memory").queryName(s"quota_state_${System.nanoTime()}")
+      .outputMode("append").start()
+    source.addData(
+      FileEvent("sap", "a.pdf", 40L, ts("2024-03-05 01:00:00")),
+      FileEvent("sap", "b.pdf", 30L, ts("2024-03-06 01:00:00")),
+      FileEvent("crm", "x.pdf", 90L, ts("2024-03-05 02:00:00")))
+    q.processAllAvailable()
+    q.stop()
   }
 
   test("state-metadata lists the quota operator and its state variable") {

@@ -16,20 +16,16 @@ class StreamBenchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("CdcView sustains order-of-magnitude throughput") {
-    RocksDbTestSupport.withRocksDb(spark) {
-      val b = StreamBench.benchCdcView(spark, perBatch = 1000, nBatches = 4)
-      assert(b.eventsIn == 4000 && b.outRows > 0)
-      assert(b.rowsPerSec > 200, s"throughput floor violated: $b")
-      assert(b.maxBatchMs < 60000, s"pathological batch latency: $b")
-    }
+    val b = StreamBench.benchCdcView(spark, perBatch = 1000, nBatches = 4)
+    assert(b.eventsIn == 4000 && b.outRows > 0)
+    assert(b.rowsPerSec > 200, s"throughput floor violated: $b")
+    assert(b.maxBatchMs < 60000, s"pathological batch latency: $b")
   }
 
   test("Bloom dedup sustains order-of-magnitude throughput") {
-    RocksDbTestSupport.withRocksDb(spark) {
-      val b = StreamBench.benchBloomDedup(spark, perBatch = 1000,
-        nBatches = 4)
-      assert(b.eventsIn == 4000 && b.outRows > 0)
-      assert(b.rowsPerSec > 200, s"throughput floor violated: $b")
-    }
+    val b = StreamBench.benchBloomDedup(spark, perBatch = 1000,
+      nBatches = 4)
+    assert(b.eventsIn == 4000 && b.outRows > 0)
+    assert(b.rowsPerSec > 200, s"throughput floor violated: $b")
   }
 }

@@ -21,10 +21,8 @@ class StreamingAffinitySpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def rtest(name: String)(body: => Any): Unit =
-    test(name)(RocksDbTestSupport.withRocksDb(spark)(body))
 
-  rtest("cross-batch pairing, duplicate suppression, TTL closes sessions") {
+  test("cross-batch pairing, duplicate suppression, TTL closes sessions") {
     val source = MemoryStream[ItemEvent](spark)
     val out = StreamingAffinity.pairDeltas(source.toDS(),
       maxBasket = 10, watermarkDelay = "10 minutes", ttlMs = 3600 * 1000L)
@@ -59,7 +57,7 @@ class StreamingAffinitySpec extends AnyFunSuite {
     assert(d.isEmpty, s"expired session paired: ${d.toSeq}")
   }
 
-  rtest("truncation guard: arrivals beyond maxBasket emit nothing") {
+  test("truncation guard: arrivals beyond maxBasket emit nothing") {
     val source = MemoryStream[ItemEvent](spark)
     val out = StreamingAffinity.pairDeltas(source.toDS(), maxBasket = 2)
     val q = out.writeStream.format("memory")
@@ -75,7 +73,7 @@ class StreamingAffinitySpec extends AnyFunSuite {
       Set(("B", "A"), ("A", "B")))
   }
 
-  rtest("pair counts equal the batch operator's n_both on the real corpus") {
+  test("pair counts equal the batch operator's n_both on the real corpus") {
     val sf = "/root/testdata/sf0.001"
     assume(new java.io.File(sf).isDirectory, "testdata not present")
     val li = spark.read.parquet(s"$sf/lineitem.parquet")

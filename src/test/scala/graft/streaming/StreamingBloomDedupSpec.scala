@@ -14,16 +14,15 @@ class StreamingBloomDedupSpec extends AnyFunSuite {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
   private val t0 = "2024-03-05 10:00:00"
 
-  private def run(name: String)(batches: Seq[Seq[DocKey]]): Seq[Decision] =
-    RocksDbTestSupport.withRocksDb(spark) {
-      val source = MemoryStream[DocKey](spark)
-      val q = StreamingBloomDedup.dedup(source.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      batches.foreach { b => source.addData(b: _*); q.processAllAvailable() }
-      q.stop()
-      spark.table(name).as[Decision].collect().toSeq
-    }
+  private def run(name: String)(batches: Seq[Seq[DocKey]]): Seq[Decision] = {
+    val source = MemoryStream[DocKey](spark)
+    val q = StreamingBloomDedup.dedup(source.toDS())
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    batches.foreach { b => source.addData(b: _*); q.processAllAvailable() }
+    q.stop()
+    spark.table(name).as[Decision].collect().toSeq
+  }
 
   test("one-sided error: a re-sent key is NEVER flagged new, across batches") {
     val out = run("bloom_dedup_resend")(Seq(
@@ -54,7 +53,7 @@ class StreamingBloomDedupSpec extends AnyFunSuite {
   }
 
   test("rotating variant: recent keys caught, ancient keys forgotten by design") {
-    RocksDbTestSupport.withRocksDb(spark)(rotatingScenario())
+    rotatingScenario()
   }
 
   private def rotatingScenario(): Unit = {
@@ -131,7 +130,7 @@ class StreamingBloomDedupSpec extends AnyFunSuite {
     // exactly once (champion = min (eventTime, docId)), all later
     // occurrences caught
     val source = MemoryStream[DocKey](spark)
-    val out = RocksDbTestSupport.withRocksDb(spark) {
+    val out = {
       val q = StreamingBloomDedup.dedup(source.toDS(), shardBits = 0,
           bitsPerShard = 1 << 17)
         .writeStream.format("memory").queryName("bloom_soak")

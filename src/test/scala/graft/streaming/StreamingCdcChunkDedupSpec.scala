@@ -23,8 +23,6 @@ class StreamingCdcChunkDedupSpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def rtest(name: String)(body: => Any): Unit =
-    test(name)(RocksDbTestSupport.withRocksDb(spark)(body))
 
   /** The batch twin's first-owner expectation for a (docId → (text,
     * eventTime)) corpus: per chunk md5, the owner is the smallest
@@ -60,7 +58,7 @@ class StreamingCdcChunkDedupSpec extends AnyFunSuite {
       .map(d => (d.docId, d.idx, d.kept, d.ownerDoc, d.ownerIdx)).toSet
   }
 
-  rtest("batch/stream parity: decisions equal Dedup.cdcChunks " +
+  test("batch/stream parity: decisions equal Dedup.cdcChunks " +
       "first-owner assignment, invariant to micro-batch splits") {
     // deterministic texts with planted full and partial repeats;
     // distinct eventTimes so "first" is unambiguous across batches
@@ -86,7 +84,7 @@ class StreamingCdcChunkDedupSpec extends AnyFunSuite {
     assert(twoBatches == want)
   }
 
-  rtest("shift robustness: a later prefixed near-copy re-claims most " +
+  test("shift robustness: a later prefixed near-copy re-claims most " +
       "of the original's chunks as duplicates") {
     val base = (0 until 40).map(i => s"tok$i").mkString(" ")
     val docs = Seq(

@@ -20,8 +20,7 @@ class StreamingCdcViewSpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def run(batches: Seq[CdcOp]*): Seq[ViewChange] =
-    RocksDbTestSupport.withRocksDb(spark) {
+  private def run(batches: Seq[CdcOp]*): Seq[ViewChange] = {
     val source = MemoryStream[CdcOp](spark)
     val out = StreamingCdcView.materialize(source.toDS())
     val name = s"cdc_view_${System.nanoTime()}"

@@ -16,11 +16,8 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
   private def chunk(tag: String): String =
     (0 until 8).map(i => s"$tag$i").mkString(" ")
 
-  /** transformWithState needs the RocksDB provider — scope it per test. */
-  private def rtest(name: String)(body: => Any): Unit =
-    test(name)(RocksDbTestSupport.withRocksDb(spark)(body))
 
-  rtest("cross-batch first-owner claims; duplicates flag the original; TTL reopens") {
+  test("cross-batch first-owner claims; duplicates flag the original; TTL reopens") {
     val a = chunk("a"); val b = chunk("b"); val c = chunk("c")
     val source = MemoryStream[DocText](spark)
     val out = StreamingChunkDedup.dedup(source.toDS(), chunkWords = 8,
@@ -55,7 +52,7 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
     assert(late.length == 1 && late.head.kept && late.head.ownerDoc == 5L)
   }
 
-  rtest("within-batch ties: smallest (eventTime, docId, idx) wins deterministically") {
+  test("within-batch ties: smallest (eventTime, docId, idx) wins deterministically") {
     val x = chunk("x")
     val source = MemoryStream[DocText](spark)
     val out = StreamingChunkDedup.dedup(source.toDS(), chunkWords = 8)
@@ -75,7 +72,7 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
     assert(!loser.kept && loser.ownerDoc == 3L)
   }
 
-  rtest("null eventTime / null text rows are dropped at the plan edge, not NPE'd") {
+  test("null eventTime / null text rows are dropped at the plan edge, not NPE'd") {
     val v = chunk("v")
     val source = MemoryStream[DocText](spark)
     val out = StreamingChunkDedup.dedup(source.toDS())
@@ -94,7 +91,7 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
     assert(rows.forall(_.kept))
   }
 
-  rtest("state survives a query restart from checkpoint (fault tolerance)") {
+  test("state survives a query restart from checkpoint (fault tolerance)") {
     // the property checkpointing exists for: an owner claimed BEFORE the
     // crash still wins against a duplicate arriving AFTER the restart
     val base = java.nio.file.Files.createTempDirectory("chunk-dedup-restart")
@@ -127,7 +124,7 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
       s"pre-restart owner lost: ${decisions(2L)}")
   }
 
-  rtest("matches the batch operator's keep-first on a replayed corpus") {
+  test("matches the batch operator's keep-first on a replayed corpus") {
     val a = chunk("a"); val b = chunk("b"); val c = chunk("c")
     val corpus = Seq(
       (1L, s"$a $b"), (2L, s"$a $c"), (3L, s"$b $c"))

@@ -17,8 +17,7 @@ class StreamingCusumSpec extends AnyFunSuite {
 
   private val MU = 200L; private val SLACK = 20L; private val THRESH = 600L
 
-  private def run(batches: Seq[DayPoint]*): Seq[CusumPoint] =
-    RocksDbTestSupport.withRocksDb(spark) {
+  private def run(batches: Seq[DayPoint]*): Seq[CusumPoint] = {
     val source = MemoryStream[DayPoint](spark)
     val out = StreamingCusum.detect(source.toDS(), MU, SLACK, THRESH)
     val name = s"cusum_out_${System.nanoTime()}"
@@ -125,52 +124,50 @@ class StreamingCusumSpec extends AnyFunSuite {
 
   test("CUSUM alarms chain into held-for; the chained query recovers " +
        "from its checkpoint") {
-    RocksDbTestSupport.withRocksDb(spark) {
-      import StreamingHeldAlert.Transition
-      // the alarm days the composition must react to, from the batch twin
-      val alarmDays = batchTwin(burst).filter(_.alarmUp).map(_.dayIdx)
-      assert(alarmDays == Seq(7L, 8L, 9L, 10L, 11L, 12L))
-      val expected = Seq(
-        ("FIRING", w(7), w(8), 1.0),    // 2nd consecutive alarm window
-        ("RESOLVED", w(7), w(13), 0.0)) // first clear evaluation
-      val batches = Seq(burst.slice(0, 7), burst.slice(7, 10),
-        burst.slice(10, 15))
+    import StreamingHeldAlert.Transition
+    // the alarm days the composition must react to, from the batch twin
+    val alarmDays = batchTwin(burst).filter(_.alarmUp).map(_.dayIdx)
+    assert(alarmDays == Seq(7L, 8L, 9L, 10L, 11L, 12L))
+    val expected = Seq(
+      ("FIRING", w(7), w(8), 1.0),    // 2nd consecutive alarm window
+      ("RESOLVED", w(7), w(13), 0.0)) // first clear evaluation
+    val batches = Seq(burst.slice(0, 7), burst.slice(7, 10),
+      burst.slice(10, 15))
 
-      // uninterrupted run (memory sink)
-      val srcA = MemoryStream[DayPoint](spark)
-      val qA = chained(srcA).writeStream.format("memory")
-        .queryName("cusum_held_a").outputMode("append").start()
-      try batches.foreach { b => srcA.addData(b: _*); qA.processAllAvailable() }
-      finally qA.stop()
-      val gotA = spark.table("cusum_held_a").as[Transition].collect().toSeq
-        .sortBy(_.at.getTime).map(t => (t.phase, t.since, t.at, t.metric))
-      assert(gotA == expected, s"uninterrupted chained run: $gotA")
+    // uninterrupted run (memory sink)
+    val srcA = MemoryStream[DayPoint](spark)
+    val qA = chained(srcA).writeStream.format("memory")
+      .queryName("cusum_held_a").outputMode("append").start()
+    try batches.foreach { b => srcA.addData(b: _*); qA.processAllAvailable() }
+    finally qA.stop()
+    val gotA = spark.table("cusum_held_a").as[Transition].collect().toSeq
+      .sortBy(_.at.getTime).map(t => (t.phase, t.since, t.at, t.metric))
+    assert(gotA == expected, s"uninterrupted chained run: $gotA")
 
-      // same batches, but the query STOPS after batch 2 and restarts
-      // from its checkpoint (file sink: the memory sink refuses
-      // recovery) — both stateful operators must resume their state
-      val chk = java.nio.file.Files.createTempDirectory("cusum-held-chk")
-        .toString
-      val out = java.nio.file.Files.createTempDirectory("cusum-held-out")
-        .toString
-      val srcB = MemoryStream[DayPoint](spark)
-      val outDf = chained(srcB).toDF()
-      def start() = outDf.writeStream.option("checkpointLocation", chk)
-        .format("parquet").option("path", out).outputMode("append").start()
-      val qB1 = start()
-      try {
-        srcB.addData(batches(0): _*); qB1.processAllAvailable()
-        srcB.addData(batches(1): _*); qB1.processAllAvailable()
-      } finally qB1.stop()
-      // data arriving while the query is DOWN — recovery must pick it up
-      srcB.addData(batches(2): _*)
-      val qB2 = start()
-      try qB2.processAllAvailable() finally qB2.stop()
-      val gotB = spark.read.parquet(out)
-        .as[Transition].collect().toSeq
-        .sortBy(_.at.getTime).map(t => (t.phase, t.since, t.at, t.metric))
-      assert(gotB == expected,
-        s"post-recovery chained output diverged: $gotB")
-    }
+    // same batches, but the query STOPS after batch 2 and restarts
+    // from its checkpoint (file sink: the memory sink refuses
+    // recovery) — both stateful operators must resume their state
+    val chk = java.nio.file.Files.createTempDirectory("cusum-held-chk")
+      .toString
+    val out = java.nio.file.Files.createTempDirectory("cusum-held-out")
+      .toString
+    val srcB = MemoryStream[DayPoint](spark)
+    val outDf = chained(srcB).toDF()
+    def start() = outDf.writeStream.option("checkpointLocation", chk)
+      .format("parquet").option("path", out).outputMode("append").start()
+    val qB1 = start()
+    try {
+      srcB.addData(batches(0): _*); qB1.processAllAvailable()
+      srcB.addData(batches(1): _*); qB1.processAllAvailable()
+    } finally qB1.stop()
+    // data arriving while the query is DOWN — recovery must pick it up
+    srcB.addData(batches(2): _*)
+    val qB2 = start()
+    try qB2.processAllAvailable() finally qB2.stop()
+    val gotB = spark.read.parquet(out)
+      .as[Transition].collect().toSeq
+      .sortBy(_.at.getTime).map(t => (t.phase, t.since, t.at, t.metric))
+    assert(gotB == expected,
+      s"post-recovery chained output diverged: $gotB")
   }
 }

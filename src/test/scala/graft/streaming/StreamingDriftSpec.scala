@@ -18,8 +18,7 @@ class StreamingDriftSpec extends AnyFunSuite {
   private val ref = Reference(0.0, 100.0,
     Array(10L, 20L, 30L, 20L, 10L, 5L, 3L, 1L, 0L, 1L))
 
-  private def run(batches: Seq[MetricValue]*): Seq[DriftScore] =
-    RocksDbTestSupport.withRocksDb(spark) {
+  private def run(batches: Seq[MetricValue]*): Seq[DriftScore] = {
     val source = MemoryStream[MetricValue](spark)
     val out = StreamingDrift.monitor(source.toDS(), ref)
     val name = s"drift_out_${System.nanoTime()}"

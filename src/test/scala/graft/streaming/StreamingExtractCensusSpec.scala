@@ -28,8 +28,7 @@ class StreamingExtractCensusSpec extends AnyFunSuite {
     DocBytes(i.toLong, b)
   }
 
-  private def run(batches: Seq[DocBytes]*): Seq[CensusRow] =
-    RocksDbTestSupport.withRocksDb(spark) {
+  private def run(batches: Seq[DocBytes]*): Seq[CensusRow] = {
     val source = MemoryStream[DocBytes](spark)
     val out = StreamingExtractCensus.census(source.toDS())
     val name = s"census_out_${System.nanoTime()}"

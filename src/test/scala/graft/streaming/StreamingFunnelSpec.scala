@@ -27,21 +27,20 @@ class StreamingFunnelSpec extends AnyFunSuite {
     runWithDelay("0 seconds", batches: _*)
 
   private def runWithDelay(delay: String,
-                           batches: Seq[Event]*): Seq[Reached] =
-    RocksDbTestSupport.withRocksDb(spark) {
-      val source = MemoryStream[Event](spark)
-      val out = StreamingFunnel.track(source.toDS(), stages, delay)
-      val name = s"funnel_out_${System.nanoTime()}"
-      val q = out.writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-      try {
-        batches.foreach { b => source.addData(b: _*); q.processAllAvailable() }
-        // trailing batch so the last data batch's timers see the
-        // advanced watermark
-        source.addData(); q.processAllAvailable()
-      } finally q.stop()
-      spark.table(name).as[Reached].collect().toSeq
-    }
+                           batches: Seq[Event]*): Seq[Reached] = {
+    val source = MemoryStream[Event](spark)
+    val out = StreamingFunnel.track(source.toDS(), stages, delay)
+    val name = s"funnel_out_${System.nanoTime()}"
+    val q = out.writeStream.format("memory")
+      .queryName(name).outputMode("append").start()
+    try {
+      batches.foreach { b => source.addData(b: _*); q.processAllAvailable() }
+      // trailing batch so the last data batch's timers see the
+      // advanced watermark
+      source.addData(); q.processAllAvailable()
+    } finally q.stop()
+    spark.table(name).as[Reached].collect().toSeq
+  }
 
   test("full conversion inside both deadlines emits all three stages") {
     val got = run(

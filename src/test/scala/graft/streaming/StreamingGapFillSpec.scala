@@ -14,8 +14,7 @@ class StreamingGapFillSpec extends AnyFunSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private def run(tickSeconds: Long, maxFillTicks: Int,
-                  batches: Seq[Reading]*): Seq[Tick] =
-    RocksDbTestSupport.withRocksDb(spark) {
+                  batches: Seq[Reading]*): Seq[Tick] = {
     val source = MemoryStream[Reading](spark)
     val out = StreamingGapFill.fill(source.toDS(), tickSeconds, maxFillTicks)
     val name = s"gapfill_out_${System.nanoTime()}"

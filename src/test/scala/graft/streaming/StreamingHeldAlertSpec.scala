@@ -21,9 +21,6 @@ class StreamingHeldAlertSpec extends AnyFunSuite {
   // minute-aligned window starts, 60 s grid
   private def w(m: Int) = ts(f"2024-03-05 07:$m%02d:00")
 
-  /** transformWithState needs the RocksDB provider — scope it per test. */
-  private def rtest(name: String)(body: => Any): Unit =
-    test(name)(RocksDbTestSupport.withRocksDb(spark)(body))
 
   private def run(name: String, holdWindows: Int = 3,
                   resolveAfterWindows: Int = 100)
@@ -43,7 +40,7 @@ class StreamingHeldAlertSpec extends AnyFunSuite {
       .sortBy(t => (t.key, t.at.getTime, t.phase))
   }
 
-  rtest("fires after holdWindows consecutive breaches, resolves on clear — across batches") {
+  test("fires after holdWindows consecutive breaches, resolves on clear — across batches") {
     val got = run("held_basic") { (src, q) =>
       src.addData(Eval("a", w(0), 12.0), Eval("a", w(1), 11.0))
       q.processAllAvailable() // 2 breaches < hold: nothing fires
@@ -59,7 +56,7 @@ class StreamingHeldAlertSpec extends AnyFunSuite {
       ("RESOLVED", w(0), w(4), 3.0)))
   }
 
-  rtest("an absent window breaks the run — no data is not evidence of breach") {
+  test("an absent window breaks the run — no data is not evidence of breach") {
     val got = run("held_gap") { (src, q) =>
       // w0,w1 breach; w2 missing; w3..w5 breach — only the second run
       // reaches hold=3, and `since` must be w3, not w0
@@ -71,7 +68,7 @@ class StreamingHeldAlertSpec extends AnyFunSuite {
       Seq(("FIRING", w(3), w(5))))
   }
 
-  rtest("a gap while firing resolves at the first missed window") {
+  test("a gap while firing resolves at the first missed window") {
     val got = run("held_gap_firing") { (src, q) =>
       src.addData(Eval("a", w(0), 12.0), Eval("a", w(1), 12.0),
         Eval("a", w(2), 12.0))
@@ -86,7 +83,7 @@ class StreamingHeldAlertSpec extends AnyFunSuite {
     assert(got.filter(_.phase == "RESOLVED").forall(_.metric.isNaN))
   }
 
-  rtest("stale-series timer resolves a firing alert when the series vanishes") {
+  test("stale-series timer resolves a firing alert when the series vanishes") {
     val got = run("held_stale", resolveAfterWindows = 2) { (src, q) =>
       src.addData(Eval("a", w(0), 12.0), Eval("a", w(1), 12.0),
         Eval("a", w(2), 12.0))
@@ -105,7 +102,7 @@ class StreamingHeldAlertSpec extends AnyFunSuite {
     assert(a.last.metric.isNaN)
   }
 
-  rtest("chains after a real windowed aggregate in one query (multi-stateful Append)") {
+  test("chains after a real windowed aggregate in one query (multi-stateful Append)") {
     // end-to-end: raw samples → watermarked 60 s tumbling avg →
     // held-for — the composition the monitoring layer runs
     val source = MemoryStream[Sample](spark)
@@ -141,7 +138,7 @@ class StreamingHeldAlertSpec extends AnyFunSuite {
       ("RESOLVED", w(0), w(2), 1.0)))
   }
 
-  rtest("parity with the batch twin: one FIRING per qualifying island") {
+  test("parity with the batch twin: one FIRING per qualifying island") {
     // deterministic pseudo-random eval sequence over 3 keys x 40
     // windows; the streaming FIRING count must equal the batch
     // gaps-and-islands count on identical data
@@ -178,7 +175,7 @@ class StreamingHeldAlertSpec extends AnyFunSuite {
       s"streaming fired $fired, batch islands $batchIslands")
   }
 
-  rtest("soak: 1e4 keys fire and resolve exactly once; state is bounded") {
+  test("soak: 1e4 keys fire and resolve exactly once; state is bounded") {
     val n = 10000
     val source = MemoryStream[Eval](spark)
     val out = StreamingHeldAlert.alerts(source.toDS(), windowSeconds = 60L,
@@ -210,7 +207,7 @@ class StreamingHeldAlertSpec extends AnyFunSuite {
       s"state not bounded by keys: ${stateRows.max}")
   }
 
-  rtest("invalid parameters fail at plan time") {
+  test("invalid parameters fail at plan time") {
     val source = MemoryStream[Eval](spark)
     intercept[IllegalArgumentException] {
       StreamingHeldAlert.alerts(source.toDS(), 0L, 1.0, 1)

@@ -24,11 +24,8 @@ class StreamingMinhashDedupSpec extends AnyFunSuite {
     .map(i => if (i == 20) "edited" else s"tok$i").mkString(" ")
   private val unrelated = (0 until 40).map(i => s"zzz$i").mkString(" ")
 
-  /** transformWithState needs the RocksDB provider — scope it per test. */
-  private def rtest(name: String)(body: => Any): Unit =
-    test(name)(RocksDbTestSupport.withRocksDb(spark)(body))
 
-  rtest("cross-batch near-dup hits in the jaccard regime; TTL purges old docs") {
+  test("cross-batch near-dup hits in the jaccard regime; TTL purges old docs") {
     val source = MemoryStream[DocText](spark)
     val hits = StreamingMinhashDedup.detect(source.toDS(),
       n = 3, threshold = 0.7, watermarkDelay = "10 minutes",
@@ -68,7 +65,7 @@ class StreamingMinhashDedupSpec extends AnyFunSuite {
     assert(math.abs(ests.head - 35.0 / 41.0) < 0.12)
   }
 
-  rtest("bounded state: maxBucketEntries evicts oldest; identical docs estimate 1.0") {
+  test("bounded state: maxBucketEntries evicts oldest; identical docs estimate 1.0") {
     val source = MemoryStream[DocText](spark)
     val hits = StreamingMinhashDedup.detect(source.toDS(),
       n = 3, threshold = 0.7, watermarkDelay = "10 minutes",
@@ -98,7 +95,7 @@ class StreamingMinhashDedupSpec extends AnyFunSuite {
       s"state rows not bounded: ${stateRows.mkString(",")}")
   }
 
-  rtest("the 64/16 operating point finds the same pairs as 128/32") {
+  test("the 64/16 operating point finds the same pairs as 128/32") {
     // parity at the measured 2x-throughput capacity point
     // (STREAMBENCH.md): same rows-per-band r=4, so the 0.854-Jaccard
     // near-dup and the unrelated doc land on the same sides of the

@@ -15,8 +15,7 @@ class StreamingProfileSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def run(batches: Seq[ColValue]*): Seq[ColProfile] =
-    RocksDbTestSupport.withRocksDb(spark) {
+  private def run(batches: Seq[ColValue]*): Seq[ColProfile] = {
     val source = MemoryStream[ColValue](spark)
     val out = StreamingProfile.monitor(source.toDS())
     val name = s"prof_out_${System.nanoTime()}"

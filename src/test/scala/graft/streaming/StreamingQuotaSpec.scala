@@ -14,7 +14,7 @@ class StreamingQuotaSpec extends AnyFunSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private def run(quota: Long, retainDays: Int, batches: Seq[FileEvent]*)
-      : Seq[Admission] = RocksDbTestSupport.withRocksDb(spark) {
+      : Seq[Admission] = {
     val source = MemoryStream[FileEvent](spark)
     val out = StreamingQuota.enforce(source.toDS(), quota, retainDays)
     val name = s"quota_out_${System.nanoTime()}"

@@ -20,8 +20,6 @@ class StreamingRateLimitSpec extends AnyFunSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
   private val t0 = ts("2024-03-05 07:00:00").getTime
 
-  private def rtest(name: String)(body: => Any): Unit =
-    test(name)(RocksDbTestSupport.withRocksDb(spark)(body))
 
   private def drive(splits: Seq[Seq[FetchRequest]], name: String)
       : Seq[FetchDecision] = {
@@ -39,7 +37,7 @@ class StreamingRateLimitSpec extends AnyFunSuite {
   private def req(domain: String, url: String, offsetMs: Long) =
     FetchRequest(domain, url, new Timestamp(t0 + offsetMs))
 
-  rtest("token bucket: burst admits, depletion denies with the exact " +
+  test("token bucket: burst admits, depletion denies with the exact " +
       "retry instant, refill re-admits, domains are isolated") {
     val reqs = Seq(
       req("a.test", "u0", 0L), // full bucket 2000 → admit, 1000 left
@@ -59,7 +57,7 @@ class StreamingRateLimitSpec extends AnyFunSuite {
       b.head.milliTokensAfter == 1000L)
   }
 
-  rtest("decisions are invariant to micro-batch splits; cross-batch " +
+  test("decisions are invariant to micro-batch splits; cross-batch " +
       "state carries; long idle refills to exactly the burst cap") {
     val reqs = Seq(
       req("c.test", "u0", 0L),
@@ -80,7 +78,7 @@ class StreamingRateLimitSpec extends AnyFunSuite {
     assert(all(4).milliTokensAfter == 1000L)
   }
 
-  rtest("a late event refills nothing but still charges; the bucket " +
+  test("a late event refills nothing but still charges; the bucket " +
       "clock never runs backwards") {
     val reqs = Seq(
       req("d.test", "u0", 5000L), // fresh full → admit, 1000 left

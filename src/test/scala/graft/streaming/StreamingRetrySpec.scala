@@ -16,11 +16,8 @@ class StreamingRetrySpec extends AnyFunSuite {
   private def at(seconds: Int) =
     new Timestamp(t0.getTime + seconds * 1000L)
 
-  /** transformWithState needs the RocksDB provider — scope it per test. */
-  private def rtest(name: String)(body: => Any): Unit =
-    test(name)(RocksDbTestSupport.withRocksDb(spark)(body))
 
-  rtest("reference schedule: 5s then 10s backoff across batches, then DEAD") {
+  test("reference schedule: 5s then 10s backoff across batches, then DEAD") {
     val source = MemoryStream[AttemptResult](spark)
     val out = StreamingRetry.schedule(source.toDS())
     val q = out.writeStream.format("memory")
@@ -61,7 +58,7 @@ class StreamingRetrySpec extends AnyFunSuite {
     assert(r3.last.due == at(61))
   }
 
-  rtest("backoff is capped; successes and duplicate failures are no-ops") {
+  test("backoff is capped; successes and duplicate failures are no-ops") {
     val source = MemoryStream[AttemptResult](spark)
     // initial 40 s, x2 -> 80 s uncapped, cap 60 s
     val out = StreamingRetry.schedule(source.toDS(),
@@ -82,7 +79,7 @@ class StreamingRetrySpec extends AnyFunSuite {
       Seq(("RETRY", "m1", 3, at(60))))
   }
 
-  rtest("wall-clock mode: dispatch happens in real elapsed time, no watermark") {
+  test("wall-clock mode: dispatch happens in real elapsed time, no watermark") {
     val source = MemoryStream[AttemptResult](spark)
     val out = StreamingRetry.schedule(source.toDS(),
       initialDelayMs = 2000L, wallClock = true)
@@ -108,7 +105,7 @@ class StreamingRetrySpec extends AnyFunSuite {
     assert(elapsed >= 2000L, s"dispatched after only ${elapsed}ms")
   }
 
-  rtest("soak: 1e4 in-flight messages dispatch exactly once, state drains") {
+  test("soak: 1e4 in-flight messages dispatch exactly once, state drains") {
     // per-key state is one Waiting record + one timer; after dispatch
     // both clear, so 1e4 concurrent failures must produce exactly 1e4
     // RETRY rows (no duplicates, no drops) once the watermark passes
@@ -135,7 +132,7 @@ class StreamingRetrySpec extends AnyFunSuite {
     assert(got.forall(d => d.payload == s"p${d.msgId.drop(1)}"))
   }
 
-  rtest("invalid parameters fail at plan time") {
+  test("invalid parameters fail at plan time") {
     val source = MemoryStream[AttemptResult](spark)
     intercept[IllegalArgumentException] {
       StreamingRetry.schedule(source.toDS(), initialDelayMs = 0L)

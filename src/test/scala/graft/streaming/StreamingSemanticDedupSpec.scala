@@ -23,10 +23,8 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
   private val farSameCell = Array(1f, 1f, 1f, 1f, 1f, 1f, -5f, 5f)
   private val otherCell = Array(-1f, 1f, 1f, 1f, 1f, 1f, 0.5f, 0.5f)
 
-  private def rtest(name: String)(body: => Any): Unit =
-    test(name)(RocksDbTestSupport.withRocksDb(spark)(body))
 
-  rtest("cross-batch semantic hit with the EXACT batch cosine; cells isolate") {
+  test("cross-batch semantic hit with the EXACT batch cosine; cells isolate") {
     val source = MemoryStream[VecEvent](spark)
     val hits = StreamingSemanticDedup.detect(source.toDS(),
       threshold = 0.9, bits = 6, watermarkDelay = "10 minutes",
@@ -52,7 +50,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     assert(out.head.cosine > 0.99)
   }
 
-  rtest("single-batch hit set equals the batch cell-local pair set (real corpus)") {
+  test("single-batch hit set equals the batch cell-local pair set (real corpus)") {
     val sf = "/root/testdata/sf0.001"
     val rows = spark.read.parquet(s"$sf/embeddings.parquet")
       .collect()
@@ -86,7 +84,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
       s"missed=${(expected -- got).size} extra=${(got -- expected).size}")
   }
 
-  rtest("event-time TTL purges residents; bounded cells evict oldest first") {
+  test("event-time TTL purges residents; bounded cells evict oldest first") {
     val source = MemoryStream[VecEvent](spark)
     val hits = StreamingSemanticDedup.detect(source.toDS(),
       threshold = 0.9, bits = 6, watermarkDelay = "10 minutes",

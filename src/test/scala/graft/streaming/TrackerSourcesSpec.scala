@@ -15,33 +15,55 @@ class TrackerSourcesSpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  test("transfer tracker emits terminal updates with latency and times out stalled transfers") {
+  /** The tracker behind a 1-minute watermark, one micro-batch per
+    * element of `batches`; returns every update it emitted. */
+  private def track(name: String, batches: Seq[StatusEvent]*)
+      : Map[String, TransferUpdate] = {
     val source = MemoryStream[StatusEvent](spark)
-    val tracked = TransferTracker.track(
-      source.toDS().withWatermark("eventTime", "1 minute")
-        .as[StatusEvent])
-    val q = tracked.writeStream.format("memory")
-      .queryName("tracker_out").outputMode("append").start()
-
-    source.addData(
-      StatusEvent("c1", "RECEIVED", ts("2024-03-05 07:00:00")),
-      StatusEvent("c2", "RECEIVED", ts("2024-03-05 07:00:30")))
-    q.processAllAvailable()
-    // c1 completes quickly; c2 never completes
-    source.addData(StatusEvent("c1", "PROCESSED", ts("2024-03-05 07:02:00")))
-    q.processAllAvailable()
-    // advance event time past c2's 10-minute timeout + watermark
-    source.addData(StatusEvent("c9", "RECEIVED", ts("2024-03-05 07:30:00")))
-    q.processAllAvailable()
+    val q = TransferTracker.track(
+      source.toDS().withWatermark("eventTime", "1 minute").as[StatusEvent])
+      .writeStream.format("memory").queryName(name).outputMode("append")
+      .start()
+    batches.foreach { b => source.addData(b); q.processAllAvailable() }
     q.stop()
+    val out = spark.table(name).as[TransferUpdate].collect()
+    assert(out.length == out.map(_.correlationId).distinct.length,
+      "a transfer resolved twice")
+    out.map(u => u.correlationId -> u).toMap
+  }
 
-    val out = spark.table("tracker_out").as[TransferUpdate].collect()
-      .map(u => u.correlationId -> u).toMap
+  test("transfer tracker emits terminal updates with latency and times out stalled transfers") {
+    val out = track("tracker_out",
+      Seq(StatusEvent("c1", "RECEIVED", ts("2024-03-05 07:00:00")),
+        StatusEvent("c2", "RECEIVED", ts("2024-03-05 07:00:30"))),
+      // c1 completes quickly; c2 never completes
+      Seq(StatusEvent("c1", "PROCESSED", ts("2024-03-05 07:02:00"))),
+      // advance event time past c2's 10-minute timeout + watermark
+      Seq(StatusEvent("c9", "RECEIVED", ts("2024-03-05 07:30:00"))))
     assert(out("c1").finalStatus == "PROCESSED")
     assert(out("c1").latencyMs == 120000L)
     assert(out("c1").updates == 2)
     assert(out("c2").finalStatus == "STALLED")
     assert(!out.contains("c9")) // still in flight, no update emitted
+  }
+
+  test("a transfer completing in the batch its timeout passes emits " +
+       "PROCESSED and no STALLED") {
+    // without no-data batches an advanced watermark first applies to
+    // the next data batch, so x1's terminal event and its expired timer
+    // meet in one batch (a query reads the setting when it starts)
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(key, "false")
+    val out = try track("tracker_same_batch",
+      Seq(StatusEvent("x1", "RECEIVED", ts("2024-03-05 07:00:00")),
+        StatusEvent("y1", "RECEIVED", ts("2024-03-05 07:00:00"))),
+      // moves the watermark to 07:19, past both 07:10 timeouts
+      Seq(StatusEvent("z1", "RECEIVED", ts("2024-03-05 07:20:00"))),
+      Seq(StatusEvent("x1", "PROCESSED", ts("2024-03-05 07:21:00"))))
+    finally spark.conf.unset(key)
+    assert(out.values.map(u => (u.correlationId, u.finalStatus, u.updates,
+      u.latencyMs)).toSet == Set(("x1", "PROCESSED", 2, 21 * 60000L),
+      ("y1", "STALLED", 1, TransferTracker.TimeoutMs)))
   }
 
   test("soak: 1e5 keys with out-of-order + replayed events — bounded state, exact STALLED set") {
@@ -114,8 +136,7 @@ class TrackerSourcesSpec extends AnyFunSuite {
     assert(stateRows.last == 1L || stateRows.last == 0L) // sentinel only
   }
 
-  test("streaming simhash dedup: online hits, cross-chunk dedup, TTL expiry")(
-      RocksDbTestSupport.withRocksDb(spark) {
+  test("streaming simhash dedup: online hits, cross-chunk dedup, TTL expiry") {
     import StreamingDedup.{DocEvent, NearDupHit}
     val source = MemoryStream[DocEvent](spark)
     // raw hit stream: duplicate-tolerant by contract (one hit per
@@ -149,7 +170,7 @@ class TrackerSourcesSpec extends AnyFunSuite {
     val got = spark.table("sdedup_out").as[NearDupHit].collect()
       .map(h => (h.docId, h.matchedId, h.hamming)).toSet
     assert(got == Set((2L, 1L, 1), (4L, 1L, 0), (4L, 2L, 1)))
-  })
+  }
 
   test("file monitor source streams new files through the pattern filter") {
     val dir = Files.createTempDirectory("graft-files")
