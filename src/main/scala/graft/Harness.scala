@@ -2,12 +2,12 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.SparkSession
 
-/** The kit every `main` harness shares: one session, one query filter,
-  * one JSON renderer and one streaming drive loop with its word
-  * generator. Harness settings live here and nowhere else.
+/** The kit every `main` harness shares: one session, one query filter
+  * and one JSON renderer. Harness settings live here and nowhere else;
+  * the streaming drive loop and its workload generator belong to the one
+  * streaming census, [[StreamBench]].
   */
 object Harness {
 
@@ -71,50 +71,4 @@ object Harness {
 
   /** A JSON array of already-rendered values. */
   def arr(values: Seq[Any]): String = values.mkString("[", ",", "]")
-
-  /** One drive of a streaming query: its checkpoint, the wall time of
-    * each timed batch and the sink rows those batches produced.
-    */
-  final case class Drive(checkpoint: String, batchNanos: Seq[Long],
-                         outRows: Long)
-
-  /** Runs `out` (derived from `source`) into a memory sink from a fresh
-    * checkpoint: each `warmup` batch untimed, then each of `batches` timed
-    * as one addData -> processAllAvailable cycle (Spark's no-data
-    * watermark batches included). The query is stopped on return, so the
-    * checkpoint can be read back.
-    */
-  def drive[I](spark: SparkSession, source: MemoryStream[I],
-               out: Dataset[_], tag: String, batches: Seq[Seq[I]],
-               warmup: Seq[Seq[I]] = Nil): Drive = {
-    val safe = tag.replaceAll("[^A-Za-z0-9_]", "_")
-    val chk = java.nio.file.Files.createTempDirectory(s"drive-$safe").toString
-    val name = s"drive_${safe}_${System.nanoTime()}"
-    val q = out.writeStream.option("checkpointLocation", chk)
-      .format("memory").queryName(name).outputMode("append").start()
-    def run(b: Seq[I]): Unit = { source.addData(b); q.processAllAvailable() }
-    warmup.foreach(run)
-    val warmRows = spark.table(name).count()
-    val nanos = batches.map { b =>
-      val t0 = System.nanoTime()
-      run(b)
-      System.nanoTime() - t0
-    }
-    q.stop()
-    val outRows = spark.table(name).count() - warmRows
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    Drive(chk, nanos, outRows)
-  }
-
-  /** Next state of the deterministic generator behind every workload (no
-    * RNG: replay-stable inputs). */
-  def lcg(seed: Long): Long =
-    seed * 6364136223846793005L + 1442695040888963407L
-
-  /** `n` words "w<k>", k < `vocab`, drawn from the generator at `seed`. */
-  def words(seed: Long, n: Int, vocab: Int): String = {
-    var s = seed
-    (0 until n).map { _ => s = lcg(s); "w" + Math.floorMod(s, vocab.toLong) }
-      .mkString(" ")
-  }
 }

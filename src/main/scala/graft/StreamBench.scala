@@ -1,337 +1,443 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Streaming THROUGHPUT/LATENCY census — the measurement the batch
-  * family already has (Bench) and the state family got in round 9
-  * (StateAudit measures state SIZE): each headline stateful operator is
-  * driven with a generated multi-batch workload through a fresh RocksDB
-  * checkpoint, and the run records rows/sec plus per-micro-batch wall
-  * latency into `STREAMBENCH.md` + `streambench.json` — the numbers a
-  * capacity plan is actually made from. Protocol: one UNTIMED warm-up
-  * batch (query start + state-store open are one-time costs a
-  * steady-state throughput claim must not dilute — the Bench warm-up
-  * discipline), then `batches` timed addData→processAllAvailable
-  * cycles; each cycle is one micro-batch (plus Spark's no-data
-  * watermark batches, which are real streaming cost and stay inside
-  * the timed window). StreamBenchSpec keeps two small censuses inside
-  * `sbt test` with an order-of-magnitude floor so a 10× throughput
-  * regression fails the build, while staying far from the noise band.
+import graft.streaming._
+
+/** The streaming census: each stateful operator row is declared once in
+  * [[entries]] and driven once per run, through a fresh RocksDB
+  * checkpoint, with a generated multi-batch workload. One drive answers
+  * two questions:
+  *
+  *  - throughput and latency: rows/sec and per-micro-batch wall time over
+  *    the timed batches, the numbers a capacity plan is made from;
+  *  - state size: the operator's state is read back from the checkpoint
+  *    with Spark's `statestore` source (the offline path a runbook uses)
+  *    and its rows are compared to a bound computed from the workload.
+  *
+  * Protocol: one untimed warm-up batch (query start and state-store open
+  * are one-time costs a steady-state figure must not dilute), then
+  * `nBatches` timed addData -> processAllAvailable cycles; each cycle is
+  * one micro-batch plus Spark's no-data watermark batches, which are real
+  * streaming cost and stay inside the timed window. Event time advances
+  * with the batch, so watermarks move and timers and TTL purges fire
+  * inside the measurement. The main writes `STREAMBENCH.md` and
+  * `streambench.json` and exits 1 if any bound is violated.
   *
   * Single-machine caveat, stated on the artifact too: local[N] numbers
   * measure the per-core operator cost (hash, state probe, timer churn)
-  * and micro-batch overhead — cluster throughput scales with
-  * parallelism on the shuffle key, which every operator here keys by
-  * a high-cardinality column precisely so that holds.
+  * and micro-batch overhead; cluster throughput scales with parallelism
+  * on the shuffle key, which every operator here keys by a
+  * high-cardinality column precisely so that holds.
   */
 object StreamBench {
-  import Harness.lcg
 
-  final case class Bench(operator: String, eventsIn: Long, batches: Int,
-                         outRows: Long, wallSec: Double, rowsPerSec: Double,
-                         meanBatchMs: Double, maxBatchMs: Long)
+  /** One census row: operator `name`, its plan over the input, the
+    * generated micro-batch `batch(b, perBatch)` (b = -1 is the warm-up,
+    * 0.. the timed batches), the state variable read back from the
+    * checkpoint (None: the operator's built-in store) and `bound`, the
+    * most state rows the driven batches (warm-up first) may leave,
+    * described by `formula`.
+    */
+  final case class Entry[I](name: String, build: Dataset[I] => Dataset[_],
+                            batch: (Int, Int) => Seq[I],
+                            stateVar: Option[String], formula: String,
+                            bound: Seq[Seq[I]] => Long)(
+      implicit val enc: Encoder[I])
 
-  private def ts(s: String) = Timestamp.valueOf(s)
-  /** Minute `m` of the workload clock — batches advance event time so
-    * watermarks move and timers actually fire (state turnover is part
-    * of the measured cost, not an idle-state best case). */
-  private def minute(m: Int): Timestamp =
-    new Timestamp(ts("2024-03-05 00:00:00").getTime + m * 60000L)
-
-  /** One untimed warm-up batch, then the timed batches. outRows counts
-    * the TIMED window only, so warm-up rows don't inflate the output
-    * ratio (they did until round 10 — e.g. BloomDedup showed 36000 out of
-    * 32000 in). */
-  private def measure[I](spark: SparkSession, source: MemoryStream[I],
-                         out: Dataset[_], tag: String,
-                         warmup: Seq[I], batches: Seq[Seq[I]]): Bench = {
-    val d = Harness.drive(spark, source, out, tag, batches, Seq(warmup))
-    val n = batches.map(_.size.toLong).sum
-    val wallSec = d.batchNanos.sum / 1e9
-    Bench(tag, n, batches.size, d.outRows, wallSec, n / wallSec,
-      d.batchNanos.sum / 1e6 / batches.size, d.batchNanos.max / 1000000L)
+  /** One measured row: the timed window's throughput and latency, then
+    * the state left in the checkpoint against its bound. */
+  final case class Result(operator: String, eventsIn: Long, batches: Int,
+                          outRows: Long, wallSec: Double, rowsPerSec: Double,
+                          meanBatchMs: Double, maxBatchMs: Long,
+                          stateVar: String, keys: Long, stateRows: Long,
+                          bound: Long, formula: String) {
+    def held: Boolean = stateRows <= bound
   }
 
-  private def words(seed: Long, n: Int) = Harness.words(seed, n, 5000)
+  /** Next state of the deterministic generator behind every workload (no
+    * RNG: replay-stable inputs). */
+  private def lcg(seed: Long): Long =
+    seed * 6364136223846793005L + 1442695040888963407L
 
-  /** streambench.json: one object per operator. */
-  def json(benches: Seq[Bench]): String = {
-    import Harness.{num, obj}
-    obj(benches.map(b => b.operator -> obj("eventsIn" -> b.eventsIn,
-      "batches" -> b.batches, "outRows" -> b.outRows,
-      "wallSec" -> num(b.wallSec, 3), "rowsPerSec" -> num(b.rowsPerSec, 0),
-      "meanBatchMs" -> num(b.meanBatchMs, 1),
-      "maxBatchMs" -> b.maxBatchMs)): _*)
+  /** `n` words "w<k>", k < 5000, drawn from the generator at `seed`. */
+  private def words(seed: Long, n: Int): String = {
+    var s = seed
+    (0 until n).map { _ => s = lcg(s); "w" + Math.floorMod(s, 5000L) }
+      .mkString(" ")
   }
 
-  def benchTracker(spark: SparkSession, perBatch: Int, nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.TransferTracker
-    val src = MemoryStream[TransferTracker.StatusEvent](spark)
-    val out = TransferTracker.track(
-      src.toDS().withWatermark("eventTime", "1 minute")
-        .as[TransferTracker.StatusEvent])
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      val id = (b * perBatch + i) / 2 // two events per transfer
-      val st = if (i % 2 == 0) "RECEIVED"
-               else if (id % 10 == 0) "FAILED" else "PROCESSED"
-      TransferTracker.StatusEvent(s"corr$id", st, minute(b))
-    }
-    measure(spark, src, out, "TransferTracker", batch(-1),
-      (0 until nBatches).map(batch))
+  private val Minute = 60000L
+  private val Hour = 60 * Minute
+  private val t0 = Timestamp.valueOf("2024-03-05 00:00:00").getTime
+  /** Minute `m` of the workload clock. */
+  private def minute(m: Int): Timestamp = new Timestamp(t0 + m * Minute)
+
+  /** Events of `bs` still inside a `ttlMs` window under the watermark
+    * the last batch runs under, `delayMs` behind the latest event time
+    * of the batches before it: a purge on read or a timer frees no
+    * state younger than that. */
+  private def live[I](bs: Seq[Seq[I]], ttlMs: Long, delayMs: Long)(
+      at: I => Timestamp): Seq[I] = {
+    val wm = bs.init.flatten.map(at(_).getTime).max - delayMs
+    bs.flatten.filter(at(_).getTime + ttlMs > wm)
   }
 
-  def benchSimhashDedup(spark: SparkSession, perBatch: Int,
-                        nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.StreamingDedup
-    val src = MemoryStream[StreamingDedup.DocEvent](spark)
-    val out = StreamingDedup.detect(src.toDS())
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      val id = b.toLong * perBatch + i
-      // every 16th doc duplicates ONE doc from the previous batch (a
-      // dup PAIR, not a growing chain — chains would amplify output
-      // quadratically and bench the workload, not the operator)
-      val h = lcg(1000000L +
-        (if (i % 16 == 0) (b - 1).toLong * perBatch + i + 1 else id))
-      StreamingDedup.DocEvent(id, h, minute(b))
-    }
-    measure(spark, src, out, "StreamingDedup(simhash)", batch(-1),
-      (0 until nBatches).map(batch))
+  private def tracker = {
+    import TransferTracker.StatusEvent
+    implicit val enc: Encoder[StatusEvent] = Encoders.product[StatusEvent]
+    Entry[StatusEvent]("TransferTracker",
+      ds => TransferTracker.track(ds.withWatermark("eventTime", "1 minute")
+        .as[StatusEvent]),
+      (b, n) => (0 until n).map { i =>
+        val id = (b * n + i) / 2 // two events per transfer
+        val st = if (i % 2 == 0) "RECEIVED"
+                 else if (id % 10 == 0) "FAILED" else "PROCESSED"
+        StatusEvent(s"corr$id", st, minute(b))
+      },
+      Some("transfer"),
+      "transfers with no terminal status in their latest batch, inside the timeout",
+      bs => live(bs, TransferTracker.TimeoutMs, Minute)(_.eventTime)
+        .groupBy(_.correlationId).values.count { evs =>
+          val last = evs.map(_.eventTime.getTime).max
+          evs.filter(_.eventTime.getTime == last).forall(_.status == "RECEIVED")
+        }.toLong)
   }
 
-  /** Both capacity-plan operating points are measured: the default
+  private def extractCensus = {
+    import StreamingExtractCensus.DocBytes
+    implicit val enc: Encoder[DocBytes] = Encoders.product[DocBytes]
+    // the probe is the cost: full parser dispatch per record over a
+    // txt/html/rtf/malformed mix
+    Entry[DocBytes]("StreamingExtractCensus", StreamingExtractCensus.census,
+      (b, n) => (0 until n).map { i =>
+        val id = b.toLong * n + i
+        val bytes: Array[Byte] = (i % 4) match {
+          case 0 => ("plain " + words(id, 30)).getBytes("UTF-8")
+          case 1 => ("<p>" + words(id, 30) + "</p>").getBytes("UTF-8")
+          case 2 => ("{\\rtf1\\ansi " + words(id, 30) + "}")
+            .getBytes("ISO-8859-1")
+          case _ => Array[Byte](0xc0.toByte)
+        }
+        DocBytes(id, bytes)
+      },
+      Some("counts"), "one (format, reason) row per workload arm: 4",
+      _ => 4L)
+  }
+
+  private def simhashDedup = {
+    import StreamingDedup.DocEvent
+    implicit val enc: Encoder[DocEvent] = Encoders.product[DocEvent]
+    Entry[DocEvent]("StreamingDedup(simhash)", StreamingDedup.detect(_),
+      (b, n) => (0 until n).map { i =>
+        val id = b.toLong * n + i
+        // every 16th doc duplicates ONE doc from the previous batch (a
+        // dup PAIR, not a growing chain — chains would amplify output
+        // quadratically and bench the workload, not the operator)
+        val h = lcg(1000000L +
+          (if (i % 16 == 0) (b - 1).toLong * n + i + 1 else id))
+        DocEvent(id, h, minute(b))
+      },
+      Some("entries"), "docs inside the 1 h TTL × 4 simhash chunks",
+      bs => live(bs, Hour, 10 * Minute)(_.eventTime).size * 4L)
+  }
+
+  /** Both capacity-plan operating points are census rows: the default
     * 128/32 (P[miss|j=0.8] ≈ 5e-8) and 64/16 — same rows-per-band, half
     * the bucket visits and half the signature bytes — which trades
-    * recall (≈ 2e-4) for roughly 2× throughput. A plan picks a row; it
-    * should not have to re-derive it.
+    * recall (≈ 2e-4) for throughput. A plan picks a row; it should not
+    * have to re-derive it.
     */
-  def benchMinhashDedup(spark: SparkSession, perBatch: Int,
-                        nBatches: Int, numHashes: Int = 128,
-                        bands: Int = 32): Bench = {
-    import spark.implicits._
-    import streaming.StreamingMinhashDedup
-    val src = MemoryStream[StreamingMinhashDedup.DocText](spark)
-    val out = StreamingMinhashDedup.detect(src.toDS(),
-      numHashes = numHashes, bands = bands)
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      val id = b.toLong * perBatch + i
-      // every 32nd doc duplicates ONE previous-batch doc (pairs, not
-      // chains — identical docs hit in all 32 bands, so dup density
-      // is the output-amplification knob)
-      StreamingMinhashDedup.DocText(id,
-        words(1000000L +
-          (if (i % 32 == 0) (b - 1).toLong * perBatch + i + 1 else id),
-          30), minute(b))
-    }
-    val tag = if (numHashes == 128 && bands == 32) "StreamingMinhashDedup"
-      else s"StreamingMinhashDedup(${numHashes}x$bands)"
-    measure(spark, src, out, tag, batch(-1),
-      (0 until nBatches).map(batch))
+  private def minhashDedup(numHashes: Int, bands: Int) = {
+    import StreamingMinhashDedup.DocText
+    implicit val enc: Encoder[DocText] = Encoders.product[DocText]
+    Entry[DocText](
+      if (numHashes == 128 && bands == 32) "StreamingMinhashDedup"
+      else s"StreamingMinhashDedup(${numHashes}x$bands)",
+      StreamingMinhashDedup.detect(_, numHashes = numHashes, bands = bands),
+      (b, n) => (0 until n).map { i =>
+        val id = b.toLong * n + i
+        // every 32nd doc duplicates ONE previous-batch doc (pairs, not
+        // chains — identical docs hit in all bands, so dup density is
+        // the output-amplification knob)
+        DocText(id, words(1000000L +
+          (if (i % 32 == 0) (b - 1).toLong * n + i + 1 else id), 30),
+          minute(b))
+      },
+      Some("bucket"),
+      s"distinct texts inside the 1 h TTL × $bands bands (one packed row per bucket)",
+      bs => live(bs, Hour, 10 * Minute)(_.eventTime).map(_.text).distinct
+        .size.toLong * bands)
   }
 
-  def benchCdcChunkDedup(spark: SparkSession, perBatch: Int,
-                         nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.{StreamingCdcChunkDedup, StreamingChunkDedup}
-    val src = MemoryStream[StreamingChunkDedup.DocText](spark)
-    val out = StreamingCdcChunkDedup.dedup(src.toDS())
+  private def cdcChunkDedup = {
+    import StreamingChunkDedup.DocText
+    implicit val enc: Encoder[DocText] = Encoders.product[DocText]
     def text(seed: Long): String =
       (0 until 12).map(k =>
         "w" + Math.floorMod(lcg(seed * 31 + k), 5000)).mkString(" ")
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      val id = b.toLong * perBatch + i
-      // every 16th doc repeats ONE text from the previous batch (a dup
-      // pair, not a chain — the benchSimhashDedup rationale)
-      val seed = if (i % 16 == 0) (b - 1).toLong * perBatch + i + 1
-                 else id
-      StreamingChunkDedup.DocText(id, text(seed), minute(b))
-    }
-    measure(spark, src, out, "StreamingCdcChunkDedup", batch(-1),
-      (0 until nBatches).map(batch))
+    Entry[DocText]("StreamingCdcChunkDedup", StreamingCdcChunkDedup.dedup(_),
+      (b, n) => (0 until n).map { i =>
+        val id = b.toLong * n + i
+        // every 16th doc repeats ONE text from the previous batch (a dup
+        // pair, not a chain — the simhash rationale)
+        val seed = if (i % 16 == 0) (b - 1).toLong * n + i + 1 else id
+        DocText(id, text(seed), minute(b))
+      },
+      Some("owner"), "distinct CDC chunks of the docs inside the 1 h TTL",
+      bs => live(bs, Hour, 10 * Minute)(_.eventTime).map(_.text).distinct
+        .flatMap(t => functions.CdcKernels.cdcChunks(
+          UTF8String.fromString(t), 16).map(_.toString))
+        .distinct.size.toLong)
   }
 
-  def benchRateLimit(spark: SparkSession, perBatch: Int,
-                     nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.StreamingRateLimit
-    val src = MemoryStream[StreamingRateLimit.FetchRequest](spark)
-    val out = StreamingRateLimit.limit(src.toDS(), ratePerSec = 2L,
-      burst = 4L)
-    val nDomains = 500
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      StreamingRateLimit.FetchRequest(s"dom${i % nDomains}",
-        s"u${b.toLong * perBatch + i}", minute(b))
-    }
-    measure(spark, src, out, "StreamingRateLimit", batch(-1),
-      (0 until nBatches).map(batch))
+  private def rateLimit = {
+    import StreamingRateLimit.FetchRequest
+    implicit val enc: Encoder[FetchRequest] = Encoders.product[FetchRequest]
+    Entry[FetchRequest]("StreamingRateLimit",
+      StreamingRateLimit.limit(_, ratePerSec = 2L, burst = 4L),
+      (b, n) => (0 until n).map { i =>
+        FetchRequest(s"dom${i % 500}", s"u${b.toLong * n + i}", minute(b))
+      },
+      Some("bucket"), "domains active inside the 1 h TTL",
+      bs => live(bs, Hour, 10 * Minute)(_.eventTime).map(_.domain).distinct
+        .size.toLong)
   }
 
-  def benchBloomDedup(spark: SparkSession, perBatch: Int,
-                      nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.StreamingBloomDedup
-    val src = MemoryStream[StreamingBloomDedup.DocKey](spark)
-    val out = StreamingBloomDedup.dedup(src.toDS())
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      val id = b.toLong * perBatch + i
-      StreamingBloomDedup.DocKey(id, "k" + (if (i % 4 == 0) id / 4 else id),
-        minute(b))
-    }
-    measure(spark, src, out, "StreamingBloomDedup", batch(-1),
-      (0 until nBatches).map(batch))
+  private def bloomDedup = {
+    import StreamingBloomDedup.DocKey
+    implicit val enc: Encoder[DocKey] = Encoders.product[DocKey]
+    Entry[DocKey]("StreamingBloomDedup", StreamingBloomDedup.dedup(_),
+      (b, n) => (0 until n).map { i =>
+        val id = b.toLong * n + i
+        DocKey(id, "k" + (if (i % 4 == 0) id / 4 else id), minute(b))
+      },
+      Some("words"),
+      "min(64 shards × 1024 filter words, distinct keys × 6 hashes)",
+      bs => math.min(64L * 1024, bs.flatten.map(_.key).distinct.size * 6L))
   }
 
-  def benchHeavyHitters(spark: SparkSession, perBatch: Int,
-                        nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.StreamingHeavyHitters
-    val src = MemoryStream[StreamingHeavyHitters.TokenEvent](spark)
-    val out = StreamingHeavyHitters.track(src.toDS())
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      // zipf-ish token draw: low ids are hot
-      val t = Math.floorMod(lcg(b.toLong * perBatch + i), 1000)
-      StreamingHeavyHitters.TokenEvent("t" + (t * t / 1000), minute(b))
-    }
-    measure(spark, src, out, "StreamingHeavyHitters", batch(-1),
-      (0 until nBatches).map(batch))
+  private def heavyHitters = {
+    import StreamingHeavyHitters.TokenEvent
+    implicit val enc: Encoder[TokenEvent] = Encoders.product[TokenEvent]
+    Entry[TokenEvent]("StreamingHeavyHitters", StreamingHeavyHitters.track(_),
+      (b, n) => (0 until n).map { i =>
+        // zipf-ish token draw: low ids are hot
+        val t = Math.floorMod(lcg(b.toLong * n + i), 1000)
+        TokenEvent("t" + (t * t / 1000), minute(b))
+      },
+      Some("counters"), "one SpaceSaving record per shard bucket: 16",
+      _ => 16L)
   }
 
-  def benchQuota(spark: SparkSession, perBatch: Int, nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.StreamingQuota
-    val src = MemoryStream[StreamingQuota.FileEvent](spark)
-    val out = StreamingQuota.enforce(src.toDS(), quotaBytes = 1000000L,
-      retainDays = 7)
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      StreamingQuota.FileEvent("src" + i % 200, s"f$b-$i.pdf",
-        1000L + i % 97, minute(b))
-    }
-    measure(spark, src, out, "StreamingQuota", batch(-1),
-      (0 until nBatches).map(batch))
+  private def quota = {
+    import StreamingQuota.FileEvent
+    implicit val enc: Encoder[FileEvent] = Encoders.product[FileEvent]
+    Entry[FileEvent]("StreamingQuota",
+      StreamingQuota.enforce(_, quotaBytes = 1000000L, retainDays = 7),
+      (b, n) => (0 until n).map { i =>
+        FileEvent("src" + i % 200, s"f$b-$i.pdf", 1000L + i % 97, minute(b))
+      },
+      Some("used"), "per source, min(7 retained days, UTC days seen)",
+      bs => bs.flatten.groupBy(_.sourceSystem).values.map { evs =>
+        math.min(7, evs.map(e => Math.floorDiv(e.eventTime.getTime,
+          24 * Hour)).distinct.size).toLong
+      }.sum)
   }
 
-  def benchSessions(spark: SparkSession, perBatch: Int,
-                    nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.StreamingSessions
-    val src = MemoryStream[StreamingSessions.UserEvent](spark)
-    val out = StreamingSessions.sessions(src.toDS(), gap = "5 minutes",
-      watermarkDelay = "1 minute")
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      // 7-min stride > 5-min gap: each batch's sessions close (and emit)
-      // once the next batch's watermark passes them
-      StreamingSessions.UserEvent(i % 500L, (i % 89) / 10.0, minute(b * 7))
-    }
-    measure(spark, src, out, "StreamingSessions", batch(-1),
-      (0 until nBatches).map(batch))
+  private def sessions = {
+    import StreamingSessions.UserEvent
+    implicit val enc: Encoder[UserEvent] = Encoders.product[UserEvent]
+    Entry[UserEvent]("StreamingSessions",
+      StreamingSessions.sessions(_, gap = "5 minutes",
+        watermarkDelay = "1 minute"),
+      (b, n) => (0 until n).map { i =>
+        // 7-min stride > 5-min gap: each batch's sessions close (and emit)
+        // once the next batch's watermark passes them
+        UserEvent(i % 500L, (i % 89) / 10.0, minute(b * 7))
+      },
+      None, "open sessions: (user, event time) pairs inside the gap",
+      bs => live(bs, 5 * Minute, Minute)(_.ts).map(u => (u.userId, u.ts))
+        .distinct.size.toLong)
   }
 
-  def benchCdcView(spark: SparkSession, perBatch: Int,
-                   nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.StreamingCdcView
-    val src = MemoryStream[StreamingCdcView.CdcOp](spark)
-    val out = StreamingCdcView.materialize(src.toDS())
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      val seq = b.toLong * perBatch + i
-      StreamingCdcView.CdcOp(i % 1000L, minute(b), seq,
-        if (i % 20 == 0) "d" else "u", (seq % 997).toDouble)
-    }
-    measure(spark, src, out, "StreamingCdcView", batch(-1),
-      (0 until nBatches).map(batch))
+  private def cdcView = {
+    import StreamingCdcView.CdcOp
+    implicit val enc: Encoder[CdcOp] = Encoders.product[CdcOp]
+    Entry[CdcOp]("StreamingCdcView", StreamingCdcView.materialize,
+      (b, n) => (0 until n).map { i =>
+        val seq = b.toLong * n + i
+        CdcOp(i % 1000L, minute(b), seq,
+          if (i % 20 == 0) "d" else "u", (seq % 997).toDouble)
+      },
+      Some("view"), "one view record per key",
+      bs => bs.flatten.map(_.key).distinct.size.toLong)
   }
 
-  def benchAffinity(spark: SparkSession, perBatch: Int,
-                    nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.StreamingAffinity
-    val src = MemoryStream[StreamingAffinity.ItemEvent](spark)
-    val out = StreamingAffinity.pairDeltas(src.toDS(), maxBasket = 20,
-      watermarkDelay = "1 minute", ttlMs = 10 * 60000L)
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      // ~16 items per basket; basket ids advance with the batch clock
-      val basket = (b.toLong * perBatch + i) / 16
-      StreamingAffinity.ItemEvent(basket,
-        "item" + Math.floorMod(lcg(i.toLong), 60), minute(b))
-    }
-    measure(spark, src, out, "StreamingAffinity", batch(-1),
-      (0 until nBatches).map(batch))
+  private def affinity = {
+    import StreamingAffinity.ItemEvent
+    implicit val enc: Encoder[ItemEvent] = Encoders.product[ItemEvent]
+    Entry[ItemEvent]("StreamingAffinity",
+      StreamingAffinity.pairDeltas(_, maxBasket = 20,
+        watermarkDelay = "1 minute", ttlMs = 10 * Minute),
+      (b, n) => (0 until n).map { i =>
+        // ~16 items per basket; basket ids advance with the batch clock
+        ItemEvent((b.toLong * n + i) / 16,
+          "item" + Math.floorMod(lcg(i.toLong), 60), minute(b))
+      },
+      Some("basket"), "baskets seen inside the 10 min TTL",
+      bs => live(bs, 10 * Minute, Minute)(_.eventTime).map(_.basketId)
+        .distinct.size.toLong)
   }
 
-  def benchCusum(spark: SparkSession, perBatch: Int,
-                 nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.StreamingCusum
-    val src = MemoryStream[StreamingCusum.DayPoint](spark)
-    val out = StreamingCusum.detect(src.toDS(), mu0Cents = 200L,
-      slackCents = 20L, threshCents = 600L)
-    // exactly 2 day points per series per batch (an odd perBatch would
-    // otherwise emit a third day for series 0 that collides with the
-    // next batch's first day and gets dropped as late); the day clock
-    // advances with the batch so every point folds into live state
-    val nKeys = perBatch / 2
-    def batch(b: Int) = (0 until nKeys * 2).map { i =>
-      StreamingCusum.DayPoint(s"series${i % nKeys}",
-        (b + 1).toLong * 2 + i / nKeys,
-        200L + Math.floorMod(lcg(b.toLong * perBatch + i), 61) - 30)
-    }
-    measure(spark, src, out, "StreamingCusum", batch(-2),
-      (0 until nBatches).map(batch))
+  private def cusum = {
+    import StreamingCusum.DayPoint
+    implicit val enc: Encoder[DayPoint] = Encoders.product[DayPoint]
+    Entry[DayPoint]("StreamingCusum",
+      StreamingCusum.detect(_, mu0Cents = 200L, slackCents = 20L,
+        threshCents = 600L),
+      (b, n) => {
+        // exactly 2 day points per series per batch (an odd n would
+        // otherwise emit a third day for series 0 that collides with the
+        // next batch's first day and gets dropped as late); the day clock
+        // advances with the batch so every point folds into live state
+        val nKeys = n / 2
+        (0 until nKeys * 2).map { i =>
+          DayPoint(s"series${i % nKeys}", (b + 1).toLong * 2 + i / nKeys,
+            200L + Math.floorMod(lcg(b.toLong * n + i), 61) - 30)
+        }
+      },
+      Some("cusum"), "one drift account per series",
+      bs => bs.flatten.map(_.key).distinct.size.toLong)
   }
 
-  def benchExtractCensus(spark: SparkSession, perBatch: Int,
-                         nBatches: Int): Bench = {
-    import spark.implicits._
-    import streaming.StreamingExtractCensus
-    val src = MemoryStream[StreamingExtractCensus.DocBytes](spark)
-    val out = StreamingExtractCensus.census(src.toDS())
-    // the probe is the cost: full parser dispatch per record over a
-    // txt/html/rtf/malformed mix
-    def batch(b: Int) = (0 until perBatch).map { i =>
-      val id = b.toLong * perBatch + i
-      val bytes: Array[Byte] = (i % 4) match {
-        case 0 => ("plain " + words(id, 30)).getBytes("UTF-8")
-        case 1 => ("<p>" + words(id, 30) + "</p>").getBytes("UTF-8")
-        case 2 => ("{\\rtf1\\ansi " + words(id, 30) + "}")
-          .getBytes("ISO-8859-1")
-        case _ => Array[Byte](0xc0.toByte)
-      }
-      StreamingExtractCensus.DocBytes(id, bytes)
+  private def semanticDedup = {
+    import StreamingSemanticDedup.VecEvent
+    implicit val enc: Encoder[VecEvent] = Encoders.product[VecEvent]
+    def vec(seed: Long) = {
+      var s = lcg(seed)
+      // the generator's high bits, uniform in [-1, 1)
+      Array.fill(16) { s = lcg(s); (s >> 11).toFloat / (1L << 52) }
     }
-    measure(spark, src, out, "StreamingExtractCensus", batch(-1),
-      (0 until nBatches).map(batch))
+    // a 3-minute TTL, shorter than the run: the early batches' vectors
+    // must be purged, so a missed purge breaks the bound
+    Entry[VecEvent]("StreamingSemanticDedup",
+      StreamingSemanticDedup.detect(_, watermarkDelay = "1 minute",
+        ttlMs = 3 * Minute),
+      (b, n) => (0 until n).map { i =>
+        val id = b.toLong * n + i
+        // every 16th vector repeats one of the previous batch
+        VecEvent(id, vec(if (i % 16 == 0) id - n + 1 else id), minute(b))
+      },
+      Some("entries"),
+      "min(vectors inside the 3 min TTL, 64 cells × 1024 entries)",
+      bs => math.min(64L * 1024,
+        live(bs, 3 * Minute, Minute)(_.eventTime).size.toLong))
   }
 
-  def all(spark: SparkSession, perBatch: Int, nBatches: Int): Seq[Bench] =
-    Seq(
-      benchTracker(spark, perBatch, nBatches),
-      benchExtractCensus(spark, perBatch, nBatches),
-      benchSimhashDedup(spark, perBatch, nBatches),
-      benchMinhashDedup(spark, perBatch, nBatches),
-      benchMinhashDedup(spark, perBatch, nBatches,
-        numHashes = 64, bands = 16),
-      benchCdcChunkDedup(spark, perBatch, nBatches),
-      benchRateLimit(spark, perBatch, nBatches),
-      benchBloomDedup(spark, perBatch, nBatches),
-      benchHeavyHitters(spark, perBatch, nBatches),
-      benchQuota(spark, perBatch, nBatches),
-      benchSessions(spark, perBatch, nBatches),
-      benchCdcView(spark, perBatch, nBatches),
-      benchAffinity(spark, perBatch, nBatches),
-      benchCusum(spark, perBatch, nBatches))
+  private def drift = {
+    import StreamingDrift.MetricValue
+    implicit val enc: Encoder[MetricValue] = Encoders.product[MetricValue]
+    val ref = StreamingDrift.Reference(0.0, 1.0, Array.fill(10)(100L))
+    Entry[MetricValue]("StreamingDrift", StreamingDrift.monitor(_, ref),
+      (b, n) => (0 until n).map { i =>
+        MetricValue(s"m${i % 3}",
+          Math.floorMod(lcg(b.toLong * n + i), 1000L) / 1000.0)
+      },
+      Some("hist"), "metrics × 10 histogram buckets",
+      bs => bs.flatten.map(_.metric).distinct.size * 10L)
+  }
+
+  private def profile = {
+    import StreamingProfile.ColValue
+    implicit val enc: Encoder[ColValue] = Encoders.product[ColValue]
+    Entry[ColValue]("StreamingProfile", StreamingProfile.monitor,
+      (b, n) => (0 until n).map { i =>
+        ColValue(s"c${i % 4}",
+          if (i % 11 == 0) None else Some((b.toLong * n + i).toDouble))
+      },
+      Some("profile"), "one record per column",
+      bs => bs.flatten.map(_.colName).distinct.size.toLong)
+  }
+
+  /** Every census row, in artifact order. */
+  val entries: Seq[Entry[_]] = Seq(tracker, extractCensus, simhashDedup,
+    minhashDedup(128, 32), minhashDedup(64, 16), cdcChunkDedup, rateLimit,
+    bloomDedup, heavyHitters, quota, sessions, cdcView, affinity, cusum,
+    semanticDedup, drift, profile)
+
+  /** Drives `e` once from a fresh checkpoint: the warm-up batch, then
+    * `nBatches` timed batches of `perBatch` events; the query is stopped,
+    * its state read back and the checkpoint deleted. `outRows` counts
+    * the timed window only. */
+  def run[I](spark: SparkSession, e: Entry[I], perBatch: Int,
+             nBatches: Int): Result = {
+    implicit val enc: Encoder[I] = e.enc
+    val batches = (-1 until nBatches).map(e.batch(_, perBatch))
+    val src = MemoryStream[I](spark)
+    val chk = Files.createTempDirectory("census")
+    val table = s"census_${System.nanoTime()}"
+    val q = e.build(src.toDS()).writeStream
+      .option("checkpointLocation", chk.toString)
+      .format("memory").queryName(table).outputMode("append").start()
+    def cycle(b: Seq[I]): Long = {
+      val t = System.nanoTime()
+      src.addData(b)
+      q.processAllAvailable()
+      System.nanoTime() - t
+    }
+    cycle(batches.head)
+    val warmRows = spark.table(table).count()
+    val nanos = batches.tail.map(cycle)
+    q.stop()
+    val outRows = spark.table(table).count() - warmRows
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val state = e.stateVar.foldLeft(spark.read.format("statestore"))(
+      _.option("stateVarName", _)).load(chk.toString)
+    val rows = state.count()
+    val keys = state.select(col("key")).distinct().count()
+    deleteTree(chk)
+    val n = batches.tail.map(_.size.toLong).sum
+    val wallSec = nanos.sum / 1e9
+    Result(e.name, n, nBatches, outRows, wallSec, n / wallSec,
+      nanos.sum / 1e6 / nBatches, nanos.max / 1000000L,
+      e.stateVar.getOrElse("(built-in)"), keys, rows, e.bound(batches),
+      e.formula)
+  }
+
+  private def deleteTree(p: Path): Unit = {
+    val walk = Files.walk(p)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(f => Files.delete(f))
+    finally walk.close()
+  }
+
+  /** streambench.json: one object per row. */
+  def json(results: Seq[Result]): String = {
+    import Harness.{num, obj, str}
+    obj(results.map(r => r.operator -> obj("eventsIn" -> r.eventsIn,
+      "batches" -> r.batches, "outRows" -> r.outRows,
+      "wallSec" -> num(r.wallSec, 3), "rowsPerSec" -> num(r.rowsPerSec, 0),
+      "meanBatchMs" -> num(r.meanBatchMs, 1),
+      "maxBatchMs" -> r.maxBatchMs, "stateVar" -> str(r.stateVar),
+      "keys" -> r.keys, "stateRows" -> r.stateRows, "bound" -> r.bound,
+      "held" -> r.held)): _*)
+  }
 
   def main(args: Array[String]): Unit = {
     val spark = Harness.session()
-    val benches = all(spark, perBatch = 4000, nBatches = 8)
-    java.nio.file.Files.write(java.nio.file.Paths.get("streambench.json"),
-      (json(benches) + "\n").getBytes("UTF-8"))
+    val results = entries.map(run(spark, _, perBatch = 4000, nBatches = 8))
+    Files.write(Paths.get("streambench.json"),
+      (json(results) + "\n").getBytes("UTF-8"))
 
     val md = new StringBuilder
-    md ++= "# STREAMBENCH — measured streaming throughput and latency\n\n"
+    md ++= "# STREAMBENCH — the streaming census: throughput, latency and state\n\n"
     md ++= "Protocol: `graft.StreamBench` main — each stateful operator runs a\n"
     md ++= "deterministic generated workload (8 timed micro-batches of 4000\n"
     md ++= "events after one untimed warm-up batch) through a fresh RocksDB\n"
@@ -340,53 +446,41 @@ object StreamBench {
     md ++= "batch latency = wall per addData->processAllAvailable cycle\n"
     md ++= "(includes Spark's no-data watermark batches — real streaming\n"
     md ++= "cost). Event times advance one minute per batch so watermarks\n"
-    md ++= "move and TTL/timer churn is inside the measurement.\n\n"
+    md ++= "move and TTL/timer churn is inside the measurement. out rows\n"
+    md ++= "counts the timed window only.\n\n"
+    md ++= "State: after the last batch the query stops and its state is read\n"
+    md ++= "back from the checkpoint with the `statestore` source (the path\n"
+    md ++= "StateIntrospectionSpec pins). state rows counts store rows (MapState:\n"
+    md ++= "one per entry; ValueState: one per key); keys counts distinct\n"
+    md ++= "grouping keys. The bound is computed from the driven batches,\n"
+    md ++= "never from the measured state: for operators that expire state it\n"
+    md ++= "counts only what is still inside the TTL window under the\n"
+    md ++= "watermark the last batch runs under. A violated bound exits\n"
+    md ++= "nonzero.\n\n"
     md ++= "Single-machine caveat: these numbers price the per-core operator\n"
     md ++= "cost + micro-batch overhead. Every operator keys its state by a\n"
     md ++= "high-cardinality column, so cluster throughput scales with the\n"
     md ++= "shuffle parallelism; the per-batch latency floor (~the max row)\n"
     md ++= "is the micro-batch scheduling constant, not operator work.\n\n"
-    md ++= "out rows counts the TIMED window only (the warm-up batch's\n"
-    md ++= "sink rows are snapshotted off — round-10 artifacts included\n"
-    md ++= "them, overstating output ratios).\n\n"
-    md ++= "Round-11 note — StreamingMinhashDedup (the round-10 outlier at\n"
-    md ++= "940 rows/s): three structural changes — byte verification\n"
-    md ++= "signatures (sig_bytes kernel: 8× less shuffle/state volume,\n"
-    md ++= "estimate bias ≤ (1−j)/256, an order under the estimator's own\n"
-    md ++= "se), one packed-binary ValueState row per bucket (1 get + 1 put\n"
-    md ++= "per visit; per-entry MapState paid per-entry op+encoder cost on\n"
-    md ++= "a path that must read the whole bucket anyway), and\n"
-    md ++= "creation-only timer arming (per-visit re-arm was ~40% of all\n"
-    md ++= "state puts) — took the isolated row 1.17 k → 1.94 k rows/s\n"
-    md ++= "(+65%). The remainder is structural, measured: cost scales\n"
-    md ++= "linearly in `bands` (32 state-visits per doc is the LSH\n"
-    md ++= "candidate-generation contract; 32→8→2 bands measured 0.52 →\n"
-    md ++= "2.0 → 4.2 k rows/s), each visit is already at the 1-get+1-put\n"
-    md ++= "floor, and the per-batch constant is the RocksDB\n"
-    md ++= "flush+snapshot-sync commit (~1.4 s shared across all state at\n"
-    md ++= "this scale). Equal-recall band reduction does not exist at\n"
-    md ++= "fixed numHashes; the knob is explicit and (round 12) a\n"
-    md ++= "first-class operating point with its own census row below:\n"
-    md ++= "StreamingMinhashDedup(64x16) — same rows-per-band r=4, half\n"
-    md ++= "the bucket visits and signature bytes — trades\n"
-    md ++= "P[miss|j=0.8] = 2e-4 (vs 5e-8) for the measured in-census\n"
-    md ++= "speedup in its row below (~1.5x here where the shared\n"
-    md ++= "per-batch RocksDB commit constant dilutes it; the pure\n"
-    md ++= "per-visit cost halves, so isolated/cluster runs sit nearer\n"
-    md ++= "2x). Both points run the same near-dup parity scenario in\n"
-    md ++= "StreamingMinhashDedupSpec; a capacity plan picks a row.\n\n"
     md ++= "| operator | events | batches | out rows | wall s | rows/s " +
-      "| mean batch ms | max batch ms |\n"
-    md ++= "|---|---|---|---|---|---|---|---|\n"
-    benches.foreach { b =>
-      md ++= f"| ${b.operator} | ${b.eventsIn} | ${b.batches} " +
-        f"| ${b.outRows} | ${b.wallSec}%.2f | ${b.rowsPerSec}%.0f " +
-        f"| ${b.meanBatchMs}%.0f | ${b.maxBatchMs} |\n"
+      "| mean batch ms | max batch ms | state var | keys | state rows " +
+      "| bound | formula | held |\n"
+    md ++= "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|\n"
+    results.foreach { r =>
+      md ++= f"| ${r.operator} | ${r.eventsIn} | ${r.batches} " +
+        f"| ${r.outRows} | ${r.wallSec}%.2f | ${r.rowsPerSec}%.0f " +
+        f"| ${r.meanBatchMs}%.0f | ${r.maxBatchMs} | ${r.stateVar} " +
+        f"| ${r.keys} | ${r.stateRows} | ${r.bound} | ${r.formula} " +
+        f"| ${r.held} |\n"
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get("STREAMBENCH.md"),
-      md.toString.getBytes("UTF-8"))
+    Files.write(Paths.get("STREAMBENCH.md"), md.toString.getBytes("UTF-8"))
     println(s"[streambench] wrote STREAMBENCH.md + streambench.json " +
-      s"(${benches.size} operators)")
+      s"(${results.size} rows)")
+    val bad = results.filterNot(_.held)
     spark.stop()
+    if (bad.nonEmpty) {
+      System.err.println("BOUND VIOLATIONS: " + bad.map(_.operator).mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -16,11 +16,14 @@ class ArtifactLocaleSpec extends AnyFunSuite {
     Locale.setDefault(Locale.GERMANY)
     try {
       val json = new ObjectMapper()
-      val row = json.readTree(StreamBench.json(Seq(StreamBench.Bench(
-        "StreamingQuota", 32000, 8, 31000, 1.234, 25931.9, 154.25, 170))))
+      val row = json.readTree(StreamBench.json(Seq(StreamBench.Result(
+        "StreamingQuota", 32000, 8, 31000, 1.234, 25931.9, 154.25, 170,
+        "used\t(day)", 200, 400, 400, "per source"))))
         .get("StreamingQuota")
       assert(row.get("wallSec").asDouble == 1.234)
       assert(row.get("meanBatchMs").asDouble == 154.3)
+      assert(row.get("stateVar").asText == "used\t(day)")
+      assert(row.get("held").asBoolean)
       val error = "bad\tvalue \"x\" C:\\tmp\n\u0001"
       val q = json.readTree(Bench.fileArtifact("sf0.01", 2,
         Seq("q01_pricing_summary" -> Seq(0.5, Double.NaN)),

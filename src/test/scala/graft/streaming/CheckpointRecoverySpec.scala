@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{StreamBench, TestSpark}
 
 /** The rebuild's delivery guarantee, proven end-to-end. The reference's
   * contract is broker redelivery + idempotent S3 keys (SURVEY §3.1
@@ -28,19 +28,26 @@ import graft.TestSpark
   *      contents instead of duplicating, because keys are
   *      deterministic and puts overwrite.
   *
-  * Six stateful operators are exercised (StreamingCdcView: ValueState
-  * fold; StreamingQuota: MapState ledger + TTL; StreamingMinhashDedup:
-  * round-11 packed-binary bucket ValueState + creation-only timers,
-  * with cross-restart duplicates that can only match from recovered
-  * state; StreamingCusum: a CUMULATIVE drift account whose planted
-  * alarm only fires if recovery resumes mid-accumulation;
-  * TransferTracker: event-time timers that must fire after the
-  * restart; StreamingHeavyHitters: SpaceSaving counters that must keep
-  * counting) so the guarantee is pinned on every state shape the repo
-  * ships.
+  * (a) and (b) run for every row of the streaming census
+  * ([[graft.StreamBench.entries]]) on a small slice of its own workload,
+  * so an operator gains restart coverage by being declared there. Five
+  * scenarios add their own assertions on top: StreamingQuota (the quota
+  * actually denies), StreamingMinhashDedup (cross-restart duplicates
+  * can only match from recovered state), StreamingCusum (a CUMULATIVE
+  * drift account whose planted alarm only fires if recovery resumes
+  * mid-accumulation), TransferTracker (event-time timers that must fire
+  * after the restart) and StreamingHeavyHitters (SpaceSaving counters
+  * that must keep counting).
   */
 class CheckpointRecoverySpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+  /** Two shuffle partitions, not four: every micro-batch commits one
+    * RocksDB store per partition, and recovery needs more than one
+    * partition, not many. */
+  lazy val spark = {
+    val s = TestSpark.spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "2")
+    s
+  }
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
@@ -54,24 +61,27 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     out.writeStream.option("checkpointLocation", chk)
       .format("parquet").option("path", dir).outputMode("append").start()
 
-  /** Committed rows of a file-sink directory as a sorted multiset. */
-  private def rowsOf(dir: String): Seq[String] =
-    spark.read.parquet(dir).collect().map(_.toString).toSeq.sorted
-
-  /** State rows as sorted JSON, read with one state data source option:
-    * a state variable's rows, or the registered timers. */
-  private def stateRows(chk: String, option: (String, String)): Seq[String] = {
-    val r = spark.read.format("statestore").option(option._1, option._2)
-      .load(chk)
-    // drop physical partition bookkeeping: parity is about logical
-    // state. Canonicalize via to_json: binary state values (the minhash
-    // packed bucket) serialize as base64 — Row.toString on a byte array
-    // (even nested in a struct) prints its identity hash
-    val cols = r.columns.filterNot(_ == "partition_id").map(col).toSeq
-    r.select(org.apache.spark.sql.functions.to_json(
+  /** Rows of `df` as a sorted multiset of JSON strings, without the
+    * physical partition bookkeeping of a state read: parity is about
+    * logical rows. to_json, not Row.toString: binary values (the minhash
+    * packed bucket, a document's bytes) serialize as base64, where
+    * toString on a byte array prints its identity hash. */
+  private def canonical(df: DataFrame): Seq[String] = {
+    val cols = df.columns.filterNot(_ == "partition_id").map(col).toSeq
+    df.select(org.apache.spark.sql.functions.to_json(
         org.apache.spark.sql.functions.struct(cols: _*)).as("j"))
       .collect().map(_.getString(0)).toSeq.sorted
   }
+
+  /** Committed rows of a file-sink directory. */
+  private def rowsOf(dir: String): Seq[String] =
+    canonical(spark.read.parquet(dir))
+
+  /** State rows read with the given state data source options: a state
+    * variable's rows, the registered timers, or (no option) an
+    * operator's built-in store. */
+  private def stateRows(chk: String, options: Map[String, String]): Seq[String] =
+    canonical(spark.read.format("statestore").options(options).load(chk))
 
   /** Checkpoint and file-sink directory of one run. */
   private case class Run(chk: String, dir: String)
@@ -80,11 +90,12 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     * batch without a stop. The recovered run stops after `stopAfter`
     * batches; the next batch lands while the query is DOWN, and a
     * restart from the same checkpoint processes it and the rest. Then
-    * asserts (a) and (b) on `stateVar`; returns the reference and
-    * recovered runs for scenario checks.
+    * asserts (a) and (b) on `stateVar` (None: the built-in store);
+    * returns the reference and recovered runs for scenario checks.
     */
   private def restartParity[A: Encoder](tag: String, batches: Seq[Seq[A]],
-                                        stopAfter: Int, stateVar: String)(
+                                        stopAfter: Int,
+                                        stateVar: Option[String])(
       build: Dataset[A] => Dataset[_]): (Run, Run) = {
     def run(name: String) = Run(
       java.nio.file.Files.createTempDirectory(name).toString,
@@ -113,28 +124,28 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
     assert(rowsOf(rec.dir) == rowsOf(ref.dir),
       "pre-stop + post-restart emissions must equal the uninterrupted run")
-    val byVar = "stateVarName" -> stateVar
+    val byVar = stateVar.map("stateVarName" -> _).toMap
     assert(stateRows(rec.chk, byVar) == stateRows(ref.chk, byVar),
       "recovered checkpoint state must equal the uninterrupted run's")
     (ref, rec)
   }
 
-  // ------------------------------------------------------ CdcView
+  // ------------------------------------------------ census entries
 
-  private def cdcBatches: Seq[Seq[StreamingCdcView.CdcOp]] = Seq(
-    (0 until 60).map(i => StreamingCdcView.CdcOp(i % 12L,
-      ts("2024-03-05 01:00:00"), i.toLong, "u", i.toDouble)),
-    (60 until 120).map(i => StreamingCdcView.CdcOp(i % 12L,
-      ts("2024-03-05 01:05:00"), i.toLong,
-      if (i % 7 == 0) "d" else "u", i.toDouble)),
-    (120 until 180).map(i => StreamingCdcView.CdcOp(i % 12L,
-      ts("2024-03-05 01:10:00"), i.toLong, "u", i.toDouble)))
-
-  test("CdcView: stop after batch 2, restart from the checkpoint — " +
-       "state parity with an uninterrupted run, no dup/lost output") {
-    val (ref, _) = restartParity("cdc", cdcBatches, 2, "view")(
-      StreamingCdcView.materialize(_))
+  /** The warm-up and first timed batch of an entry's census workload at
+    * 48 events per batch; the timed batch lands while the query is down.
+    * The output must not be empty, or its parity proves nothing. */
+  private def censusParity[I](e: StreamBench.Entry[I]): Unit = {
+    val (ref, _) = restartParity(e.name, Seq(-1, 0).map(e.batch(_, 48)),
+      1, e.stateVar)(e.build)(e.enc)
     assert(rowsOf(ref.dir).nonEmpty)
+  }
+
+  StreamBench.entries.foreach { e =>
+    test(s"census ${e.name}: restart from the checkpoint — state and " +
+         "output parity with an uninterrupted run") {
+      censusParity(e)
+    }
   }
 
   // ------------------------------------------------------- Cusum
@@ -153,7 +164,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
   test("Cusum: restart from the checkpoint — the drift account resumes " +
        "mid-accumulation, alarms and state match an uninterrupted run") {
     // the post-shift batch lands while the query is down
-    val (ref, _) = restartParity("cusum", cusumBatches, 2, "cusum")(
+    val (ref, _) = restartParity("cusum", cusumBatches, 2, Some("cusum"))(
       StreamingCusum.detect(_, mu0Cents = 200L, slackCents = 20L,
         threshCents = 500L))
     // the scenario is non-degenerate: the shift actually alarms
@@ -174,7 +185,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
   test("Quota: restart from the checkpoint — MapState ledger parity, " +
        "admissions neither duplicated nor lost") {
     // stop after batch 1: batch 2 arrives while down, batch 3 after
-    val (ref, _) = restartParity("quota", quotaBatches, 1, "used")(
+    val (ref, _) = restartParity("quota", quotaBatches, 1, Some("used"))(
       StreamingQuota.enforce(_, quotaBytes = 900L, retainDays = 7))
     // the quota must have actually denied something, or the ledger
     // parity proves less than it claims
@@ -201,7 +212,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
   test("MinhashDedup: restart from the checkpoint — packed-bucket state " +
        "parity, cross-restart duplicates still detected exactly once") {
     // the duplicates arrive while the query is down
-    val (ref, _) = restartParity("mh", mhBatches, 2, "bucket")(
+    val (ref, _) = restartParity("mh", mhBatches, 2, Some("bucket"))(
       StreamingMinhashDedup.detect(_, n = 3, threshold = 0.9))
     // the replayed duplicates matched their batch-1 originals FROM
     // RECOVERED STATE: doc 60+i hits doc i (est 1.0, all 32 bands)
@@ -235,10 +246,11 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("TransferTracker: restart with transfers in flight — recovered " +
        "timers stall them exactly once, state and timers match") {
-    val (ref, rec) = restartParity("tracker", trackerBatches, 2, "transfer")(
+    val (ref, rec) = restartParity("tracker", trackerBatches, 2,
+      Some("transfer"))(
       ds => TransferTracker.track(ds.withWatermark("eventTime", "1 minute")
         .as[TransferTracker.StatusEvent]))
-    val timers = "readRegisteredTimers" -> "true"
+    val timers = Map("readRegisteredTimers" -> "true")
     val refTimers = stateRows(ref.chk, timers)
     assert(refTimers.size == 5 && stateRows(rec.chk, timers) == refTimers,
       "recovered timers must equal the uninterrupted run's: s0-s4")
@@ -264,7 +276,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("HeavyHitters: restart from the checkpoint — SpaceSaving counters " +
        "resume, snapshots and state match an uninterrupted run") {
-    val (ref, _) = restartParity("hh", hhBatches, 2, "counters")(
+    val (ref, _) = restartParity("hh", hhBatches, 2, Some("counters"))(
       StreamingHeavyHitters.track(_, nBuckets = 1, capacity = 8))
     val hot = spark.read.parquet(ref.dir).filter(col("token") === "hot")
       .select("count").as[Long].collect()
