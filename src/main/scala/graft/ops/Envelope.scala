@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sinks.ObjectStore
 
 /** Pure `DataFrame => DataFrame` projections for the file-transfer
   * envelope — the Spark form of the reference's header→property steps and
@@ -71,6 +72,10 @@ object Envelope {
     * silently yields a null S3 key segment): rows failing the contract get
     * a non-null `invalidReason` and are routed to the DLQ branch.
     *
+    * Both fields become object-key segments: an empty, `.` or `..` path
+    * segment in either would steer the keys (`../../x.pdf` names an object
+    * outside `incoming/`), so such a row is invalid too.
+    *
     * `requireEventTime`: in event-time mode a null eventTime would null
     * out the processing date, the object keys derived from it AND the
     * expiry predicate — route it to the DLQ. Processing-time mode keys by
@@ -82,7 +87,11 @@ object Envelope {
     df.withColumn("invalidReason",
       when(col("fileName").isNull || length(col("fileName")) === 0,
            "missing fileName")
+        .when(col("fileName").rlike(ObjectStore.UnsafeSegment),
+              "fileName has an empty, '.' or '..' path segment")
         .when(col("correlationId").isNull, "missing correlationId")
+        .when(col("correlationId").rlike(ObjectStore.UnsafeSegment),
+              "correlationId has an empty, '.' or '..' path segment")
         .when(col("checksum").isNull, "missing checksum")
         .when(col("fileSize").isNull || col("fileSize") < 0,
               "bad fileSize")
@@ -109,22 +118,25 @@ object Envelope {
   /** P3: deterministic object-store key templating
     * (file-pipeline.yaml:76-85,211-218; dlq-handler.yaml:91-98).
     * Determinism is what makes duplicate delivery idempotent (§3.1 step 9).
+    * A field that validation refuses as a path ([[withValidation]]) keys
+    * its failure report by the field's SHA-256, so the report still lands
+    * under `failed/<date>/`.
     */
-  def withObjectKeys(df: DataFrame): DataFrame =
+  def withObjectKeys(df: DataFrame): DataFrame = {
+    def segment(field: String) =
+      when(col(field).rlike(ObjectStore.UnsafeSegment),
+           sha2(col(field).cast("binary"), 256)).otherwise(col(field))
+    def key(prefix: String, suffix: String) =
+      concat(concat_ws("/", lit(prefix), col("processingDate"),
+                       segment("correlationId"), segment("fileName")),
+             lit(suffix))
     // one projection: each Dataset step is analyzed eagerly, and this runs
     // on every pipeline micro-batch
     df.withColumns(scala.collection.immutable.ListMap(
-      "s3IncomingKey" ->
-        concat_ws("/", lit("incoming"), col("processingDate"),
-                  col("correlationId"), col("fileName")),
-      "s3ProcessedKey" ->
-        concat(concat_ws("/", lit("processed"), col("processingDate"),
-                         col("correlationId"), col("fileName")),
-               lit(".json")),
-      "s3FailedKey" ->
-        concat(concat_ws("/", lit("failed"), col("processingDate"),
-                         col("correlationId"), col("fileName")),
-               lit(".failure.json"))))
+      "s3IncomingKey" -> key("incoming", ""),
+      "s3ProcessedKey" -> key("processed", ".json"),
+      "s3FailedKey" -> key("failed", ".failure.json")))
+  }
 
   /** P4: Docling conversion request (file-pipeline.yaml:124-136) — built
     * with to_json(struct(...)) instead of string interpolation.

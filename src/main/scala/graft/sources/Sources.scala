@@ -85,12 +85,6 @@ object Sources {
     toEnvelope(raw).filter(col("fileName").rlike(pattern))
   }
 
-  /** Batch twin of [[fileMonitor]] for backfills (same projection). */
-  def fileBatch(spark: SparkSession, dir: String,
-                pattern: String = "(?i).*\\.(pdf|docx)$"): DataFrame =
-    toEnvelope(spark.read.format("binaryFile").load(dir))
-      .filter(col("fileName").rlike(pattern))
-
   /** binaryFile rows → envelope: the producer-side header derivation
     * (fileName/size/checksum/transferId/correlationId) the GoAnywhere
     * workflow performs (goanywhere-config.md:148-199), done relationally.

@@ -2,9 +2,10 @@ package graft.stream
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.BinaryType
 import graft.enrich.{BreakerConfig, BreakerRegistry, DoclingClient, RetryPolicy}
 import graft.ops.Envelope
 import graft.sinks.ObjectStore
@@ -270,29 +271,39 @@ object FilePipeline {
   /** E5 implemented (the reference leaves reprocessing a TODO,
     * dlq-handler.yaml:184-188): read failure reports, resolve the original
     * payload from incoming/, re-emit envelope rows ready for resubmission.
+    *
+    * Key-directed: both prefixes are listed once on the driver, the
+    * reports are parsed where they are fetched, and only the bodies a
+    * report re-emits are fetched — in the same pass, with no shuffle.
     */
   def reprocess(spark: SparkSession, outDir: String,
                 correlationId: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val reports = graft.sinks.ObjectStore.readFailedReports(spark, outDir)
-    val filtered = correlationId match {
-      case Some(id) => reports.filter(col("correlationId") === id)
-      case None => reports
-    }
-    // join on the full (correlationId, fileName) identity — a correlation
-    // id is NOT unique per file (it comes from JMSCorrelationID or the
-    // Kafka key, and several files can share it), and processing-time-mode
-    // redeliveries store the same file under several dates: keep only the
-    // latest incoming copy per identity so a report re-emits exactly one
-    // body, the newest
-    val latest = Window
-      .partitionBy(col("correlationId"), col("fileName"))
-      .orderBy(col("incomingDate").desc)
-    val incoming = graft.sinks.ObjectStore.readIncoming(spark, outDir)
-      .withColumn("__rn", row_number().over(latest))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "incomingDate")
-    filtered.join(incoming, Seq("correlationId", "fileName"), "inner")
+    val bucket = ObjectStore.Bucket(spark, outDir)
+    val failed = bucket.list("failed")
+    val reported = failed.flatMap(ObjectStore.documentOf)
+      .map(_.stripSuffix(".failure.json")).toSet
+    // match on the full (correlationId, fileName) identity — a
+    // correlation id is NOT unique per file (it comes from
+    // JMSCorrelationID or the Kafka key, and several files can share
+    // it), and processing-time-mode redeliveries store the same file
+    // under several dates: keep only the latest incoming key per
+    // reported identity (yyyy/MM/dd sorts as it reads), so a report
+    // re-emits exactly one body, the newest
+    val latest = bucket.list("incoming")
+      .flatMap(k => ObjectStore.documentOf(k).filter(reported).map(_ -> k))
+      .groupMapReduce(_._1)(_._2)((a, b) => if (a > b) a else b)
+    val reports = ObjectStore.failureReports(spark, bucket, failed)
+    val wanted = correlationId.fold(reports)(id =>
+      reports.filter(col("correlationId") === id))
+    val Seq(c, f) = Seq("correlationId", "fileName")
+      .map(wanted.schema.fieldIndex)
+    wanted.mapPartitions { rows =>
+        rows.flatMap { r =>
+          if (r.isNullAt(c) || r.isNullAt(f)) None
+          else latest.get(s"${r.getString(c)}/${r.getString(f)}")
+            .map(k => Row.fromSeq(r.toSeq :+ bucket.get(k)))
+        }
+      }(Encoders.row(wanted.schema.add("body", BinaryType)))
       .select(col("fileName"), col("contentType"), col("fileSize"),
               col("checksum"), col("transferId"), col("correlationId"),
               col("body"), current_timestamp().as("eventTime"),

@@ -4,26 +4,29 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** Compacted-archive sink: small-file consolidation, byte fidelity,
   * idempotent re-compaction, and point-lookup partition pruning.
   */
-class ArchiveSpec extends AnyFunSuite {
+class ArchiveSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-archive-spec").toString
+    tempDir("graft-archive-spec").toString
 
   /** Seed `n` objects across two ingest days via the exact-key put path. */
-  private def seed(baseDir: String, n: Int): Unit = {
-    val objs = (0 until n).map { i =>
+  private def seed(baseDir: String, n: Int): Unit =
+    put(baseDir, (0 until n).map { i =>
       val day = if (i % 2 == 0) "2024/03/05" else "2024/03/06"
       (s"incoming/$day/corr-${i % 7}/doc_$i.pdf",
         s"body-$i".getBytes("UTF-8"))
-    }.toDF("s3IncomingKey", "body")
-    ObjectStore.writeIncoming(objs, baseDir)
+    })
+
+  private def put(baseDir: String, objs: Seq[(String, Array[Byte])]): Unit = {
+    val bucket = ObjectStore.Bucket(spark, baseDir)
+    objs.foreach { case (k, b) => bucket.put(k, b) }
   }
 
   test("compaction consolidates objects into few files, bytes survive round-trip") {
@@ -69,11 +72,9 @@ class ArchiveSpec extends AnyFunSuite {
 
   test("fileName containing '/' keeps its exact key through the archive") {
     val dir = freshDir()
-    val objs = Seq(
+    put(dir, Seq(
       ("incoming/2024/03/05/corr-1/sub/dir/doc.pdf", "nested".getBytes("UTF-8")),
-      ("incoming/2024/03/05/corr-1/doc.pdf", "flat".getBytes("UTF-8")))
-      .toDF("s3IncomingKey", "body")
-    ObjectStore.writeIncoming(objs, dir)
+      ("incoming/2024/03/05/corr-1/doc.pdf", "flat".getBytes("UTF-8"))))
     ObjectStore.compactIncoming(spark, dir)
     val nested = ObjectStore.readArchiveObject(spark, dir,
       "incoming/2024/03/05/corr-1/sub/dir/doc.pdf").collect()

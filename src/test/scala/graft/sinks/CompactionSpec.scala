@@ -10,12 +10,11 @@ import org.apache.spark.sql.functions._
   * generation hygiene (vacuum keeps published + predecessor), and
   * the loud failure when nothing is published to compact.
   */
-class CompactionSpec extends AnyFunSuite {
+class CompactionSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.TestSpark.spark
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-compact-spec")
-      .toString
+    tempDir("graft-compact-spec").toString
 
   test("compaction hits the target file count and preserves content") {
     import spark.implicits._

@@ -6,12 +6,12 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import graft.enrich.{DoclingClient, LocalDocling, RetryPolicy}
 import graft.ops.Envelope
 import graft.sinks.{ObjectStore, PipelineMetrics}
 
-class FilePipelineSpec extends AnyFunSuite {
+class FilePipelineSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def envelope(rows: Seq[(String, String, Long, String, String, String,
@@ -30,7 +30,7 @@ class FilePipelineSpec extends AnyFunSuite {
        Timestamp.valueOf(s"2024-03-0${5 + i % 3} 07:08:09"), 1)
     })
 
-  private def tmp(): Path = Files.createTempDirectory("graft-pipe")
+  private def tmp(): Path = tempDir("graft-pipe")
 
   private val fastRetry = RetryPolicy(sleeper = _ => ())
 
@@ -107,6 +107,38 @@ class FilePipelineSpec extends AnyFunSuite {
     val reports = ObjectStore.readFailedReports(spark, out).collect()
     assert(reports.length == 1)
     assert(reports.head.getAs[String]("exception") == "missing fileName")
+  }
+
+  test("path segments in fileName or correlationId are DLQ'd; nothing is written outside incoming/, processed/ and failed/") {
+    // the bucket is a subdirectory, so an object that escapes it shows up
+    val root = tmp()
+    val out = root.resolve("store").toString
+    val ts = Timestamp.valueOf("2026-10-19 07:00:00")
+    val hostile = Seq(
+      "../../../../../../escaped.pdf" -> "c1", "ok.pdf" -> "../..",
+      "a/./b.pdf" -> "c2", "a//b.pdf" -> "c3", "x.pdf" -> "",
+      "/abs.pdf" -> "c4", "dir/" -> "c5", ".." -> "c6", "y.pdf" -> "c7/.")
+    val rows = (hostile :+ ("sub/fine.pdf" -> "c8")).zipWithIndex.map {
+      case ((fn, corr), i) => (fn, "application/pdf", 10L, s"t$i", "ab" * 32,
+        corr, s"body-$i".getBytes, ts, 1)
+    }
+    val m = FilePipeline.runBatch(envelope(rows), out, new LocalDocling(),
+      freshCfg())
+    assert(m == BatchMetrics(1, 1, 0, hostile.size))
+    val written = Files.walk(root).filter(Files.isRegularFile(_)).toArray
+      .map(p => root.relativize(p.asInstanceOf[Path]).toString).toSeq
+    assert(written.nonEmpty && written.forall(k =>
+      Seq("incoming/", "processed/", "failed/").exists(d =>
+        k.startsWith(s"store/$d"))), written.mkString("\n"))
+    assert(written.count(_.startsWith("store/failed/2026/10/19/"))
+      == hostile.size)
+    val reasons = ObjectStore.readFailedReports(spark, out).collect()
+      .map(r => r.getAs[String]("fileName") -> r.getAs[String]("exception"))
+    assert(reasons.length == hostile.size)
+    assert(reasons.forall(_._2.endsWith("has an empty, '.' or '..' path segment")))
+    assert(reasons.count(_._2.startsWith("correlationId")) == 3)
+    assert(Files.exists(java.nio.file.Paths.get(
+      out, "incoming/2026/10/19/c8/sub/fine.pdf")))
   }
 
   test("duplicate delivery is idempotent: same keys, same object count") {

@@ -18,7 +18,7 @@ import graft.sinks.ObjectStore
   * readStream.format("kafka") + Envelope.fromKafka with no change to any
   * transform).
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -37,8 +37,8 @@ class StreamingSpec extends AnyFunSuite {
       s"payload-$i".getBytes, Timestamp.valueOf(ts), 1)
 
   test("streaming pipeline: micro-batches through the batch core, exactly-once layout across restarts") {
-    val out = Files.createTempDirectory("graft-stream").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val out = tempDir("graft-stream").toString
+    val ckpt = tempDir("graft-ckpt").toString
 
     val source = MemoryStream[FileTransferEvent](spark)
     source.addData(event(1), event(2))
@@ -61,8 +61,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming failure routing: DLQ reports appear for failing docs") {
-    val out = Files.createTempDirectory("graft-stream").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val out = tempDir("graft-stream").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val source = MemoryStream[FileTransferEvent](spark)
     source.addData(event(1), event(2), event(3))
     val q = FilePipeline.runStream(source.toDF(), out, ckpt,
@@ -75,8 +75,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming notifications: one notification row per processed record") {
-    val out = Files.createTempDirectory("graft-stream").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val out = tempDir("graft-stream").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val source = MemoryStream[FileTransferEvent](spark)
     source.addData(event(1), event(2), event(3))
     val q = FilePipeline.runStream(source.toDF(), out, ckpt,

@@ -39,7 +39,7 @@ import graft.{StreamBench, TestSpark}
   * after the restart) and StreamingHeavyHitters (SpaceSaving counters
   * that must keep counting).
   */
-class CheckpointRecoverySpec extends AnyFunSuite {
+class CheckpointRecoverySpec extends AnyFunSuite with graft.TempDirs {
   /** Two shuffle partitions, not four: every micro-batch commits one
     * RocksDB store per partition, and recovery needs more than one
     * partition, not many. */
@@ -98,8 +98,8 @@ class CheckpointRecoverySpec extends AnyFunSuite {
                                         stateVar: Option[String])(
       build: Dataset[A] => Dataset[_]): (Run, Run) = {
     def run(name: String) = Run(
-      java.nio.file.Files.createTempDirectory(name).toString,
-      java.nio.file.Files.createTempDirectory(s"$name-out").toString)
+      tempDir(name).toString,
+      tempDir(s"$name-out").toString)
     val ref = run(s"rec-$tag-ref")
     val refSrc = MemoryStream[A](spark)
     val refQ = startQuery(build(refSrc.toDS()).toDF(), ref.chk, ref.dir)
@@ -291,10 +291,8 @@ class CheckpointRecoverySpec extends AnyFunSuite {
        "complete snapshot; restart resumes from checkpointed state and " +
        "a replayed batch re-publishes idempotently") {
     import graft.sinks.AtomicPublish
-    val table = java.nio.file.Files
-      .createTempDirectory("rec-wap-table").toString
-    val chk = java.nio.file.Files
-      .createTempDirectory("rec-wap-chk").toString
+    val table = tempDir("rec-wap-table").toString
+    val chk = tempDir("rec-wap-chk").toString
     val src = MemoryStream[(String, Long)](spark)
     // a COMPLETE replacement snapshot per trigger: complete-mode
     // aggregate over everything seen so far
@@ -360,10 +358,8 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     import graft.sinks.AtomicPublish
     import org.apache.spark.sql.functions.{to_timestamp, xxhash64, concat}
     {
-      val table = java.nio.file.Files
-        .createTempDirectory("rec-web-table").toString
-      val chk = java.nio.file.Files
-        .createTempDirectory("rec-web-chk").toString
+      val table = tempDir("rec-web-table").toString
+      val chk = tempDir("rec-web-chk").toString
       def warc(id: Long, url: String, date: String, body: String) =
         Multimodal.MediaRecord(id, "application/warc", Warc.encode(Seq(
           ("response",
@@ -441,10 +437,8 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
   test("foreachBatch → ObjectStore: deterministic keys make a replayed " +
        "batch (the crash-recovery case) converge, not duplicate") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("rec-store").toString
-    val chk = java.nio.file.Files
-      .createTempDirectory("rec-store-chk").toString
+    val dir = tempDir("rec-store").toString
+    val chk = tempDir("rec-store-chk").toString
     val src = MemoryStream[(Long, String)](spark)
     var replayRows: Option[Seq[(String, Array[Byte])]] = None
     def sink(df: DataFrame, batchId: Long): Unit = {
@@ -455,7 +449,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
           .as("s3IncomingKey"),
         org.apache.spark.sql.functions.encode(col("_2"), "UTF-8")
           .as("body"))
-      graft.sinks.ObjectStore.writeIncoming(keyed, dir)
+      putIncoming(keyed, dir)
       if (batchId == 1) {
         // materialize to DRIVER rows NOW, while the micro-batch's
         // backing RDD is live — a cache()d frame would recompute from a
@@ -483,13 +477,18 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     // simulate the at-least-once replay: re-put batch 2 wholesale (what
     // a crash between sink write and offset commit produces on restart),
     // rebuilt as a LOCAL frame from the driver rows captured above
-    graft.sinks.ObjectStore.writeIncoming(
-      replayRows.get.toDF("s3IncomingKey", "body"), dir)
+    putIncoming(replayRows.get.toDF("s3IncomingKey", "body"), dir)
 
-    val back = graft.sinks.ObjectStore.readIncoming(spark, dir)
-    assert(back.count() == 50, "exactly one object per logical document")
-    val ids = back.select(col("correlationId")).as[String]
-      .collect().map(_.stripPrefix("corr").toLong).sorted.toSeq
+    val back = graft.sinks.ObjectStore.Bucket(spark, dir).list("incoming")
+    assert(back.size == 50, "exactly one object per logical document")
+    val ids = back.map(_.split("/")(4).stripPrefix("corr").toLong).sorted
     assert(ids == (0L until 50L))
   }
+
+  /** `(s3IncomingKey, body)` rows put at their keys by the pipeline's writer. */
+  private def putIncoming(keyed: DataFrame, dir: String): Unit =
+    graft.sinks.ObjectStore.writeObjects(
+      keyed.select(col("s3IncomingKey").as("key"), col("body"),
+        org.apache.spark.sql.functions.lit(false).as("report")),
+      graft.sinks.ObjectStore.Bucket(keyed.sparkSession, dir))
 }
