@@ -275,9 +275,9 @@ object Scaling {
         "there.\nReading the exponents: graph/dedup/profile land at " +
         "0.4-0.9 (sub-linear to\nlinear with log factors); the mild " +
         "outlier is BFS (broadcast-frontier cost\ngrows with frontier " +
-        "size on top of the edge scan — the documented trade;\nthe " +
-        "`broadcastFrontier=false` shuffle-join fallback is the " +
-        "web-scale path).\n"
+        "size on top of the edge scan — the documented trade;\n" +
+        "graph operators have one broadcast plan and assume a " +
+        "broadcastable\nnode set, see `graft.ext.Graph`).\n"
     }
     md ++= "\n"
     val tierNames = sfDirs.map(_.split('/').last) ++

@@ -96,7 +96,9 @@ object StreamBench {
       ds => TransferTracker.track(ds.withWatermark("eventTime", "1 minute")
         .as[StatusEvent]),
       (b, n) => (0 until n).map { i =>
-        val id = (b * n + i) / 2 // two events per transfer
+        // two events per transfer; floorDiv keeps the pairs whole in
+        // the warm-up batch (b = -1), where `/` truncates toward zero
+        val id = Math.floorDiv(b * n + i, 2)
         val st = if (i % 2 == 0) "RECEIVED"
                  else if (id % 10 == 0) "FAILED" else "PROCESSED"
         StatusEvent(s"corr$id", st, minute(b))

@@ -245,7 +245,7 @@ object BehaviorQueries {
         // already distinct at the undirected pair level; mirror into
         // both directions (one build serves q122/q154/q156/q161/q191)
         val edges = SharedGraph.mirrored(spark, dir)
-        graft.ext.Graph.kCore(edges, k = 65, broadcastAlive = true)
+        graft.ext.Graph.kCore(edges, k = 65)
           .orderBy(col("node"))
       },
       Some("""

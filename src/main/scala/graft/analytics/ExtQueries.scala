@@ -1717,12 +1717,7 @@ object ExtQueries {
         // validate=false: `edges` is the explicit two-direction union
         // right above — every dst IS a src by construction, so the
         // dangling-node pass would only re-prove the construction
-        // broadcastRank: the node set (parts + suppliers) is dimension-
-        // sized (~21k at sf0.1) even though the edge list is fact-sized,
-        // so the rank vector rides broadcast joins and each iteration is
-        // one edge-scan, not an edge shuffle
-        Graph.pageRank(edges, iterations = 3, validate = false,
-          broadcastRank = true)
+        Graph.pageRank(edges, iterations = 3, validate = false)
           .select(col("node"),
             when(col("node") % 2 === 0, "part").otherwise("supplier")
               .as("node_type"),

@@ -1008,13 +1008,11 @@ object RecipeQueries {
             .as("e"))
           .select(col("e.src").as("src"), col("e.dst").as("dst"),
             col("e.w").as("w"))
-        // broadcast mode: the label vector is node-sized (~#parts), so
-        // every round is one map-side join over the checkpointed edge
-        // scan. The FINAL vector is referenced four times below (output,
+        // the FINAL label vector is referenced four times below (output,
         // two modularity joins, degree tag) — one eager checkpoint stops
         // each reference re-running the last round (measured 12 → 5 s)
         val labels = graft.ext.Graph.labelPropagation(mirrored, rounds = 3,
-            broadcastLabels = true, mirroredInput = true)
+            mirroredInput = true)
           .localCheckpoint(true)
         // evaluation half: total Q·4m² of the produced partition vs the
         // all-singletons baseline (−Σ deg² — every e_c = 0), both exact
@@ -1022,16 +1020,13 @@ object RecipeQueries {
         // degree table derived ONCE (round-18: it fed both the
         // modularity dC aggregation and the singleton baseline as two
         // separate endpoint-union shuffles) and shared via modularity's
-        // `degrees` hook; `broadcastComm = true` rides the node-sized
-        // label vector through the modularity joins the same way every
-        // LP round above already broadcasts it — one size claim, zero
-        // edge-list shuffles in the evaluation half.
+        // `degrees` hook.
         val deg = edges.select(col("src").as("node"))
           .unionAll(edges.select(col("dst").as("node")))
           .groupBy(col("node")).agg(count(lit(1)).as("deg"))
           .localCheckpoint(true)
         val mod = graft.ext.Graph.modularity(edges, labels,
-          broadcastComm = true, degrees = Some(deg))
+          degrees = Some(deg))
         val qTot = mod.agg(sum(col("q_contrib_scaled")
           .cast("decimal(38,0)")).as("q_scaled"))
         val qSingleton = deg.agg((-sum(col("deg").cast("decimal(38,0)")

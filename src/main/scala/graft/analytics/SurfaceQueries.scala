@@ -857,15 +857,10 @@ object SurfaceQueries {
         // factoring; per-order pair generation beats the l_orderkey
         // SELF-JOIN the oracle spells, and now runs once per session)
         val edges = SharedGraph.undirected(spark, dir)
-        // the part co-purchase graph is dimension-sized (~1.2M edges
-        // over ~20k parts at sf0.1) — broadcast the packed adjacency
-        // table so the per-edge intersections run map-side with no
-        // shuffle; a web-scale edge list would leave the default
         // assumeCanonical: the census IS the distinct a < b pair set, so
         // the operator's canonicalization distinct (a full edge-set
         // shuffle) would only re-prove the construction (round-18)
-        graft.ext.Graph.triangleCounts(edges, broadcastAdj = true,
-            assumeCanonical = true)
+        graft.ext.Graph.triangleCounts(edges, assumeCanonical = true)
           .orderBy(col("node"))
       },
       Some("""

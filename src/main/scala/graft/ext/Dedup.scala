@@ -169,11 +169,11 @@ object Dedup {
     * side x — so A and B must share at least one shingle inside their
     * first |x| − ⌈t·|x|⌉ + 1 elements. Self-joining only those PREFIXES
     * is therefore lossless, and at t = 0.8 the joined index is ~20% of
-    * the full one. With `orderByDf` (the All-Pairs heuristic, default)
-    * the order is (document frequency ASC, hash) — prefixes hold each
-    * doc's RAREST shingles, so the boilerplate header that makes the
-    * full inverted index quadratic ([[jaccardPairs]]'s WARNING) lands in
-    * the un-joined suffix of every doc that has ≥ ~20% rarer content;
+    * the full one. The order is the All-Pairs heuristic's (document
+    * frequency ASC, hash) — prefixes hold each doc's RAREST shingles,
+    * so the boilerplate header that makes the full inverted index
+    * quadratic ([[jaccardPairs]]'s WARNING) lands in the un-joined
+    * suffix of every doc that has ≥ ~20% rarer content;
     * the length filter t·|max| ≤ |min| prunes cross-size candidates on
     * top. The ⌈·⌉ and the length filter carry a 1e-9 slack so a double
     * rounding error can only ENLARGE a prefix, never drop a true pair.
@@ -185,20 +185,17 @@ object Dedup {
     * so the per-pair cost is O(|A|+|B|) with no shuffle row per shared
     * shingle, where [[jaccardPairs]]'s groupBy carries one.
     *
-    * Scale shape: one shuffle for the df census (skipped when
-    * `orderByDf = false` — then the order is the hash itself and the
-    * prefix is a map-side array slice), one keyed regroup to sort each
-    * doc's shingles by df, the PREFIX-only self-join, and two hash joins
-    * of candidates against the array table. The shingle-array table is
-    * localCheckpointed once (it feeds the prefix build and both
-    * verification sides).
+    * Scale shape: one shuffle for the df census, one keyed regroup to
+    * sort each doc's shingles by df, the PREFIX-only self-join, and two
+    * hash joins of candidates against the array table. The
+    * shingle-array table is localCheckpointed once (it feeds the prefix
+    * build and both verification sides).
     *
     * Output: (id_a, id_b, intersection, size_a, size_b, jaccard) —
     * the [[jaccardPairs]] schema.
     */
   def prefixJaccardPairs(docs: DataFrame, id: Column, text: Column, n: Int,
-                         threshold: Double,
-                         orderByDf: Boolean = true): DataFrame = {
+                         threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"prefixJaccardPairs: threshold must be in (0, 1], got $threshold")
     val sh = docs.select(id.as("id"),
@@ -210,22 +207,15 @@ object Dedup {
     // fraction: 0.8·25 evaluates to 20.000000000000004)
     val p = (col("n_sh").cast("long")
       - ceil(col("n_sh") * lit(threshold) - lit(1e-9)) + lit(1L)).cast("int")
-    val prefix =
-      if (!orderByDf)
-        // hash order: the sorted array IS the order — prefix is a slice
-        sh.select(col("id"), col("n_sh"),
-          explode(slice(col("sh"), lit(1), p)).as("s"))
-      else {
-        val census = sh.select(explode(col("sh")).as("s"))
-          .groupBy(col("s")).agg(count(lit(1)).as("df"))
-        sh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
-          .join(census, "s")
-          .groupBy(col("id"), col("n_sh"))
-          .agg(array_sort(collect_list(struct(col("df"), col("s")))).as("ord"))
-          .select(col("id"), col("n_sh"),
-            explode(slice(col("ord"), lit(1), p)).as("e"))
-          .select(col("id"), col("n_sh"), col("e.s").as("s"))
-      }
+    val census = sh.select(explode(col("sh")).as("s"))
+      .groupBy(col("s")).agg(count(lit(1)).as("df"))
+    val prefix = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
+      .join(census, "s")
+      .groupBy(col("id"), col("n_sh"))
+      .agg(array_sort(collect_list(struct(col("df"), col("s")))).as("ord"))
+      .select(col("id"), col("n_sh"),
+        explode(slice(col("ord"), lit(1), p)).as("e"))
+      .select(col("id"), col("n_sh"), col("e.s").as("s"))
     val cand = prefix.as("a").join(prefix.as("b"),
         col("a.s") === col("b.s") && col("a.id") < col("b.id") &&
           least(col("a.n_sh"), col("b.n_sh")).cast("double") >=

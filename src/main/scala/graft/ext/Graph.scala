@@ -15,16 +15,38 @@ import org.apache.spark.sql.functions._
   * (≤ outdeg pico-units of mass per node per iteration — at 1e12 scale,
   * noise in the 12th decimal).
   *
-  * Scale shape: each iteration is one shuffle join of the edge list
-  * against the current rank vector on `src` plus one aggregation on
-  * `dst` — the textbook distributed PR step. The degree table joins in
-  * BROADCAST (node-sized, not edge-sized). Lineage is truncated with a
-  * `localCheckpoint` every `checkpointEvery` iterations, same policy as
-  * [[Dedup.clusters]].
+  * One plan per operator. The edge list is fact-sized; an iterative
+  * operator materializes it once (`localCheckpoint`), since every
+  * iteration re-scans it. Every NODE-sized table rides BROADCAST joins
+  * against it: the rank, label and distance vectors, the BFS
+  * frontier, the k-core removed set, the degree and adjacency tables
+  * and the community map. So an iteration is one map-side edge scan
+  * plus a node-sized aggregation, never an edge-list shuffle. Lineage is
+  * truncated at fixed constants: every [[RankCheckpointEvery]]
+  * PageRank iterations and every [[LabelCheckpointEvery]] label
+  * propagation rounds.
+  *
+  * Scale assumption: the node set fits a broadcast (catalog entities,
+  * hosts, users: node counts in the tens of thousands against
+  * fact-sized edge lists). Graphs whose node set cannot be broadcast
+  * (web graphs) are outside what any query, test or benchmark here
+  * runs. Should such a caller arrive, the operator should pick its
+  * join plan from a node count it measures, with a benchmark workload
+  * on each side of the choice, not from a caller-set flag.
   */
 object Graph {
 
   private val TotalMass = 1000000000000L // 1e12 pico-units = rank mass 1.0
+
+  /** Lineage truncation of [[pageRank]]'s rank vector, in iterations:
+    * shallow runs stay ONE composed plan, deep runs stay bounded. */
+  private val RankCheckpointEvery = 5
+
+  /** Lineage truncation of [[labelPropagation]]'s label vector, in
+    * rounds (round-17: per-round checkpoints were ~40% of q204's LP
+    * cost at rounds=3, since each splits the plan and re-runs the edge
+    * repartition exchange). */
+  private val LabelCheckpointEvery = 8
 
   /** PageRank over an edge list `(src, dst)` (directed; pass both
     * directions for an undirected graph). Every node must appear as a
@@ -38,25 +60,13 @@ object Graph {
     * uniform vector.
     * Returns (node, rank_pico) with rank in pico-units (1e12 = mass 1.0).
     */
-  /** When `broadcastRank` is set, the per-iteration rank vector and
-    * contribution sums ride BROADCAST joins instead of shuffling the
-    * edge list: each iteration becomes one edge-scan with map-side
-    * joins plus a node-sized aggregation — the right plan whenever the
-    * node set is dimension-sized (catalog entities, hosts, users),
-    * even though edges are fact-sized. Leave it off for graphs whose
-    * NODE set is itself beyond driver memory (web graphs): the shuffle
-    * join is the textbook scale-out there.
-    */
   def pageRank(edges: DataFrame, iterations: Int = 3,
-               checkpointEvery: Int = 5,
-               validate: Boolean = true,
-               broadcastRank: Boolean = false): DataFrame = {
+               validate: Boolean = true): DataFrame = {
     require(iterations >= 1)
-    val e0 = edges.select(col("src"), col("dst"))
-    // Broadcast mode re-scans the edge SUBTREE every iteration (there is
+    // Every iteration re-scans the edge SUBTREE (a broadcast join leaves
     // no shuffle whose exchange Catalyst could reuse), so derivation work
     // upstream of the edge list (distinct, unions) would be re-paid
-    // 3× per run; one lineage-truncating materialization amortizes it.
+    // per iteration; one lineage-truncating materialization amortizes it.
     // The in-plan repartition by `dst` (round-17 optimization) feeds the
     // per-iteration contribution aggregation: HashPartitioning(dst)
     // satisfies groupBy(dst)'s clustering, so no iteration shuffles the
@@ -64,19 +74,16 @@ object Graph {
     // across all iterations of the composed plan (ReusedExchange). It
     // must sit AFTER the checkpoint (in the lazy plan): a checkpointed
     // RDD reports UnknownPartitioning, which would hide the layout from
-    // the planner. Shuffle mode keeps the lazy composition — its
-    // per-iteration exchanges ARE reused (see below).
-    val e = if (broadcastRank) e0.localCheckpoint().repartition(col("dst"))
-            else e0
-    val deg0 = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
+    // the planner.
+    val e = edges.select(col("src"), col("dst")).localCheckpoint()
+      .repartition(col("dst"))
     // deg is referenced ~2× per iteration (broadcast build + probe side
-    // of the rank assembly); in broadcast mode each reference would
-    // re-scan the edge list and re-aggregate — one NODE-sized eager
-    // materialization removes all of it (round-17: q80 2.6 → 1.5 s at
-    // sf0.1 together with the repartition above). Shuffle mode keeps
-    // the lazy form whose src-keyed exchange is reused.
-    val deg = if (broadcastRank) deg0.localCheckpoint(true) else deg0
+    // of the rank assembly); each reference would re-scan the edge list
+    // and re-aggregate — one NODE-sized eager materialization removes
+    // all of it (round-17: q80 2.6 → 1.5 s at sf0.1 together with the
+    // repartition above)
+    val deg = e.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("outdeg")).localCheckpoint(true)
     if (validate) {
       // one extra job (node-sized distinct + anti join, early-out via
       // isEmpty's limit-1) — the price of never returning a subtly
@@ -99,37 +106,22 @@ object Graph {
     // hash join it replaced, so the uniform vector stays explicit.)
     var rank = deg.crossJoin(broadcast(n))
       .select(col("node"), expr(s"${TotalMass}L div n").as("r"))
-    // SHUFFLE MODE: deliberately no persist of e/deg — for the few
-    // iterations PR needs, the whole loop composes into ONE lazy plan,
-    // and Catalyst reuses the repeated edge/degree exchanges across
-    // iterations (ReusedExchange) — measured ~1.4× faster at sf0.1 than
-    // materializing them through the block store, which pays
-    // serialization plus a plan-breaking eager barrier per input. Deep
-    // iteration counts hit lineage growth instead; `checkpointEvery`
-    // truncates it, trading that reuse back for bounded plans.
-    // BROADCAST MODE: e is checkpointed + dst-repartitioned and deg is
-    // eagerly node-sized-materialized above, so each iteration is a
-    // pure map-side scan + in-partition aggregation.
-    def hint(df: DataFrame): DataFrame =
-      if (broadcastRank) broadcast(df) else df
+    // e is checkpointed + dst-repartitioned and deg eagerly materialized
+    // above, so each iteration is a pure map-side scan + in-partition
+    // aggregation
     for (i <- 1 to iterations) {
       val contrib = e
-        // deg is NODE-sized, so it must follow the same policy as the
-        // rank vector: broadcast only under `broadcastRank`. In shuffle
-        // mode (web graphs whose node set exceeds driver memory) the
-        // src-keyed exchange is shared with the rank join below and
-        // reused across iterations (ReusedExchange).
-        .join(hint(deg.withColumnRenamed("node", "src")), "src")
-        .join(hint(rank.withColumnRenamed("node", "src")), "src")
+        .join(broadcast(deg.withColumnRenamed("node", "src")), "src")
+        .join(broadcast(rank.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"), expr("r div outdeg").as("c"))
       val summed = contrib.groupBy(col("node")).agg(sum(col("c")).as("s"))
       rank = deg.select(col("node"))
-        .join(hint(summed), Seq("node"), "left")
+        .join(broadcast(summed), Seq("node"), "left")
         .crossJoin(broadcast(n))
         .select(col("node"),
           expr(s"(${15 * TotalMass / 100}L div n) + (85 * coalesce(s, 0L)) div 100")
             .as("r"))
-      if (i % checkpointEvery == 0 && i < iterations)
+      if (i % RankCheckpointEvery == 0 && i < iterations)
         rank = rank.localCheckpoint()
     }
     rank.select(col("node"), col("r").as("rank_pico"))
@@ -148,25 +140,18 @@ object Graph {
     * needed. The frontier and visited set are node-sized while the edge
     * list is fact-sized, so the frontier rides a BROADCAST hash join
     * against the edges (map-side, never shuffling the edge list) and
-    * the level's lineage is truncated with one `localCheckpoint` — the
-    * same two policies as [[pageRank]]'s broadcast mode. For graphs
-    * whose FRONTIER outgrows an executor (web-scale), drop
-    * `broadcastFrontier` and the same loop runs on shuffle joins.
+    * the level's lineage is truncated with one `localCheckpoint`.
     *
     * Input: directed edges (src, dst) — pass both directions for an
     * undirected graph — and seeds (node). Output: (node, dist) for every
     * node within `maxHops` of a seed; seeds themselves are dist 0.
     */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-              broadcastFrontier: Boolean = true): DataFrame = {
+  def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0)
-    val e0 = edges.select(col("src"), col("dst"))
     // each level's checkpoint is its own job, so an unmaterialized edge
     // list would re-run its whole derivation (self-joins, distinct)
-    // once per level — same policy as [[pageRank]]'s broadcast mode
-    val e = if (broadcastFrontier) e0.localCheckpoint() else e0
-    def hint(df: DataFrame): DataFrame =
-      if (broadcastFrontier) broadcast(df) else df
+    // once per level
+    val e = edges.select(col("src"), col("dst")).localCheckpoint()
     val seeded = seeds.select(col("node")).distinct()
       .select(col("node"), lit(0).as("dist")).localCheckpoint()
     // the visited set is the UNION of the per-level checkpointed
@@ -185,9 +170,10 @@ object Graph {
     var h = 1
     while (h <= maxHops && !frontier.isEmpty) {
       val next = e
-        .join(hint(frontier.select(col("node").as("src"))), "src")
+        .join(broadcast(frontier.select(col("node").as("src"))), "src")
         .select(col("dst").as("node")).distinct()
-        .join(hint(visited().select(col("node"))), Seq("node"), "left_anti")
+        .join(broadcast(visited().select(col("node"))), Seq("node"),
+          "left_anti")
         .select(col("node"), lit(h).as("dist"))
         .localCheckpoint()
       frontiers = frontiers :+ next
@@ -220,11 +206,9 @@ object Graph {
     * semilattice fold — exactly what map-side partial aggregation
     * absorbs, so the per-round shuffle carries node-sized partials.
     *
-    * Scale shape: each round is one join of the edge list against the
-    * node-sized distance vector (BROADCAST under `broadcastDist` — the
-    * [[bfsHops]] policy; shuffle joins for node sets beyond executor
-    * memory) plus one min aggregation; the edge list is
-    * localCheckpointed once in broadcast mode (each round re-scans it),
+    * Scale shape: each round is one BROADCAST join of the edge list
+    * against the node-sized distance vector plus one min aggregation;
+    * the edge list is localCheckpointed once (each round re-scans it),
     * and each round's vector is checkpointed — it is executed by the
     * next round's broadcast anyway, and the truncation keeps plans flat.
     *
@@ -233,8 +217,7 @@ object Graph {
     * (node, dist); seeds themselves are dist 0 (or less if a negative
     * cycle through a seed exists within the bound).
     */
-  def ssspRelax(edges: DataFrame, seeds: DataFrame, rounds: Int,
-                broadcastDist: Boolean = true): DataFrame = {
+  def ssspRelax(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0)
     // integral-weight contract, enforced: the relax step accumulates in
     // LONG (exactness discipline — long min-folds are fold-order-free
@@ -251,15 +234,12 @@ object Graph {
         s"ssspRelax requires an integral weight column, got $other — " +
           "quantize fractional weights to integer units first")
     }
-    val e0 = edges.select(col("src"), col("dst"), col("w"))
-    val e = if (broadcastDist) e0.localCheckpoint() else e0
-    def hint(df: DataFrame): DataFrame =
-      if (broadcastDist) broadcast(df) else df
+    val e = edges.select(col("src"), col("dst"), col("w")).localCheckpoint()
     var dist = seeds.select(col("node")).distinct()
       .select(col("node"), lit(0L).as("dist")).localCheckpoint()
     for (_ <- 1 to rounds) {
       val relaxed = e
-        .join(hint(dist.withColumnRenamed("node", "src")), "src")
+        .join(broadcast(dist.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"),
           (col("dist") + col("w")).cast("long").as("dist"))
       dist = dist.unionAll(relaxed)
@@ -286,10 +266,9 @@ object Graph {
     * so the degree table stays exactly deg-within-alive throughout and
     * the fixpoint — an empty removal wave, checked, not assumed — is
     * exactly the k-core regardless of peel order. Per-wave cost: one
-    * edge-list scan joined against the REMOVED set (broadcast under
-    * `broadcastAlive` — the [[bfsHops]] policy; shuffle joins
-    * otherwise), so shuffle volume per wave is O(edges incident to the
-    * wave), not O(alive edges) — the late small cascades that dominate
+    * edge-list scan joined against the broadcast REMOVED set, so the
+    * work per wave is O(edges incident to the wave), not O(alive
+    * edges) — the late small cascades that dominate
     * the wave count on dense graphs cost almost nothing (measured
     * ~2× on the amp8 weak-scaling tier vs full recompute). The edge
     * list is localCheckpointed once since every wave re-scans it.
@@ -301,12 +280,9 @@ object Graph {
     * core, which is precisely the maintained table at the fixpoint
     * (every decrement for a removed neighbor has been applied).
     */
-  def kCore(edges: DataFrame, k: Int, maxIters: Int = 100,
-            broadcastAlive: Boolean = false): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxIters: Int = 100): DataFrame = {
     require(k >= 1)
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    def hint(df: DataFrame): DataFrame =
-      if (broadcastAlive) broadcast(df) else df
     // the one full-width aggregation: deg(u) = out-degree over e
     var deg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg_core")).localCheckpoint()
@@ -318,11 +294,11 @@ object Graph {
       if (removed.isEmpty) converged = true
       else {
         val dec = e
-          .join(hint(removed.withColumnRenamed("node", "dst")), "dst")
+          .join(broadcast(removed.withColumnRenamed("node", "dst")), "dst")
           .groupBy(col("src").as("node"))
           .agg(count(lit(1)).as("__dec"))
         deg = deg.where(col("deg_core") >= k)
-          .join(hint(dec), Seq("node"), "left")
+          .join(broadcast(dec), Seq("node"), "left")
           .select(col("node"),
             (col("deg_core") - coalesce(col("__dec"), lit(0L)))
               .as("deg_core"))
@@ -372,28 +348,17 @@ object Graph {
     * hash probes over arrays whose length the orientation already
     * bounds at O(√m) (measured 3× total-query speedup at sf0.1).
     *
-    * The degree table is node-sized, so it rides BROADCAST joins only
-    * under `broadcastAdj` (same policy as [[pageRank]]'s rank vector:
-    * at web scale the node set itself exceeds driver memory, and the
-    * shuffle join is the scale-out). `broadcastAdj` also broadcasts
-    * the packed ADJACENCY table
-    * to the per-edge intersection joins — node-count rows carrying
+    * The node-sized degree table rides BROADCAST joins into the
+    * adjacency build, and the packed ADJACENCY table is broadcast to
+    * the per-edge intersection joins — node-count rows carrying
     * Σoutdeg = m longs in total (an order of magnitude smaller than
     * the edge stream with per-row overheads), so the edge scan never
-    * shuffles at all. Right whenever the edge list fits an executor
-    * (tens of millions of edges); leave it off for web-scale edge
-    * sets, where the same plan runs on tail-/head-keyed shuffle joins.
+    * shuffles at all.
     */
-  /** The oriented-adjacency plan of [[triangleCounts]] BEFORE lineage
-    * truncation — exposed so GraphSpec can pin that shuffle mode
-    * carries no broadcast hint on the node-sized degree table (the
-    * eager localCheckpoint in [[triangleCounts]] hides this subtree
-    * from the final plan).
-    */
-  private[ext] def orientedAdjacency(edges: DataFrame,
-                                     broadcastAdj: Boolean,
-                                     assumeCanonical: Boolean = false)
-      : DataFrame = {
+  def triangleCounts(edges: DataFrame,
+                     assumeCanonical: Boolean = false): DataFrame = {
+    val isLongIdIn = edges.schema("src").dataType ==
+      org.apache.spark.sql.types.LongType
     // canonical undirected edge set (u < v), self-loops dropped.
     // assumeCanonical (round-18, the pageRank validate=false
     // convention): a caller whose edge list is distinct u < v BY
@@ -421,28 +386,18 @@ object Graph {
     // keep only orientation-forward neighbors — (d, id) of the nbr
     // strictly above the node's — then pack them into one SORTED array
     // per node. Oriented out-degree is O(√m) by construction, so the
-    // arrays are bounded regardless of the degree distribution.
-    def hintD(df: DataFrame): DataFrame =
-      if (broadcastAdj) broadcast(df) else df
-    dirs
-      .join(hintD(deg.withColumnRenamed("node", "nbr")
+    // arrays are bounded regardless of the degree distribution. The
+    // adjacency feeds both the wedge-tail scan and the head-side
+    // lookup; one node-sized materialization truncates the shared
+    // derivation.
+    val adj = dirs
+      .join(broadcast(deg.withColumnRenamed("node", "nbr")
         .withColumnRenamed("d", "dn")), "nbr")
-      .join(hintD(deg), "node")
+      .join(broadcast(deg), "node")
       .where(col("dn") > col("d") ||
              (col("dn") === col("d") && col("nbr") > col("node")))
       .groupBy(col("node"))
       .agg(sort_array(collect_list(col("nbr"))).as("nbrs"))
-  }
-
-  def triangleCounts(edges: DataFrame,
-                     broadcastAdj: Boolean = false,
-                     assumeCanonical: Boolean = false): DataFrame = {
-    val isLongIdIn = edges.schema("src").dataType ==
-      org.apache.spark.sql.types.LongType
-    // feeds both the wedge-tail scan and the head-side lookup; one
-    // node-sized materialization truncates the shared derivation
-    // (same policy as [[pageRank]]'s broadcast mode)
-    val adj = orientedAdjacency(edges, broadcastAdj, assumeCanonical)
       .localCheckpoint()
     // each triangle a→b, a→c, b→c is found EXACTLY once: at its (a, b)
     // edge, as c ∈ adj(a) ∩ adj(b). The inner head join is lossless: a
@@ -450,10 +405,8 @@ object Graph {
     // node ids the intersection is the codegen'd merge kernel
     // ([[graft.functions.SketchKernels.sortedIntersect]] — no per-row
     // hash set); other id types fall back to array_intersect.
-    val headAdj = {
-      val a = adj.select(col("node").as("head"), col("nbrs").as("nh"))
-      if (broadcastAdj) broadcast(a) else a
-    }
+    val headAdj = broadcast(adj.select(col("node").as("head"),
+      col("nbrs").as("nh")))
     def intersect(a: Column, b: Column): Column =
       if (isLongIdIn) graft.functions.SketchFns.sorted_intersect(a, b)
       else array_intersect(a, b)
@@ -497,14 +450,8 @@ object Graph {
     * weight-sum aggregation — map-side partials absorb the fan-in — and
     * one per-node argmax as a single `max(struct(weight, -label))`
     * (no window, no second sort). The label vector rides BROADCAST
-    * joins under `broadcastLabels` (the [[pageRank]] policy — right for
-    * dimension-sized node sets; leave off for web-scale graphs); the
-    * label vector is `localCheckpoint`ed every `checkpointEvery` rounds.
-    * The default (8) keeps shallow runs as ONE composed plan — a
-    * per-round eager checkpoint costs a job per round and, in broadcast
-    * mode, splits the plan so the edge repartition exchange re-runs per
-    * round instead of being reused (round-17: per-round checkpoints
-    * were ~40% of q204's LP cost at rounds=3); deep runs still truncate
+    * joins and is `localCheckpoint`ed every [[LabelCheckpointEvery]]
+    * rounds: shallow runs stay ONE composed plan, deep runs truncate
     * lineage before plans grow unboundedly.
     *
     * Input: weighted directed edges (src, dst, w) — pass BOTH
@@ -515,25 +462,20 @@ object Graph {
     * edge; `community` is a node id, canonical only per round count.
     */
   def labelPropagation(edges: DataFrame, rounds: Int,
-                       checkpointEvery: Int = 8,
-                       broadcastLabels: Boolean = false,
                        mirroredInput: Boolean = false): DataFrame = {
     require(rounds >= 1)
-    val e0 = edges.select(col("src"), col("dst"), col("w"))
-    // broadcast mode re-scans the edge subtree every round (no reusable
-    // exchange) — one lineage-truncating materialization amortizes the
-    // upstream derivation, same policy as [[pageRank]]. The in-plan
-    // repartition by `src` (round-17 optimization) makes BOTH per-round
+    // every round re-scans the edge subtree (no reusable exchange) —
+    // one lineage-truncating materialization amortizes the upstream
+    // derivation, same policy as [[pageRank]]. The in-plan repartition
+    // by `src` (round-17 optimization) makes BOTH per-round
     // aggregations exchange-free — HashPartitioning(src) satisfies
     // groupBy(src, nl) and groupBy(node) alike (subset clustering) —
     // and the one repartition exchange is reused across rounds of the
     // composed plan; it must sit AFTER the checkpoint, which reports
     // UnknownPartitioning (q204: 2.5 → 1.2 s at sf0.1 together with
-    // checkpointEvery=8 below).
-    val e = if (broadcastLabels) e0.localCheckpoint().repartition(col("src"))
-            else e0
-    def hint(df: DataFrame): DataFrame =
-      if (broadcastLabels) broadcast(df) else df
+    // the 8-round checkpoint interval).
+    val e = edges.select(col("src"), col("dst"), col("w")).localCheckpoint()
+      .repartition(col("src"))
     // argmax with min-label tie-break as ONE lexicographic struct max:
     // (ws, -nl) — larger weight wins, then larger -nl = smaller label
     def argmax(votes: DataFrame): DataFrame = votes
@@ -560,12 +502,12 @@ object Graph {
         .select(col("node"), col("node").as("community"))
     for (i <- startRound to rounds) {
       val votes = e
-        .join(hint(labels.select(col("node").as("dst"),
+        .join(broadcast(labels.select(col("node").as("dst"),
           col("community").as("nl"))), "dst")
         .groupBy(col("src").as("node"), col("nl"))
         .agg(sum(col("w")).as("ws"))
       labels = argmax(votes)
-      if (i % checkpointEvery == 0 && i < rounds)
+      if (i % LabelCheckpointEvery == 0 && i < rounds)
         labels = labels.localCheckpoint()
     }
     labels
@@ -588,10 +530,10 @@ object Graph {
     * communities recovers Q·4m² exactly.
     *
     * Scale shape: degrees from one union-and-count over edge
-    * endpoints; community tags join node-keyed (dimension-sized
-    * community maps broadcast); e_c tags each edge's two ends and
-    * counts the agreeing ones — the edge list streams through two
-    * equi-joins and one aggregation, nothing quadratic, no iteration.
+    * endpoints; the node-sized community map is broadcast to tag them;
+    * e_c tags each edge's two ends and counts the agreeing ones — the
+    * edge list streams through two map-side equi-joins and one
+    * aggregation, nothing quadratic, no iteration, no edge shuffle.
     *
     * Input: `edges` one row per UNDIRECTED edge (src < dst, no
     * duplicates — [[triangleCounts]]' input contract), `communities`
@@ -600,16 +542,9 @@ object Graph {
     * m_edges, q_contrib_scaled, q_contrib).
     */
   def modularity(edges: DataFrame, communities: DataFrame,
-                 broadcastComm: Boolean = false,
                  degrees: Option[DataFrame] = None): DataFrame = {
     val e = edges.toDF("src", "dst")
-    val comm0 = communities.toDF("node", "community")
-    // broadcastComm: the community map is node-sized — when the caller
-    // already rides it through broadcast joins (labelPropagation's
-    // broadcastLabels mode, the dimension-sized-graph policy), tagging
-    // the edge ends here is the SAME size claim, and it turns both eC
-    // joins and the dC join map-side (0 shuffles of the edge list).
-    def comm = if (broadcastComm) broadcast(comm0) else comm0
+    val comm = broadcast(communities.toDF("node", "community"))
     // degrees: callers that need the per-node degree table themselves
     // (q204's all-singletons baseline) pass it in so the endpoint
     // union+count runs once, not once per consumer.

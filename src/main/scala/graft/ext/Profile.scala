@@ -23,10 +23,7 @@ import org.apache.spark.sql.types._
   * COUNT(DISTINCT) lowers to Catalyst's Expand — one input replica per
   * distinct-counted column — so cost is (#cols × scan) map-side with a
   * single final exchange, no driver state, no per-column jobs. For
-  * corpora where an exact distinct per column is not worth an Expand
-  * replica, pass `approxDistinct = true` to swap in HLL++
-  * (approx_count_distinct, mergeable partials, Expand-free) — the
-  * registered oracle query keeps the exact form. `audit`'s row checks
+  * `audit`, row checks
   * fold into one conditional-sum pass over the fact table; uniqueness
   * is one hash aggregate on the key; each FK check is an anti join that
   * AQE broadcasts when the dimension is small (the usual case) and
@@ -72,16 +69,15 @@ object Profile {
     * rounding step dwarfs ~1e-11 relative float error at the column's
     * magnitude.
     */
-  def profile(df: DataFrame, cols: Seq[String], avgScale: Int = 2,
-              approxDistinct: Boolean = false): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String],
+              avgScale: Int = 2): DataFrame = {
     require(cols.nonEmpty, "profile of zero columns")
     val fields = cols.map(c => c -> df.schema(c).dataType)
     val aggs = fields.flatMap { case (c, dt) =>
       val proxy = numericProxy(dt, col(c))
       Seq(
         count(col(c)).as(s"__nn_$c"),
-        (if (approxDistinct) approx_count_distinct(col(c))
-         else countDistinct(col(c))).as(s"__nd_$c"),
+        countDistinct(col(c)).as(s"__nd_$c"),
         min(proxy).as(s"__min_$c"),
         max(proxy).as(s"__max_$c"),
         quant(avg(proxy), math.pow(10, avgScale)).as(s"__avg_$c"))

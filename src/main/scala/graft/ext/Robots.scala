@@ -21,12 +21,11 @@ import org.apache.spark.sql.functions._
   * corpus has URLs), parsed once into a rule table; the per-URL
   * decision is one equi-join on `domain` (the prefix test is a join
   * residual) + one aggregation over the matched rules. The join is
-  * deliberately UNHINTED by default: at audit scale AQE broadcasts
+  * deliberately UNHINTED: at audit scale AQE broadcasts
   * the rule table on its own, and at web-crawl scale (~10⁸ domains ×
   * rules — tens of GB, far past broadcast range) the same plan
   * degrades gracefully to a shuffled join on `domain` instead of
-  * OOMing the driver. Pass `broadcastRules = true` only when the
-  * rule table is known-small and the hint is worth pinning.
+  * OOMing the driver.
   */
 object Robots {
 
@@ -162,28 +161,23 @@ object Robots {
     * names extra `urls` columns — functionally dependent on `url`
     * (e.g. a media id, a body length) — threaded through the per-URL
     * aggregation so callers don't need a corpus-sized re-join to get
-    * them back. `broadcastRules` pins the broadcast hint on the rule
-    * side; the default leaves the method to AQE so a domain-scale rule
-    * table (a real web crawl) falls back to a shuffled equi-join
-    * instead of OOMing the driver.
+    * them back. Both joins are unhinted; AQE picks the join method
+    * (see the object doc).
     */
   def evaluate(urls: DataFrame, rules: DataFrame, agent: String,
-               carry: Seq[String] = Nil,
-               broadcastRules: Boolean = false): DataFrame = {
+               carry: Seq[String] = Nil): DataFrame = {
     val a = lower(lit(agent))
-    val hint: DataFrame => DataFrame =
-      if (broadcastRules) broadcast(_) else identity
     // does the domain define a group for this agent?
     val hasExact = rules.filter(lower(col("agent")) === a)
       .select(col("domain").as("he_domain")).distinct()
-    val scoped = rules.join(hint(hasExact),
+    val scoped = rules.join(hasExact,
         col("domain") === col("he_domain"), "left")
       .filter(
         when(col("he_domain").isNotNull, lower(col("agent")) === a)
           .otherwise(col("agent") === "*"))
       .select(col("domain").as("r_domain"), col("allow"),
         col("path").as("r_path"))
-    urls.join(hint(scoped), col("domain") === col("r_domain") &&
+    urls.join(scoped, col("domain") === col("r_domain") &&
         (col("r_path") === "" ||
           col("path").startsWith(col("r_path"))), "left")
       .groupBy(col("url") +: col("domain") +: col("path") +:

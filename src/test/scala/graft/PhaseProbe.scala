@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only phase-timing probe (test scope; never on the Bench/Verify
@@ -24,44 +24,6 @@ object PhaseProbe {
       df.write.format("noop").mode("overwrite").save()
 
     args.headOption.getOrElse("q204") match {
-      case "q204" =>
-        // warm the shared census + JIT (2 untimed full runs)
-        for (_ <- 1 to 2)
-          noop(SparkEntry.queries("q204_label_propagation")(spark, sfDir))
-        for (pass <- 1 to 3) {
-          println(s"-- pass $pass")
-          val pairs = analyticsProxy.sharedPairs(spark, sfDir)
-          val mirrored = time("mirror") {
-            pairs.select(explode(array(
-                struct(col("a").as("src"), col("b").as("dst"), col("c").as("w")),
-                struct(col("b").as("src"), col("a").as("dst"), col("c").as("w"))))
-                .as("e"))
-              .select(col("e.src").as("src"), col("e.dst").as("dst"),
-                col("e.w").as("w"))
-          }
-          val labels = time("labelPropagation+ckpt") {
-            graft.ext.Graph.labelPropagation(mirrored, rounds = 3,
-                broadcastLabels = true)
-              .localCheckpoint(true)
-          }
-          val edges = analyticsProxy.sharedUndirected(spark, sfDir)
-          time("modularity+rest (noop)") {
-            val mod = graft.ext.Graph.modularity(edges, labels)
-            val qTot = mod.agg(sum(col("q_contrib_scaled")
-              .cast("decimal(38,0)")).as("q_scaled"))
-            val deg = edges.select(col("src").as("node"))
-              .unionAll(edges.select(col("dst").as("node")))
-              .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-            val qSingleton = deg.agg((-sum(col("deg").cast("decimal(38,0)")
-              * col("deg"))).as("q_singleton_scaled"))
-            noop(labels.crossJoin(broadcast(qTot))
-              .crossJoin(broadcast(qSingleton))
-              .select(col("node"), col("community"),
-                (col("q_scaled") >= col("q_singleton_scaled"))
-                  .as("q_ge_singleton"))
-              .orderBy(col("node")))
-          }
-        }
       case "amplify" =>
         // build the K× weak-scaling replica corpus (idempotent)
         val k = sys.env.getOrElse("SPARK_GRAFT_AMPLIFY_K", "8").toInt
@@ -87,29 +49,6 @@ object PhaseProbe {
           // sever references so the next query's reading is its own
           System.gc(); Thread.sleep(500)
         }
-      case "ckptpart" =>
-        // does localCheckpoint preserve outputPartitioning in 4.1.2?
-        val t = new Tables(spark, sfDir)
-        val a = t.lineitem.select(col("l_orderkey").as("k"), col("l_partkey"))
-          .repartition(col("k")).localCheckpoint(true)
-        println("[plan] groupBy after repartition->checkpoint:")
-        a.groupBy(col("k")).agg(count(lit(1))).explain("formatted")
-        val b = t.lineitem.select(col("l_orderkey").as("k"), col("l_partkey"))
-          .localCheckpoint(true).repartition(col("k"))
-        println("[plan] groupBy after checkpoint->repartition:")
-        b.groupBy(col("k")).agg(count(lit(1))).explain("formatted")
-      case "q204plan" =>
-        val pairs = analyticsProxy.sharedPairs(spark, sfDir)
-        val mirrored = pairs.select(explode(array(
-            struct(col("a").as("src"), col("b").as("dst"), col("c").as("w")),
-            struct(col("b").as("src"), col("a").as("dst"), col("c").as("w"))))
-            .as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"),
-            col("e.w").as("w"))
-        val lp = graft.ext.Graph.labelPropagation(mirrored, rounds = 3,
-          broadcastLabels = true, mirroredInput = true)
-        println("[plan] composed 3-round LP (before checkpoint):")
-        lp.explain("formatted")
       case "q52" =>
         val t = new Tables(spark, sfDir)
         for (_ <- 1 to 1)
@@ -131,15 +70,6 @@ object PhaseProbe {
               .orderBy(col("doc_id")))
           }
         }
-      case "q198" =>
-        for (_ <- 1 to 2)
-          noop(SparkEntry.queries("q198_quantile_sketch_store")(spark, sfDir))
-        for (pass <- 1 to 3) {
-          println(s"-- pass $pass")
-          time("q198 full (noop)") {
-            noop(SparkEntry.queries("q198_quantile_sketch_store")(spark, sfDir))
-          }
-        }
       case other =>
         // generic: warm twice, then 3 timed full runs
         val fn = SparkEntry.queries.getOrElse(other,
@@ -150,13 +80,5 @@ object PhaseProbe {
           time(s"$other full (noop) pass $pass") { noop(fn(spark, sfDir)) }
     }
     spark.stop()
-  }
-
-  /** Access the private[analytics] SharedGraph from test scope. */
-  object analyticsProxy {
-    def sharedPairs(spark: SparkSession, dir: String): DataFrame =
-      graft.analytics.SharedGraphAccess.pairs(spark, dir)
-    def sharedUndirected(spark: SparkSession, dir: String): DataFrame =
-      graft.analytics.SharedGraphAccess.undirected(spark, dir)
   }
 }

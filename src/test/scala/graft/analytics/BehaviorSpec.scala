@@ -10,11 +10,11 @@ import graft.{SparkEntry, TestSpark}
   * SEMANTICS (deadline windows, duration weighting, the OLS closed
   * form, BFS levels, gap magnitudes) a human expects.
   */
-class BehaviorSpec extends AnyFunSuite {
+class BehaviorSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** Fixture tables written once per run:
+  /** Fixture tables, written afresh for each test:
     * events — u1: view 01-01 10:00 → click +30m → purchase +1h →
     *   purchase 01-09 (converts every funnel stage inside its deadline);
     *   u2: view 01-02 09:00 → click +2h (MISSES the 1-hour deadline)
@@ -25,8 +25,8 @@ class BehaviorSpec extends AnyFunSuite {
     * orders/customer/nation — one nation, y = 200·x cents over 3 days:
     *   slope exactly 2.00 currency units/day.
     */
-  private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("behavior_fx").toString
+  private def fixture(): String = {
+    val d = tempDir("behavior_fx").toString
     val events = Seq(
       (0L, "2024-01-01 10:00:00", 1L, "view", 10.0),
       (1L, "2024-01-01 10:30:00", 1L, "click", 20.0),
@@ -62,7 +62,7 @@ class BehaviorSpec extends AnyFunSuite {
   }
 
   private def run(name: String) =
-    SparkEntry.queries(name)(spark, dir)
+    SparkEntry.queries(name)(spark, fixture())
 
   test("q151 deadline funnel: deadline windows gate each stage") {
     val rows = run("q151_deadline_funnel").collect()

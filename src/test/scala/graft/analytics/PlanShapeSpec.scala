@@ -170,7 +170,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q80 PageRank: rank vector rides broadcast joins, never sort-merge") {
-    // the broadcastRank plan: every per-iteration join (degree table,
+    // the one pageRank plan: every per-iteration join (degree table,
     // rank vector, contribution sums) must be a BroadcastHashJoin; a
     // SortMergeJoin means an iteration is shuffling the edge list again
     val plan = executedPlan("q80_pagerank")

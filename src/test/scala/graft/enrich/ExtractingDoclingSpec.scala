@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * contract under [[RetryPolicy]], and the full
   * [[graft.stream.FilePipeline.enrich]] path end-to-end.
   */
-class ExtractingDoclingSpec extends AnyFunSuite {
+class ExtractingDoclingSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.TestSpark.spark
 
   private def bytes(s: String) = s.getBytes("ISO-8859-1")
@@ -153,8 +153,7 @@ class ExtractingDoclingSpec extends AnyFunSuite {
     import org.apache.spark.sql.Row
     import graft.stream.{BatchMetrics, FilePipeline, PipelineConfig}
     import graft.ops.Envelope
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-docling-e2e").toString
+    val out = tempDir("graft-docling-e2e").toString
     val ts = java.sql.Timestamp.valueOf("2026-08-16 01:02:03")
     def row(fn: String, body: Array[Byte]) = Row(
       fn, "application/pdf", body.length.toLong, s"T-$fn", "c" * 64,

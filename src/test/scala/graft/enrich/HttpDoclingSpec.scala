@@ -18,7 +18,7 @@ import graft.ops.Envelope
   * schedule, 5xx burst → breaker opens. No network egress: everything
   * binds 127.0.0.1 on an ephemeral port.
   */
-class HttpDoclingSpec extends AnyFunSuite {
+class HttpDoclingSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = TestSpark.spark
 
   /** Starts a one-route server on 127.0.0.1:0; returns (endpoint, server,
@@ -67,7 +67,7 @@ class HttpDoclingSpec extends AnyFunSuite {
       }
       val envelope = spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), Envelope.envelopeSchema)
-      val out = Files.createTempDirectory("graft-http").toString
+      val out = tempDir("graft-http").toString
       val m = FilePipeline.runBatch(envelope, out,
         new HttpDocling(HttpDoclingConfig(endpoint)),
         PipelineConfig(retry = fastRetry,

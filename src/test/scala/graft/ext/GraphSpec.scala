@@ -50,27 +50,6 @@ class GraphSpec extends AnyFunSuite {
     assert(ranksWith(2) == ranksWith(13))
   }
 
-  test("pageRank shuffle mode carries no broadcast hint on node-sized tables") {
-    // broadcastRank = false is the documented web-graph contract
-    // (node set beyond driver memory): deg, rank, and the contribution
-    // sums must all ride shuffle joins. The only permitted hint is the
-    // 1-row node-count table `n`. (VERDICT r15 item 2: the deg table
-    // was force-broadcast even in shuffle mode.)
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    val edges = undirected((0L until 20L).map(i => (i, (i * 3 + 1) % 20)): _*)
-    def run(bc: Boolean) = Graph.pageRank(edges, iterations = 3,
-      broadcastRank = bc)
-    val hinted = run(bc = false).queryExecution.analyzed
-      .collect { case h: ResolvedHint => h }
-      .flatMap(_.output.map(_.name)).toSet
-    assert(hinted.subsetOf(Set("n")),
-      s"node-sized table under a broadcast hint in shuffle mode: $hinted")
-    // and the two modes agree on every rank
-    def ranks(bc: Boolean) = run(bc).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ranks(bc = false) == ranks(bc = true))
-  }
-
   // ------------------------------------------------------- triangleCounts
 
   test("triangleCounts: K4, pendant path, and a triangle-free star") {
@@ -88,7 +67,7 @@ class GraphSpec extends AnyFunSuite {
   test("triangleCounts: assumeCanonical on a canonical edge set is exact") {
     // distinct u < v input (the SharedGraph census contract): the
     // canonicalization-skipping fast path must match the general one
-    // triangle-for-triangle, in both adjacency modes
+    // triangle-for-triangle
     val k4 = for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b)
     val canon = (k4 ++ Seq((0L, 4L), (10L, 11L), (10L, 12L), (10L, 13L)))
       .toDF("src", "dst")
@@ -96,8 +75,6 @@ class GraphSpec extends AnyFunSuite {
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val base = m(Graph.triangleCounts(canon))
     assert(m(Graph.triangleCounts(canon, assumeCanonical = true)) == base)
-    assert(m(Graph.triangleCounts(canon, broadcastAdj = true,
-      assumeCanonical = true)) == base)
   }
 
   test("triangleCounts: duplicate edges, self-loops, and one-directional input") {
@@ -124,25 +101,6 @@ class GraphSpec extends AnyFunSuite {
     assert(got(0L) == 12L)
     assert((1L to 12L).forall(i => got(i) == 2L), s"rim counts off: $got")
     assert(got == run(7))
-  }
-
-  test("triangleCounts: modes agree; shuffle mode is entirely unhinted") {
-    // broadcastAdj = false is the web-scale contract: degree census,
-    // adjacency build, and the head-side lookup all shuffle — no
-    // node-sized table may carry a forced broadcast (ADVICE r15:
-    // deg was hinted unconditionally at the adjacency build).
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    val k4 = for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b)
-    val edges = undirected(k4 ++ Seq((3L, 7L), (7L, 8L), (8L, 3L)): _*)
-    def run(bc: Boolean) = Graph.triangleCounts(edges, broadcastAdj = bc)
-    assert(run(bc = false).queryExecution.analyzed
-      .collect { case h: ResolvedHint => h }.isEmpty,
-      "shuffle-mode triangleCounts must carry no broadcast hint")
-    def counts(bc: Boolean) = run(bc).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = counts(bc = false)
-    assert(got == counts(bc = true))
-    assert(got(3L) == 4L && got(7L) == 1L && got(8L) == 1L, s"$got")
   }
 
   // -------------------------------------------------------------- kCore
@@ -202,12 +160,12 @@ class GraphSpec extends AnyFunSuite {
   test("kCore: partition-invariant and broadcast/shuffle-agnostic") {
     val k5 = for (a <- 0L to 4L; b <- 0L to 4L if a < b) yield (a, b)
     val edges = undirected(k5 ++ Seq((0L, 10L), (10L, 11L), (11L, 0L)): _*)
-    def run(parts: Int, bc: Boolean) =
-      Graph.kCore(edges.repartition(parts), k = 2, broadcastAlive = bc)
+    def run(parts: Int) =
+      Graph.kCore(edges.repartition(parts), k = 2)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expect = run(1, bc = false)
+    val expect = run(1)
     assert(expect.keySet == (0L to 4L).toSet + 10L + 11L)
-    assert(run(5, bc = true) == expect)
+    assert(run(5) == expect)
   }
 
   private def weighted(pairs: (Long, Long, Long)*) =
@@ -255,38 +213,35 @@ class GraphSpec extends AnyFunSuite {
   test("labelPropagation: partition-invariant and broadcast/shuffle-agnostic") {
     val ring = (0L until 30L).map(i => (i, (i + 1) % 30, 1L + i % 3))
     val edges = weighted(ring: _*)
-    def run(parts: Int, bc: Boolean) =
-      Graph.labelPropagation(edges.repartition(parts), rounds = 3,
-          broadcastLabels = bc)
+    def run(parts: Int) =
+      Graph.labelPropagation(edges.repartition(parts), rounds = 3)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expect = run(1, bc = false)
+    val expect = run(1)
     assert(expect.keySet == (0L until 30L).toSet)
-    assert(run(7, bc = true) == expect)
-    assert(run(13, bc = false) == expect)
+    assert(run(7) == expect)
+    assert(run(13) == expect)
   }
 
   test("labelPropagation: mirroredInput round-1 specialization is exact") {
     // mirroredInput = true replaces round 1's join against the identity
     // labeling with a direct (src, dst) weight sum — must be label-for-
-    // label identical on any MIRRORED edge list, across round counts and
-    // both join modes. Fixtures: the two-clique bridge graph (asymmetric
-    // weights, tie-breaks) and a ring (long propagation chains).
+    // label identical on any MIRRORED edge list, across round counts.
+    // Fixtures: the two-clique bridge graph (asymmetric weights,
+    // tie-breaks) and a ring (long propagation chains).
     val cliques = weighted((1L, 2L, 3L), (1L, 3L, 3L), (2L, 3L, 3L),
       (4L, 5L, 3L), (4L, 6L, 3L), (5L, 6L, 3L), (3L, 4L, 1L))
     val ring = weighted((0L until 17L).map(i => (i, (i + 1) % 17, 1L + i % 3)): _*)
-    for (edges <- Seq(cliques, ring); rounds <- Seq(1, 2, 3);
-         bc <- Seq(true, false)) {
-      val base = Graph.labelPropagation(edges, rounds, broadcastLabels = bc)
+    for (edges <- Seq(cliques, ring); rounds <- Seq(1, 2, 3)) {
+      val base = Graph.labelPropagation(edges, rounds)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val fast = Graph.labelPropagation(edges, rounds, broadcastLabels = bc,
-          mirroredInput = true)
+      val fast = Graph.labelPropagation(edges, rounds, mirroredInput = true)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(fast == base, s"divergence at rounds=$rounds bc=$bc: " +
+      assert(fast == base, s"divergence at rounds=$rounds: " +
         s"fast=$fast base=$base")
     }
   }
 
-  test("modularity: broadcastComm + shared degrees change nothing") {
+  test("modularity: shared degrees change nothing") {
     val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
       (5L, 6L), (3L, 4L)).toDF("src", "dst")
     val comm = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L),
@@ -297,9 +252,6 @@ class GraphSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(col("community")).collect().map(_.toSeq).toSeq
     val base = rows(Graph.modularity(und, comm))
-    assert(rows(Graph.modularity(und, comm, broadcastComm = true)) == base)
     assert(rows(Graph.modularity(und, comm, degrees = Some(deg))) == base)
-    assert(rows(Graph.modularity(und, comm, broadcastComm = true,
-      degrees = Some(deg))) == base)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -71,8 +71,7 @@ class LayoutSpec extends AnyFunSuite {
     val grid = spark.range(n.toLong * n)
       .select((col("id") % n).cast("int").as("a"),
         (col("id") / n).cast("int").as("b"))
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-zorder-skip").toString
+    val base = tempDir("graft-zorder-skip").toString
     Layout.zorder(grid, col("a"), col("b"), bits = 7, partitions = 16)
       .drop("__z").write.mode("overwrite").parquet(s"$base/z")
     grid.repartition(16).write.mode("overwrite").parquet(s"$base/shuf")

@@ -10,7 +10,7 @@ import graft.TestSpark
   * end-to-end case drives extractMeta to pin the sha256 the q35 oracle
   * can no longer check (DuckDB's sha256 is VARCHAR-only).
   */
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with graft.TempDirs {
 
   private val dec = new Multimodal.HeaderDecoder()
   private def hx(s: String): Array[Byte] =
@@ -388,17 +388,16 @@ class MultimodalSpec extends AnyFunSuite {
     assert(got.isDefined)
     val (n, hasCt, comp, uncomp) = got.get
     // independent oracle: the JDK's own ZipFile over the same bytes
-    val tmp = java.io.File.createTempFile("graft", ".docx")
+    val tmp = tempDir("graft-docx").resolve("parts.docx")
+    java.nio.file.Files.write(tmp, b)
+    val zf = new java.util.zip.ZipFile(tmp.toFile)
     try {
-      java.nio.file.Files.write(tmp.toPath, b)
-      val zf = new java.util.zip.ZipFile(tmp)
       val entries = scala.jdk.CollectionConverters
         .EnumerationHasAsScala(zf.entries()).asScala.toSeq
       assert(n === entries.size)
       assert(comp === entries.map(_.getCompressedSize).sum)
       assert(uncomp === entries.map(_.getSize).sum)
-      zf.close()
-    } finally tmp.delete()
+    } finally zf.close()
     assert(hasCt)
     assert(uncomp === parts.map(_._2.getBytes("UTF-8").length.toLong).sum)
   }

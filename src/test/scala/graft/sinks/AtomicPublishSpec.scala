@@ -27,12 +27,11 @@ import graft.ext.Profile
   * corrupt/truncated manifest degrades to a clear error instead of a
   * NumberFormatException.
   */
-class AtomicPublishSpec extends AnyFunSuite {
+class AtomicPublishSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   /** A complete snapshot: `n` rows all tagged with generation `g` —
     * homogeneity of the tag is what "never mixed" means observably. */

@@ -15,7 +15,7 @@ import graft.streaming.StreamingQuota.FileEvent
   * tests pin that our transformWithState checkpoint layout stays
   * readable by it — schema drift here breaks runbooks, not unit tests.
   */
-class StateIntrospectionSpec extends AnyFunSuite {
+class StateIntrospectionSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -37,8 +37,7 @@ class StateIntrospectionSpec extends AnyFunSuite {
   }
 
   test("state-metadata lists the quota operator and its state variable") {
-    val chk = java.nio.file.Files
-      .createTempDirectory("quota-meta").toString
+    val chk = tempDir("quota-meta").toString
     runQuota(chk)
     val meta = spark.read.format("state-metadata").load(chk)
     val ops = meta.select("operatorName").as[String].collect().toSet
@@ -47,8 +46,7 @@ class StateIntrospectionSpec extends AnyFunSuite {
   }
 
   test("statestore reads the MapState ledger back from the checkpoint") {
-    val chk = java.nio.file.Files
-      .createTempDirectory("quota-ledger").toString
+    val chk = tempDir("quota-ledger").toString
     runQuota(chk)
     val state = spark.read.format("statestore")
       .option("stateVarName", "used").load(chk)

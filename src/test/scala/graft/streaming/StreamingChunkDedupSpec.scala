@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.streaming.StreamingChunkDedup.{ChunkDecision, DocText}
 
-class StreamingChunkDedupSpec extends AnyFunSuite {
+class StreamingChunkDedupSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -94,7 +94,7 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
   test("state survives a query restart from checkpoint (fault tolerance)") {
     // the property checkpointing exists for: an owner claimed BEFORE the
     // crash still wins against a duplicate arriving AFTER the restart
-    val base = java.nio.file.Files.createTempDirectory("chunk-dedup-restart")
+    val base = tempDir("chunk-dedup-restart")
     val in = s"$base/in"; val chk = s"$base/chk"
     val v = chunk("v")
     val got = new java.util.concurrent.ConcurrentLinkedQueue[ChunkDecision]()

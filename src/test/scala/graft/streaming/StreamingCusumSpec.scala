@@ -11,7 +11,7 @@ import graft.streaming.StreamingCusum.{CusumPoint, DayPoint}
   * series regardless of micro-batch split points, alarm timing on a
   * planted shift, late-point dropping, and per-key isolation.
   */
-class StreamingCusumSpec extends AnyFunSuite {
+class StreamingCusumSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -147,10 +147,8 @@ class StreamingCusumSpec extends AnyFunSuite {
     // same batches, but the query STOPS after batch 2 and restarts
     // from its checkpoint (file sink: the memory sink refuses
     // recovery) — both stateful operators must resume their state
-    val chk = java.nio.file.Files.createTempDirectory("cusum-held-chk")
-      .toString
-    val out = java.nio.file.Files.createTempDirectory("cusum-held-out")
-      .toString
+    val chk = tempDir("cusum-held-chk").toString
+    val out = tempDir("cusum-held-out").toString
     val srcB = MemoryStream[DayPoint](spark)
     val outDf = chained(srcB).toDF()
     def start() = outDf.writeStream.option("checkpointLocation", chk)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.streaming.TransferTracker.{StatusEvent, TransferUpdate}
 
-class TrackerSourcesSpec extends AnyFunSuite {
+class TrackerSourcesSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -173,7 +173,7 @@ class TrackerSourcesSpec extends AnyFunSuite {
   }
 
   test("file monitor source streams new files through the pattern filter") {
-    val dir = Files.createTempDirectory("graft-files")
+    val dir = tempDir("graft-files")
     Files.write(dir.resolve("a.pdf"), "hello pdf".getBytes)
     Files.write(dir.resolve("b.txt"), "not matched".getBytes)
     Files.write(dir.resolve("c.DOCX"), "docx body".getBytes)
