@@ -1232,11 +1232,11 @@ object ExtQueries {
       "q64_ann_index_topk",
       (spark, dir) => {
         val t = new Tables(spark, dir)
-        // floorMod (abs(Int.MinValue) is negative) + per-process suffix so
-        // concurrent runs over the same sf dir (e.g. Bench and Verify)
-        // build disjoint indexes instead of racing one shared layout
-        val idx = s"${sys.props("java.io.tmpdir")}/graft-ann-" +
-          s"${Math.floorMod(dir.hashCode, 1000003)}-p${ProcessHandle.current().pid()}"
+        // one index per sf dir in the session's own directory, so
+        // concurrent runs (e.g. Bench and Verify) never share a layout;
+        // floorMod: abs(Int.MinValue) is negative
+        val idx = s"${FixtureCache.sessionDir(spark)}/ann-" +
+          Math.floorMod(dir.hashCode, 1000003)
         AnnIndex.build(t.embeddings, idx, bits = 4)
         AnnIndex.topK(spark, idx,
             t.embeddings.filter(col("vec_id") < 20), k = 5, bits = 4)
@@ -2395,8 +2395,8 @@ object ExtQueries {
       "q127_ann_index_upsert",
       (spark, dir) => {
         val t = new Tables(spark, dir)
-        val idx = s"${sys.props("java.io.tmpdir")}/graft-ann-inc-" +
-          s"${Math.floorMod(dir.hashCode, 1000003)}-p${ProcessHandle.current().pid()}"
+        val idx = s"${FixtureCache.sessionDir(spark)}/ann-inc-" +
+          Math.floorMod(dir.hashCode, 1000003)
         AnnIndex.build(
           t.embeddings.filter(col("vec_id") % 3 =!= 0), idx, bits = 4)
         AnnIndex.append(

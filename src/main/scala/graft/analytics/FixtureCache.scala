@@ -1,5 +1,7 @@
 package graft.analytics
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once cache for frames several queries or passes share: the
@@ -42,5 +44,25 @@ object FixtureCache {
     frames.computeIfAbsent(
       s"$name|$dir|$regime|${spark.sparkContext.applicationId}",
       _ => build.localCheckpoint(eager = true))
+  }
+
+  private val dirs =
+    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
+
+  /** The session's directory for files a query writes and reads back
+    * (q64's and q127's ANN indexes): one per SparkContext, under
+    * `java.io.tmpdir`, deleted when the context stops. */
+  def sessionDir(spark: SparkSession): java.nio.file.Path = {
+    val sc = spark.sparkContext
+    dirs.computeIfAbsent(sc.applicationId, app => {
+      val dir = java.nio.file.Files.createTempDirectory("graft-session-")
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+          FileUtils.deleteQuietly(dir.toFile)
+          dirs.remove(app)
+        }
+      })
+      dir
+    })
   }
 }

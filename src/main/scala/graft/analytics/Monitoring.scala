@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** The reference's monitoring layer (SURVEY.md §2C, k8s/monitoring/
   * alerts.yaml) as TRUE streaming aggregations — continuous versions of
-  * the batch queries q14/q16/q17. Each takes a streaming DataFrame and
+  * the batch queries q14/q16. Each takes a streaming DataFrame and
   * returns a windowed aggregate ready for `writeStream`; the batch twins
   * are what the oracle hash-checks, these are what runs against the live
-  * pipeline (same expressions, streaming-grade: watermarked, incremental,
-  * approx percentile instead of an exact sort).
+  * pipeline (same expressions, streaming-grade: watermarked and
+  * incremental).
   */
 object Monitoring {
 
@@ -31,19 +31,6 @@ object Monitoring {
               col("n_total"), col("n_failed"),
               (col("n_failed").cast("double") / col("n_total"))
                 .as("error_ratio"))
-
-  /** p95 processing latency per window (alerts.yaml:51-60: p95 > 60 s).
-    * approx percentile: single-pass, bounded state — the streaming-safe
-    * form of q17's exact percentile.
-    */
-  def latencyP95(durations: DataFrame, window_ : String = "5 minutes",
-                 watermark: String = "1 minute"): DataFrame =
-    durations.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_))
-      .agg(percentile_approx(col("durationMs"), lit(0.95), lit(10000))
-             .as("p95_ms"),
-           count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("p95_ms"), col("n"))
 
   /** Attach in-flight counters to a STREAMING DataFrame with
     * `Dataset.observe` — accumulator-backed metrics evaluated inside the

@@ -4,8 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
+  TTLConfig, ValueState}
 
 /** Streaming co-occurrence affinity — the online twin of
   * [[graft.ext.Affinity.associationRules]]: baskets (sessions, orders)
@@ -29,10 +29,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   * Duplicate sightings of an item refresh the session TTL but emit
   * nothing (set semantics — the batch `collect_set`).
   *
-  * Built on `transformWithState` with ONE event-time timer per basket
-  * (the [[StreamingChunkDedup]] pattern): each arrival re-arms the
-  * timer at `lastMs + ttlMs`, the expiry callback frees the basket
-  * only if its window truly lapsed, and purge-on-read guards the data
+  * Built on `transformWithState`; a basket lapses `ttlMs` after its
+  * last activity ([[EventTimeTtl]]), and purge-on-read guards the data
   * path so a late arrival cannot pair against a session the watermark
   * already closed. In-batch processing is ordered by
   * (eventTime, item), so emissions are replay-deterministic.
@@ -48,7 +46,7 @@ object StreamingAffinity {
                              consequent: String, eventTime: Timestamp)
 
   private final class AffinityProcessor(maxBasket: Int, ttlMs: Long)
-      extends StatefulProcessor[Long, ItemEvent, PairDelta] {
+      extends EventTimeTtl[Long, ItemEvent, PairDelta](ttlMs) {
 
     @transient private var basket: ValueState[BasketState] = _
 
@@ -56,17 +54,13 @@ object StreamingAffinity {
       basket = getHandle.getValueState[BasketState]("basket",
         Encoders.product[BasketState], TTLConfig.NONE)
 
-    private def armTimer(at: Long): Unit = {
-      getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(at)
-    }
-
     override def handleInputRows(key: Long, rows: Iterator[ItemEvent],
                                  timers: TimerValues)
         : Iterator[PairDelta] = {
       val wm = timers.getCurrentWatermarkInMs()
       // purge-on-read: a session past its TTL must not pair new arrivals
-      val live = if (basket.exists())
+      val had = basket.exists()
+      val live = if (had)
         Some(basket.get()).filter(b => b.lastMs + ttlMs > wm) else None
       var items: List[String] = live.map(_.items).getOrElse(Nil)
       // O(1) membership beside the encoded list: duplicate sightings are
@@ -98,21 +92,12 @@ object StreamingAffinity {
         // here would let a hot basket's overflow extend its TTL forever)
       }
       basket.update(BasketState(items, lastMs))
-      armTimer(lastMs + ttlMs)
+      armIfNew(had, lastMs)
       out.result().iterator
     }
 
-    override def handleExpiredTimer(key: Long, timers: TimerValues,
-                                    info: ExpiredTimerInfo)
-        : Iterator[PairDelta] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      if (basket.exists()) {
-        val b = basket.get()
-        if (b.lastMs + ttlMs <= wm) basket.clear()
-        else armTimer(b.lastMs + ttlMs)
-      }
-      Iterator.empty
-    }
+    override protected def expire(cutoffMs: Long): Option[Long] =
+      expireValue(basket, cutoffMs)(_.lastMs)
   }
 
   def pairDeltas(events: Dataset[ItemEvent], maxBasket: Int = 1000,

@@ -4,8 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
+  TTLConfig, ValueState}
 
 /** Streaming chunk-level exact dedup — the online twin of
   * [[graft.ext.Dedup.chunkDedup]]: each arriving document's fixed
@@ -27,16 +27,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   * clock refreshes every time its chunk is seen again (hot boilerplate
   * stays deduplicated indefinitely), and idle chunks age out so state
   * is bounded by the distinct-chunk traffic of one TTL window, not by
-  * stream lifetime.
-  *
-  * Built on `transformWithState` with event-time timers: each live
-  * chunk arms ONE timer at its owner's expiry (`lastMs + ttlMs`);
-  * keep-alives re-arm it forward, and the expiry callback frees the
-  * state only if the window truly lapsed (purge-on-read additionally
-  * guards the data path, so a hot chunk whose timer lags can never
-  * resurrect an aged-out owner). The native TTLConfig is
-  * processing-time-based, which would break replay determinism — the
-  * event-time window is enforced explicitly instead.
+  * stream lifetime ([[EventTimeTtl]]; purge-on-read guards the data
+  * path, so a hot chunk can never resurrect an aged-out owner).
   *
   * Emits one decision per chunk occurrence; reassembling retained text
   * (the batch operator's digest step) is a stateless downstream
@@ -58,7 +50,7 @@ object StreamingChunkDedup {
                                  eventTime: Timestamp)
 
   private final class ChunkProcessor(ttlMs: Long)
-      extends StatefulProcessor[String, ChunkOccurrence, ChunkDecision] {
+      extends EventTimeTtl[String, ChunkOccurrence, ChunkDecision](ttlMs) {
 
     @transient private var owner: ValueState[ChunkOwner] = _
 
@@ -66,23 +58,15 @@ object StreamingChunkDedup {
       owner = getHandle.getValueState[ChunkOwner]("owner",
         Encoders.product[ChunkOwner], TTLConfig.NONE)
 
-    private def armTimer(at: Long): Unit = {
-      // one timer per chunk: drop whatever was armed before (materialize
-      // the listing first — deleting while the iterator is live is
-      // store-implementation-defined)
-      getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(at)
-    }
-
     override def handleInputRows(key: String, rows: Iterator[ChunkOccurrence],
                                  timers: TimerValues)
         : Iterator[ChunkDecision] = {
       val wm = timers.getCurrentWatermarkInMs()
       // purge-on-read: an owner past its dedup window must not claim
       // chunks that arrive after it should have aged out
+      val had = owner.exists()
       var cur: Option[ChunkOwner] =
-        if (owner.exists()) Some(owner.get()).filter(_.lastMs + ttlMs > wm)
-        else None
+        if (had) Some(owner.get()).filter(_.lastMs + ttlMs > wm) else None
       val sorted = rows.toSeq
         .sortBy(o => (o.eventTime.getTime, o.docId, o.idx))
       val out = sorted.map { o =>
@@ -101,23 +85,12 @@ object StreamingChunkDedup {
       }
       val w = cur.get // sorted is non-empty, so the owner is set
       owner.update(w)
-      armTimer(w.lastMs + ttlMs)
+      armIfNew(had, w.lastMs)
       out.iterator
     }
 
-    override def handleExpiredTimer(key: String, timers: TimerValues,
-                                    info: ExpiredTimerInfo)
-        : Iterator[ChunkDecision] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      if (owner.exists()) {
-        val w = owner.get()
-        if (w.lastMs + ttlMs <= wm) owner.clear()
-        // a keep-alive moved the window past the armed expiry: re-arm
-        // at the refreshed deadline
-        else armTimer(w.lastMs + ttlMs)
-      }
-      Iterator.empty
-    }
+    override protected def expire(cutoffMs: Long): Option[Long] =
+      expireValue(owner, cutoffMs)(_.lastMs)
   }
 
   def dedup(docs: Dataset[DocText], chunkWords: Int = 8,
@@ -128,7 +101,7 @@ object StreamingChunkDedup {
 
   /** The registry/TTL machinery over any chunking EXPRESSION — shared
     * with [[StreamingCdcChunkDedup]] so both twins claim chunks
-    * through the identical owner/timer state discipline.
+    * through the identical owner state and TTL.
     */
   private[streaming] def dedupBy(docs: Dataset[DocText],
                                  chunkArray: org.apache.spark.sql.Column,
@@ -166,8 +139,8 @@ object StreamingChunkDedup {
   * expression is literally the batch operator's
   * ([[graft.ext.Dedup.cdcChunkArray]]), so batch and stream dedup
   * the SAME units; the owner registry, deterministic in-batch
-  * ordering, event-time TTL window, and timer discipline are the
-  * shared [[StreamingChunkDedup.dedupBy]] machinery. State is keyed
+  * ordering and event-time TTL window are the shared
+  * [[StreamingChunkDedup.dedupBy]] machinery. State is keyed
   * by the chunk string; per-key state is one ~24-byte owner record,
   * bounded by the distinct-chunk traffic of one TTL window.
   */

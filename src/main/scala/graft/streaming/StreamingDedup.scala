@@ -6,8 +6,8 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, TTLConfig, MapState}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
+  TTLConfig, MapState}
 import graft.functions.SketchFns
 
 /** Streaming near-duplicate detection — the online twin of
@@ -31,10 +31,8 @@ import graft.functions.SketchFns
   * `maxBucketEntries` per bucket (least-recently-seen evicted first,
   * ties broken by docId — deterministic), a per-entry TTL enforced on
   * read (a bucket that keeps receiving traffic must not match against
-  * arbitrarily old documents), and ONE event-time timer per bucket at
-  * the longest-lived entry's expiry that physically frees idle state.
-  * The native TTLConfig is processing-time-based, which would break
-  * replay determinism — the event-time window is enforced explicitly.
+  * arbitrarily old documents), and the event-time TTL
+  * ([[EventTimeTtl]]) that physically frees idle state.
   *
   * A pair colliding in several chunks emits one identical hit per
   * colliding chunk — duplicate-tolerant by contract, like the batch
@@ -61,7 +59,7 @@ object StreamingDedup {
 
   private final class SimProcessor(maxDistance: Int, ttlMs: Long,
                                    maxBucketEntries: Int)
-      extends StatefulProcessor[(Int, Long), KeyedDoc, NearDupHit] {
+      extends EventTimeTtl[(Int, Long), KeyedDoc, NearDupHit](ttlMs) {
 
     @transient private var entries: MapState[Long, SimEntry] = _
 
@@ -69,18 +67,13 @@ object StreamingDedup {
       entries = getHandle.getMapState[Long, SimEntry]("entries",
         Encoders.scalaLong, Encoders.product[SimEntry], TTLConfig.NONE)
 
-    private def armTimer(at: Long): Unit = {
-      getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(at)
-    }
-
     override def handleInputRows(key: (Int, Long), rows: Iterator[KeyedDoc],
                                  timers: TimerValues): Iterator[NearDupHit] = {
       val wm = timers.getCurrentWatermarkInMs()
       // load the bucket once (bounded by maxBucketEntries — the match
       // loop iterates it per row anyway); purge-on-read: TTL-expired
       // entries must not match even if the bucket stays hot enough that
-      // its timer keeps moving forward
+      // its timer has not fired yet
       val live = mutable.LinkedHashMap.empty[Long, SimEntry]
       val removed = mutable.ArrayBuffer.empty[Long]
       val it = entries.iterator()
@@ -88,6 +81,7 @@ object StreamingDedup {
         val (id, e) = it.next()
         if (e.lastMs + ttlMs > wm) live.update(id, e) else removed += id
       }
+      val had = live.nonEmpty || removed.nonEmpty
       val touched = mutable.HashSet.empty[Long]
       val out = Seq.newBuilder[NearDupHit]
       rows.toSeq.sortBy(d => (d.eventTime.getTime, d.docId)).foreach { d =>
@@ -112,32 +106,12 @@ object StreamingDedup {
       // touch the store
       removed.foreach(entries.removeKey)
       touched.foreach(id => entries.updateValue(id, live(id)))
-      // the timer covers the LONGEST-lived kept entry: keying it off
-      // this batch's max alone would let a late (but valid) arrival
-      // shrink the bucket's lifetime and drop earlier entries before
-      // their own TTLs expire
-      armTimer(live.valuesIterator.map(_.lastMs).max + ttlMs)
+      armIfNew(had, live.valuesIterator.map(_.lastMs).max)
       out.result().iterator
     }
 
-    override def handleExpiredTimer(key: (Int, Long), timers: TimerValues,
-                                    info: ExpiredTimerInfo)
-        : Iterator[NearDupHit] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      val keep = mutable.ArrayBuffer.empty[Long]
-      var maxLast = Long.MinValue
-      val expired = mutable.ArrayBuffer.empty[Long]
-      val it = entries.iterator()
-      while (it.hasNext) {
-        val (id, e) = it.next()
-        if (e.lastMs + ttlMs > wm) { keep += id; maxLast = math.max(maxLast, e.lastMs) }
-        else expired += id
-      }
-      expired.foreach(entries.removeKey)
-      if (keep.isEmpty) entries.clear()
-      else armTimer(maxLast + ttlMs)
-      Iterator.empty
-    }
+    override protected def expire(cutoffMs: Long): Option[Long] =
+      expireEntries(entries, cutoffMs)(_.lastMs)
   }
 
   /** `docs` need not be pre-watermarked; `watermarkDelay` is applied to

@@ -6,8 +6,8 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
+  TTLConfig, ValueState}
 import graft.functions.SketchFns
 
 /** Streaming banded-MinHash near-duplicate detection — the online twin
@@ -38,7 +38,7 @@ import graft.functions.SketchFns
   * signature every document fans out `bands`× through the shuffle and
   * into `bands` bucket entries shrinks 8× (128 B vs 1 KB). Measured
   * (StreamBench census, 4000×8 batches, RocksDB): with this plus the
-  * packed-bucket state and creation-only timers below, 940 → 1.79 k
+  * packed-bucket state and creation-only timers, 940 → 1.79 k
   * rows/s, mean batch 4.3 s → 2.2 s; the remaining cost is linear in
   * `bands` (the LSH candidate-generation contract) with each visit at
   * the 1-get+1-put floor — the full irreducibility analysis is in
@@ -58,13 +58,9 @@ import graft.functions.SketchFns
   * plus its own batch rows, never a shard of the trigger. State is
   * scoped three ways: `maxBucketEntries` per bucket
   * (least-recently-seen evicted first, ties broken by docId —
-  * deterministic), a per-entry TTL enforced on read, and ONE event-time
-  * timer per bucket — armed at bucket CREATION, re-armed only when it
-  * fires with survivors (re-arming at every visit cost a
-  * delete+register per touched bucket per batch, ~40% of all state
-  * puts) — that physically frees idle state. The native TTLConfig is
-  * processing-time-based, which would break replay determinism — the
-  * event-time window is enforced explicitly. Narrower `bands` cuts
+  * deterministic), a per-entry TTL enforced on read, and the
+  * event-time TTL ([[EventTimeTtl]]) that physically frees idle state.
+  * Narrower `bands` cuts
   * memory linearly at the price of recall
   * (P[miss | j] = (1−j^(numHashes/bands))^bands;
   * 1.5e-6 at j=0.8 with 128/32).
@@ -107,7 +103,7 @@ object StreamingMinhashDedup {
 
   private final class BandProcessor(threshold: Double, ttlMs: Long,
                                     maxBucketEntries: Int)
-      extends StatefulProcessor[(Int, Long), KeyedSig, JaccardHit] {
+      extends EventTimeTtl[(Int, Long), KeyedSig, JaccardHit](ttlMs) {
 
     @transient private var bucket: ValueState[Array[Byte]] = _
 
@@ -203,41 +199,22 @@ object StreamingMinhashDedup {
           live.remove(victim)
         }
       }
-      // ONE state write persists the whole bucket. Timer discipline: arm
-      // ONLY at creation (invariant: state present ⇔ a timer is armed —
-      // expiry either re-arms or clears). Re-arming at every visit cost
-      // a delete+register per touched bucket per batch (measured: 75 k
-      // timer-state writes per 4000-doc batch, ~40% of all RocksDB
-      // puts); lazily armed, the timer fires at firstArrival+ttl, finds
-      // live entries, and re-arms at the true max(lastMs)+ttl — idle
-      // state is still freed within one extra firing, and matching
-      // correctness never depended on the timer (purge-on-read above).
+      // ONE state write persists the whole bucket
       bucket.update(encode(live, sigLen))
-      if (!hadState) {
-        var maxLast = Long.MinValue
-        live.foreach(r => maxLast = math.max(maxLast, r.lastMs))
-        getHandle.registerTimer(maxLast + ttlMs)
-      }
+      armIfNew(hadState, live.iterator.map(_.lastMs).max)
       out.result().iterator
     }
 
-    override def handleExpiredTimer(key: (Int, Long), timers: TimerValues,
-                                    info: ExpiredTimerInfo)
-        : Iterator[JaccardHit] = {
-      val wm = timers.getCurrentWatermarkInMs()
+    override protected def expire(cutoffMs: Long): Option[Long] = {
       val stored = bucket.get()
       val live = mutable.ArrayBuffer.empty[Resident]
-      decode(stored, wm - ttlMs, live)
+      decode(stored, cutoffMs, live)
       if (live.isEmpty) bucket.clear()
       else {
         val sigLen = java.nio.ByteBuffer.wrap(stored).getInt(0)
         bucket.update(encode(live, sigLen))
-        var maxLast = Long.MinValue
-        live.foreach(r => maxLast = math.max(maxLast, r.lastMs))
-        getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(maxLast + ttlMs)
       }
-      Iterator.empty
+      live.iterator.map(_.lastMs).maxOption
     }
   }
 

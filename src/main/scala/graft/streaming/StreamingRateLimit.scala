@@ -4,8 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
+  TTLConfig, ValueState}
 
 /** Streaming per-domain TOKEN-BUCKET admission — the online twin of
   * the batch polite-frontier schedule (q244: fetch k of a domain at
@@ -29,11 +29,10 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   * State is ONE fixed-size (milliTokens, lastMs) record per domain.
   * Idle cleanup is LOSSLESS by construction: refill caps at the
   * burst, so a domain idle past `burst/rate` has a full bucket
-  * whether or not its record survived — the expiry timer
-  * (event-time, the [[StreamingChunkDedup]] timer discipline) frees
-  * the record without changing any future decision. State is
-  * therefore bounded by the domains ACTIVE in one TTL window, not by
-  * crawl lifetime.
+  * whether or not its record survived — the event-time TTL
+  * ([[EventTimeTtl]]) frees the record without changing any future
+  * decision. State is therefore bounded by the domains ACTIVE in one
+  * TTL window, not by crawl lifetime.
   */
 object StreamingRateLimit {
 
@@ -52,7 +51,7 @@ object StreamingRateLimit {
 
   private final class BucketProcessor(ratePerSec: Long, burst: Long,
                                       ttlMs: Long)
-      extends StatefulProcessor[String, FetchRequest, FetchDecision] {
+      extends EventTimeTtl[String, FetchRequest, FetchDecision](ttlMs) {
 
     private val capMilli = burst * 1000L
 
@@ -62,17 +61,12 @@ object StreamingRateLimit {
       bucket = getHandle.getValueState[Bucket]("bucket",
         Encoders.product[Bucket], TTLConfig.NONE)
 
-    private def armTimer(at: Long): Unit = {
-      getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(at)
-    }
-
     override def handleInputRows(key: String,
                                  rows: Iterator[FetchRequest],
                                  timers: TimerValues)
         : Iterator[FetchDecision] = {
-      var cur = if (bucket.exists()) bucket.get()
-                else Bucket(capMilli, Long.MinValue)
+      val had = bucket.exists()
+      var cur = if (had) bucket.get() else Bucket(capMilli, Long.MinValue)
       val out = rows.toSeq
         .sortBy(r => (r.eventTime.getTime, r.url))
         .map { r =>
@@ -97,23 +91,14 @@ object StreamingRateLimit {
           }
         }
       bucket.update(cur)
-      armTimer(cur.lastMs + ttlMs)
+      armIfNew(had, cur.lastMs)
       out.iterator
     }
 
-    override def handleExpiredTimer(key: String, timers: TimerValues,
-                                    info: ExpiredTimerInfo)
-        : Iterator[FetchDecision] = {
-      if (bucket.exists()) {
-        val b = bucket.get()
-        // lossless cleanup: past burst/rate idle the bucket is full
-        // anyway, so dropping the record changes no future decision
-        if (b.lastMs + ttlMs <= timers.getCurrentWatermarkInMs())
-          bucket.clear()
-        else armTimer(b.lastMs + ttlMs)
-      }
-      Iterator.empty
-    }
+    // lossless cleanup: past burst/rate idle the bucket is full anyway,
+    // so dropping the record changes no future decision
+    override protected def expire(cutoffMs: Long): Option[Long] =
+      expireValue(bucket, cutoffMs)(_.lastMs)
   }
 
   /** Admission decisions under a `ratePerSec` tokens/sec, `burst`-cap

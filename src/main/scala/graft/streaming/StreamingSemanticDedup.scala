@@ -6,8 +6,8 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, TTLConfig, MapState}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
+  TTLConfig, MapState}
 import graft.ext.Similarity
 import graft.functions.SketchKernels
 
@@ -34,10 +34,10 @@ import graft.functions.SketchKernels
   * State/bounds (the [[StreamingMinhashDedup]] design): per-cell
   * `MapState[vecId → (vector, lastSeenMs)]` with delta write-back;
   * `maxCellEntries` least-recently-seen eviction (ties to vecId —
-  * deterministic); per-entry event-time TTL enforced on read; ONE
-  * event-time timer per cell at the longest-lived entry's expiry frees
-  * idle cells. Entries cost dim·4 bytes (+16) each — at the default
-  * 1024-entry cap and 64 dims, ≤ ~0.3 MB per cell.
+  * deterministic); per-entry event-time TTL enforced on read; the
+  * event-time TTL ([[EventTimeTtl]]) frees idle cells. Entries cost
+  * dim·4 bytes (+16) each — at the default 1024-entry cap and 64 dims,
+  * ≤ ~0.3 MB per cell.
   *
   * Emission contract: each arrival reports every ≥-threshold resident
   * elder-or-not as `SemanticHit(vecId, matchedId, cosine)` — the
@@ -60,7 +60,7 @@ object StreamingSemanticDedup {
 
   private final class CellProcessor(threshold: Double, ttlMs: Long,
                                     maxCellEntries: Int)
-      extends StatefulProcessor[Int, KeyedVec, SemanticHit] {
+      extends EventTimeTtl[Int, KeyedVec, SemanticHit](ttlMs) {
 
     @transient private var entries: MapState[Long, VecEntry] = _
 
@@ -68,16 +68,11 @@ object StreamingSemanticDedup {
       entries = getHandle.getMapState[Long, VecEntry]("entries",
         Encoders.scalaLong, Encoders.product[VecEntry], TTLConfig.NONE)
 
-    private def armTimer(at: Long): Unit = {
-      getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(at)
-    }
-
     override def handleInputRows(key: Int, rows: Iterator[KeyedVec],
                                  timers: TimerValues): Iterator[SemanticHit] = {
       val wm = timers.getCurrentWatermarkInMs()
       // purge-on-read: expired residents must not match even while the
-      // cell stays hot enough that its timer keeps advancing
+      // cell stays hot enough that its timer has not fired yet
       val live = mutable.LinkedHashMap.empty[Long, VecEntry]
       val removed = mutable.ArrayBuffer.empty[Long]
       val it = entries.iterator()
@@ -85,6 +80,7 @@ object StreamingSemanticDedup {
         val (id, e) = it.next()
         if (e.lastMs + ttlMs > wm) live.update(id, e) else removed += id
       }
+      val had = live.nonEmpty || removed.nonEmpty
       val touched = mutable.HashSet.empty[Long]
       val out = Seq.newBuilder[SemanticHit]
       rows.toSeq.sortBy(v => (v.eventTime.getTime, v.vecId)).foreach { v =>
@@ -106,28 +102,12 @@ object StreamingSemanticDedup {
       }
       removed.foreach(entries.removeKey)
       touched.foreach(id => entries.updateValue(id, live(id)))
-      armTimer(live.valuesIterator.map(_.lastMs).max + ttlMs)
+      armIfNew(had, live.valuesIterator.map(_.lastMs).max)
       out.result().iterator
     }
 
-    override def handleExpiredTimer(key: Int, timers: TimerValues,
-                                    info: ExpiredTimerInfo)
-        : Iterator[SemanticHit] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      var any = false
-      var maxLast = Long.MinValue
-      val expired = mutable.ArrayBuffer.empty[Long]
-      val it = entries.iterator()
-      while (it.hasNext) {
-        val (id, e) = it.next()
-        if (e.lastMs + ttlMs > wm) { any = true; maxLast = math.max(maxLast, e.lastMs) }
-        else expired += id
-      }
-      expired.foreach(entries.removeKey)
-      if (!any) entries.clear()
-      else armTimer(maxLast + ttlMs)
-      Iterator.empty
-    }
+    override protected def expire(cutoffMs: Long): Option[Long] =
+      expireEntries(entries, cutoffMs)(_.lastMs)
   }
 
   /** `vecs` need not be pre-watermarked; the cell assignment is one

@@ -36,6 +36,17 @@ class StateModelSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"provider set outside TestSpark in $bad")
   }
 
+  test("only the operators whose timers emit rows list their timers") {
+    // the TTL operators arm a key's timer once (EventTimeTtl) and never
+    // list timers; these five emit rows at their timers' deadlines
+    val emitting = Set("TransferTracker", "StreamingGapFill",
+      "StreamingHeldAlert", "StreamingFunnel", "StreamingRetry")
+      .map(_ + ".scala")
+    val bad = matching("src/main/scala/graft/streaming",
+      """\blistTimers\b""") -- emitting
+    assert(bad.isEmpty, s"listTimers outside the emitting operators in $bad")
+  }
+
   /** Operators on `transformWithState` that are not census rows yet,
     * each with the reason. */
   private val notYetCensused = Map(
